@@ -192,11 +192,9 @@ def hier_centroids_df(spark: SparkSession, path: str) -> DataFrame:
     """The (l1_id, cluster_id, centroid) parquet table of a hierarchical
     index — the distributed-assignment side that replaces any
     num_clusters-sized broadcast."""
-    from ocr_vector_db_spark.operators.index_maint import current_gen_dir
+    from ocr_vector_db_spark.operators.index_maint import read_generation
 
-    return spark.read.parquet(
-        current_gen_dir(spark, os.path.join(path, "centroids_l2"))
-    )
+    return read_generation(spark, os.path.join(path, "centroids_l2"))
 
 
 def rank_branches(
@@ -342,6 +340,7 @@ class IVFIndex:
                  std_stats: list[tuple[float, float]] | None = None):
         self.spark = spark
         self.path = path
+        self._vectors_schema = None  # see vectors()
         self.centroids = centroids or []
         # optional hierarchical coarse layer (see build(l1_branches=...)):
         # l1 = the branch centroids (≈ √num_clusters, always tiny);
@@ -501,11 +500,14 @@ class IVFIndex:
     # -------------------------------------------------------------- search
 
     def vectors(self) -> DataFrame:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
+        """The current vectors generation, read with the schema of this
+        object's first read, so search plans start no Spark job."""
+        from ocr_vector_db_spark.operators.index_maint import read_generation
 
-        return self.spark.read.parquet(
-            current_gen_dir(self.spark, os.path.join(self.path, "vectors"))
-        )
+        df = read_generation(self.spark, os.path.join(self.path, "vectors"),
+                             self._vectors_schema)
+        self._vectors_schema = df.schema
+        return df
 
     def probe_clusters(
         self,

@@ -83,8 +83,7 @@ def pagerank(
                 "rank mass would silently leak. Symmetrize the edge list "
                 "or pass dangling='redistribute'."
             )
-        ranks = deg.select("id", F.round(F.lit(1.0 / n), scale).alias("rank"))
-        nodes = None
+        nodes = deg  # every node has out-degree >= 1: deg holds them all
     else:
         nodes = (
             edges.select(F.col(src).alias("id"))
@@ -94,7 +93,9 @@ def pagerank(
         if cache:
             nodes = nodes.cache()
         n = nodes.count()
-        ranks = nodes.select("id", F.round(F.lit(1.0 / n), scale).alias("rank"))
+    if n == 0:  # edge-less graph: no node to rank, same (id, rank) schema
+        return nodes.select("id", F.lit(0.0).alias("rank"))
+    ranks = nodes.select("id", F.round(F.lit(1.0 / n), scale).alias("rank"))
 
     base = teleport / n  # driver-side double, identical to SQL 0.15/n
     for i in range(iterations):

@@ -35,7 +35,8 @@ import os
 import posixpath
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _GEN_DIR_RE = re.compile(r"gen-(\d{6})$")
 _GEN_MARK_RE = re.compile(r"gen-(\d{6})\.committed$")
@@ -71,6 +72,17 @@ def current_gen_dir(spark: SparkSession, path: str) -> str:
     itself for a legacy flat layout (no committed generations)."""
     gens = committed_generations(spark, path)
     return posixpath.join(path, _gen_name(gens[-1])) if gens else path
+
+
+def read_generation(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """The current generation of the parquet table at `path`. Passing the
+    table's `schema` (an earlier read's `.schema`) skips parquet schema
+    inference, which is a Spark job of its own; add() and compact() never
+    change a table's schema, so the indexes infer it once per object."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(current_gen_dir(spark, path))
 
 
 def next_gen_dir(spark: SparkSession, path: str) -> tuple[int, str]:
@@ -139,8 +151,7 @@ def compact_partitioned(
     partition value lands in exactly one task), published as a new
     generation. Returns the row count (materialized pre-commit, so a failed
     rewrite leaves the previous generation live)."""
-    src = current_gen_dir(spark, path)
-    df = spark.read.parquet(src).repartition(num_partitions, partition_col)
+    df = read_generation(spark, path).repartition(num_partitions, partition_col)
     n_gen, dest = next_gen_dir(spark, path)
     df.write.mode("overwrite").partitionBy(partition_col).parquet(dest)
     n = spark.read.parquet(dest).count()
@@ -152,8 +163,7 @@ def compact_partitioned(
 def compact_plain(spark: SparkSession, path: str, num_files: int = 1) -> int:
     """Rewrite an unpartitioned parquet table at `num_files` granularity,
     published as a new generation."""
-    src = current_gen_dir(spark, path)
-    df = spark.read.parquet(src).coalesce(num_files)
+    df = read_generation(spark, path).coalesce(num_files)
     n_gen, dest = next_gen_dir(spark, path)
     df.write.mode("overwrite").parquet(dest)
     n = spark.read.parquet(dest).count()

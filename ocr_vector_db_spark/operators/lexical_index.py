@@ -14,8 +14,17 @@ table whose physical layout prunes the scan down to the query's own terms:
           scan reading n_query_terms/n_buckets of the postings (check
           .explain: PartitionFilters), then `term IN (...)` row-group
           skips inside; df comes from a per-term aggregate of the pruned
-          slice, stats from the 1-row table — both broadcast. Per-query
-          work is O(matching postings), independent of corpus size.
+          slice (broadcast). Per-query work is O(matching postings),
+          independent of corpus size.
+
+Building a search plan starts no Spark job; the caller's action is the
+only one. The bucket list is `pmod(xxhash64(lit(term)), n_buckets)` per
+term, which the optimizer folds into the scan's partition filter; the
+postings are read with the schema of this object's first read (no
+per-search schema inference); (N, avgdl) are literals, read on the driver
+once per committed stats generation, so an add() by this or any other
+writer is seen by the next search. The postings listing stays serial (no
+job) while n_buckets ≤ spark.sql.sources.parallelPartitionDiscovery.threshold.
 
 Scoring math is literally shared with the on-the-fly path — both this
 module and `retrieval.bm25_scores` build their per-(doc, term)
@@ -32,7 +41,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_vector_db_spark.operators.retrieval import (
@@ -66,14 +75,14 @@ def _read_stats(spark: SparkSession, path: str) -> DataFrame:
     """Latest-committed stats read: resolve the current generation of the
     1-row stats table (see operators/index_maint.py — the commit marker is
     atomic, so there is always exactly one readable committed version)."""
-    from ocr_vector_db_spark.operators.index_maint import current_gen_dir
+    from ocr_vector_db_spark.operators.index_maint import read_generation
 
-    return spark.read.parquet(
-        current_gen_dir(spark, os.path.join(path, "stats"))
-    )
+    return read_generation(spark, os.path.join(path, "stats"))
 
 
-def _commit_stats(spark: SparkSession, path: str, new_stats: DataFrame) -> None:
+def _commit_stats(
+    spark: SparkSession, path: str, n_docs: int, total_dl: int, n_buckets: int
+) -> tuple[str, Row]:
     """Crash-safe replacement of the 1-row stats table: write the complete
     new copy as the NEXT generation of `{path}/stats`, publish it with a
     single atomic marker create, GC superseded generations. No live data is
@@ -84,18 +93,28 @@ def _commit_stats(spark: SparkSession, path: str, new_stats: DataFrame) -> None:
     Single-writer contract: concurrent `add()` calls are NOT supported —
     the read-fold-commit cycle is not transactional, so a concurrent
     writer's fold can be lost (last commit wins). Serialize index updates
-    (the reference's ingest path is likewise a single batch writer)."""
+    (the reference's ingest path is likewise a single batch writer).
+
+    avgdl is one double division of the exact integer total (the same IEEE
+    op AVG() performs), so build(A∪B) ≡ build(A)+add(B) to the last bit.
+    Returns (committed generation dir, the row written)."""
     from ocr_vector_db_spark.operators.index_maint import (
         commit_generation,
         gc_generations,
         next_gen_dir,
     )
 
+    row = Row(n_docs=n_docs, avgdl=total_dl / n_docs if n_docs else 0.0,
+              n_buckets=n_buckets, total_dl=total_dl)
     stats_root = os.path.join(path, "stats")
     n, dest = next_gen_dir(spark, stats_root)
-    new_stats.write.mode("overwrite").parquet(dest)
+    spark.createDataFrame(
+        [tuple(row)],
+        "n_docs bigint, avgdl double, n_buckets int, total_dl bigint",
+    ).write.mode("overwrite").parquet(dest)
     commit_generation(spark, stats_root, n)
     gc_generations(spark, stats_root)
+    return dest, row
 
 
 class LexicalIndex:
@@ -103,6 +122,9 @@ class LexicalIndex:
         self.spark = spark
         self.path = path
         self.n_buckets = n_buckets
+        self._postings_schema = None
+        # (committed stats generation dir, its row) — see _stats_row()
+        self._stats: tuple[str, Row] | None = None
 
     # --------------------------------------------------------------- build
 
@@ -135,26 +157,35 @@ class LexicalIndex:
         # stats over ALL docs — a zero-token doc contributes dl=0 to avgdl
         # and counts in N, matching the scan path's semantics exactly (the
         # explode above would silently drop it). total_dl is kept as an
-        # EXACT integer so incremental add() folds are associative:
-        # avgdl is always one double division of exact integers (the same
-        # IEEE op AVG() performs), so build(A∪B) ≡ build(A)+add(B) to the
-        # last bit, not just within float tolerance.
+        # EXACT integer so incremental add() folds are associative.
         row = toks.select(F.size("__ws").alias("dl")).agg(
             F.count("*").alias("n"), F.sum("dl").alias("s")
         ).head()
-        n, total = int(row["n"]), int(row["s"] or 0)
-        _commit_stats(spark, path, spark.createDataFrame(
-            [(n, total / n if n else 0.0, n_buckets, total)],
-            "n_docs bigint, avgdl double, n_buckets int, total_dl bigint",
-        ))
-        return cls(spark, path, n_buckets)
+        idx = cls(spark, path, n_buckets)
+        idx._stats = _commit_stats(
+            spark, path, int(row["n"]), int(row["s"] or 0), n_buckets
+        )
+        return idx
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "LexicalIndex":
-        n_buckets = int(
-            _read_stats(spark, path).head()["n_buckets"]
-        )
-        return cls(spark, path, n_buckets)
+        idx = cls(spark, path, n_buckets=0)
+        idx.n_buckets = int(idx._stats_row()["n_buckets"])
+        return idx
+
+    def _stats_row(self) -> Row:
+        """The committed stats row, read on the driver once per committed
+        stats generation. Every commit (this object's add() or another
+        writer's) publishes a new generation dir, so resolving the current
+        one — a filesystem listing, not a Spark job — is enough to notice
+        it. A rebuild at the same path restarts the generations and needs
+        a fresh load(), as it already does for n_buckets."""
+        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
+
+        gen = current_gen_dir(self.spark, os.path.join(self.path, "stats"))
+        if self._stats is None or self._stats[0] != gen:
+            self._stats = (gen, self.spark.read.parquet(gen).head())
+        return self._stats[1]
 
     # ------------------------------------------------------------ increment
 
@@ -205,8 +236,7 @@ class LexicalIndex:
             ).partitionBy("bucket").parquet(
                 current_gen_dir(self.spark, os.path.join(self.path, "postings"))
             )
-            old = _read_stats(self.spark, self.path).head()
-            n_docs = int(old["n_docs"]) + int(new["n"])
+            old = self._stats_row()
             # exact integer fold — see build(): incremental ≡ full rebuild.
             # Indexes persisted before total_dl existed reconstruct it from
             # avgdl·n (rounded; those stats were float-folded anyway) —
@@ -216,16 +246,9 @@ class LexicalIndex:
                 if "total_dl" in old.__fields__ and old["total_dl"] is not None
                 else int(round(float(old["avgdl"]) * int(old["n_docs"])))
             )
-            total_dl = old_total + int(new["s"] or 0)
-            _commit_stats(
-                self.spark,
-                self.path,
-                self.spark.createDataFrame(
-                    [(n_docs, total_dl / n_docs if n_docs else 0.0,
-                      self.n_buckets, total_dl)],
-                    "n_docs bigint, avgdl double, n_buckets int,"
-                    " total_dl bigint",
-                ),
+            self._stats = _commit_stats(
+                self.spark, self.path, int(old["n_docs"]) + int(new["n"]),
+                old_total + int(new["s"] or 0), self.n_buckets,
             )
             return int(new["n"])
         finally:
@@ -249,11 +272,12 @@ class LexicalIndex:
     # -------------------------------------------------------------- search
 
     def postings(self) -> DataFrame:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
+        from ocr_vector_db_spark.operators.index_maint import read_generation
 
-        return self.spark.read.parquet(
-            current_gen_dir(self.spark, os.path.join(self.path, "postings"))
-        )
+        df = read_generation(self.spark, os.path.join(self.path, "postings"),
+                             self._postings_schema)
+        self._postings_schema = df.schema
+        return df
 
     def stats(self) -> DataFrame:
         return _read_stats(self.spark, self.path).select("n_docs", "avgdl")
@@ -268,22 +292,21 @@ class LexicalIndex:
         """(id, bm25, rank) top-k — identical output contract (and scores)
         to retrieval.bm25_topk, but reading only the query terms' buckets."""
         terms = sorted(set(t.lower() for t in query_terms))
-        buckets = sorted(
-            {r.b for r in self.spark.createDataFrame(
-                [(t,) for t in terms], "term string"
-            ).select(
-                F.pmod(F.xxhash64("term"), F.lit(self.n_buckets)).alias("b")
-            ).collect()}
-        )
+        # foldable per-term bucket expressions — the same hash _postings_of
+        # lays out by; the optimizer folds them into the partition filter
+        buckets = [F.pmod(F.xxhash64(F.lit(t)), F.lit(self.n_buckets))
+                   for t in terms]
         pruned = (
             self.postings()
             .filter(F.col("bucket").isin(buckets))
             .filter(F.col("term").isin(terms))
         )
         df_ = pruned.groupBy("term").agg(F.count("*").alias("df"))
+        st = self._stats_row()
         scored = (
             pruned.join(F.broadcast(df_), "term")
-            .crossJoin(F.broadcast(self.stats()))
+            .withColumns({"n_docs": F.lit(st["n_docs"]).cast("bigint"),
+                          "avgdl": F.lit(float(st["avgdl"]))})
             .groupBy("id")
             .agg(_dsum6(_bm25_score_cols(k1, b)).alias("bm25"))
             .select("id", F.round("bm25", 6).alias("bm25"))

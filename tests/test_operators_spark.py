@@ -210,6 +210,27 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert not any({c.doc_a, c.doc_b} == {1, 3} for c in cands)
 
 
+def test_minhash_signatures_generated_sql_matches_hash_slot(spark):
+    """The generated-SQL slot aggregates in `minhash_signatures` compute
+    exactly `min(_hash_slot(shingle, i))`, the one slot definition."""
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox naps"),
+         (3, "entirely different words here today")],
+        "doc_id bigint, text string",
+    )
+    slots = [0, 1, 7, 15]
+    sig = dedup.minhash_signatures(df, 16, 2, "text", "doc_id")
+    want = dedup._doc_shingles(df, "text", "doc_id", 2).groupBy("doc").agg(
+        *[F.min(dedup._hash_slot(F.col("shingle"), i)).alias(f"mh_{i}")
+          for i in slots]
+    )
+    cols = ["doc"] + [f"mh_{i}" for i in slots]
+    got = sorted(tuple(r) for r in sig.select(*cols).collect())
+    assert got == sorted(tuple(r) for r in want.select(*cols).collect())
+    assert len(got) == 3 and all(len(v) == 15 for r in got for v in r[1:])
+
+
 def test_minhash_components_collapsed_matches_uncollapsed(spark, tables):
     """The hot-group-safe collapsed path must be row-for-row identical to
     the plain candidates→closure path — on the sf corpus AND on a synthetic
@@ -379,6 +400,18 @@ def test_pagerank_dangling_default_fails_loudly(spark):
     )
     with pytest.raises(ValueError, match="out-degree 0"):
         pagerank(edges, iterations=2, cache=False).collect()
+
+
+@pytest.mark.parametrize("dangling", ["error", "redistribute"])
+def test_pagerank_empty_edge_list(spark, dangling):
+    """An edge-less graph (e.g. a near-dup graph without a single pair)
+    ranks no node: an empty (id, rank) frame, not a division by zero."""
+    from ocr_vector_db_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame([], "src bigint, dst bigint")
+    got = pagerank(edges, iterations=3, dangling=dangling)
+    assert got.dtypes == [("id", "bigint"), ("rank", "double")]
+    assert got.collect() == []
 
 
 def test_pagerank_redistribute_matches_numpy_and_conserves_mass(spark):

@@ -248,6 +248,82 @@ def test_lexical_index_matches_scan_bm25(spark, tables, tmp_path_factory):
     assert "bucket" in plan.split("PartitionFilters")[1][:300]
 
 
+def _plan_jobs(spark, build):
+    """(DataFrame, ids of the Spark jobs started while `build()` returned
+    it) — the jobs a search pays before its caller's action."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan")
+    try:
+        df = build()
+    finally:
+        sc.setJobGroup("plan-jobs-idle", "idle")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_index_search_plans_start_no_spark_jobs(spark, tables, tmp_path_factory):
+    """Lexical and IVF search build their plans without a Spark job: the
+    bucket list folds into the scan's partition filter, the postings and
+    vectors are read with the schema of the object's first read, and the
+    BM25 stats are driver literals. The caller's action is the only work."""
+    from ocr_vector_db_spark.operators.lexical_index import LexicalIndex
+
+    docs, emb = tables["documents"], tables["embeddings"]
+    lex = LexicalIndex.build(spark, docs, str(tmp_path_factory.mktemp("lexj")),
+                             n_buckets=16)
+    ivf = IVFIndex.build(spark, emb, str(tmp_path_factory.mktemp("ivfj")),
+                         num_clusters=4)
+    loaded = LexicalIndex.load(spark, lex.path)
+    qv = [float(x) for x in emb.filter(F.col("vec_id") == 3).head().embedding]
+    terms = ["distributed", "shuffle", "data"]
+    # the first read of each table infers its schema (once per object)
+    for idx in (lex, loaded):
+        idx.search(terms, k=10).collect()
+    ivf.search(qv, k=5, nprobe=2).collect()
+
+    for idx in (lex, loaded):
+        via_index, jobs = _plan_jobs(spark, lambda: idx.search(terms, k=10))
+        assert jobs == []
+        plan = via_index._jdf.queryExecution().executedPlan().toString()
+        pf = plan.split("PartitionFilters: [")[1].split("]")[0]
+        assert "bucket" in pf and "xxhash64" not in pf  # folded to literals
+    res, jobs = _plan_jobs(spark, lambda: ivf.search(qv, k=5, nprobe=2))
+    assert jobs == []
+    assert res.collect()[0].vec_id == 3
+
+
+def test_lexical_index_search_sees_later_adds(spark, tables, tmp_path_factory):
+    """An instance that already served a search picks up a later add() —
+    made through itself or through a second load()ed instance — on its next
+    search: the literal stats follow the committed stats generation."""
+    from ocr_vector_db_spark.operators.lexical_index import LexicalIndex
+
+    docs = tables["documents"]
+    path = str(tmp_path_factory.mktemp("lex_fresh"))
+    idx = LexicalIndex.build(spark, docs.filter(F.col("doc_id") % 2 == 0),
+                             path, n_buckets=8)
+    terms = ["distributed", "data", "zyzzyva"]
+
+    def results(i):
+        return [(r.id, r.bm25, r.rank) for r in i.search(terms, k=10).collect()]
+
+    before = results(idx)
+    idx.add(docs.filter(F.col("doc_id") % 2 == 1))
+    after_own = results(idx)
+    assert after_own != before
+    assert after_own == results(LexicalIndex.load(spark, path))
+
+    LexicalIndex.load(spark, path).add(spark.createDataFrame(
+        [(10**9 + 3, "zyzzyva distributed data data")],
+        "doc_id bigint, text string"))
+    after_other = results(idx)
+    assert after_other[0][0] == 10**9 + 3
+    assert after_other == results(LexicalIndex.load(spark, path))
+
+
 def test_lexical_index_incremental_add(spark, tables, tmp_path_factory):
     """Build on half the corpus, add() the rest: search ranking matches a
     full build (df is derived at query time so it needs no maintenance;
