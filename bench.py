@@ -402,23 +402,6 @@ def _prior_artifact_queries() -> dict[str, float]:
         return {}
 
 
-# Fresh-JVM slicing: each slice of HEADLINE runs in its own subprocess
-# JVM (SPARK_GRAFT_BENCH_SLICE child protocol below), resetting
-# accumulated JVM state at the boundary. Round 13 ran the controlled
-# experiment this was built for — two sliced runs plus a single-session
-# control in the same hour — and the data REFUTED the JVM-state theory
-# of the tail swing: per-query drift between the two fresh-JVM sliced
-# runs was just as wide (38 entries >1.3x, up to 2.2x, head and tail
-# alike) and whole-run totals moved ±20% (146.5 / 122.5 / 118.1s on
-# identical code), i.e. the swing is MACHINE-level noise, not session
-# state. The default therefore stays single-slice — directly comparable
-# with every prior round's artifact — and min-of-2 + clean-cache +
-# full-sweep warmup remains the best-available estimator; the slice
-# knob (SPARK_GRAFT_BENCH_SLICE_SIZE) stays for future A/B runs.
-# Details: SCALING.md "bench variance, round-13 measurement".
-SLICE_SIZE = int(os.environ.get("SPARK_GRAFT_BENCH_SLICE_SIZE", "10000"))
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -436,18 +419,21 @@ def main() -> None:
 
     import subprocess
 
-    timings = {}
-    for a in range(0, len(HEADLINE), SLICE_SIZE):
-        b = min(a + SLICE_SIZE, len(HEADLINE))
-        env = dict(os.environ, SPARK_GRAFT_BENCH_SLICE=f"{a}:{b}")
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)],
-            env=env, stdout=subprocess.PIPE, text=True,
-        )
-        if proc.returncode != 0:
-            raise SystemExit(f"bench slice {a}:{b} failed "
-                             f"(exit {proc.returncode})")
-        timings.update(json.loads(proc.stdout.strip().splitlines()[-1]))
+    # The whole HEADLINE runs in ONE child process (the slice protocol
+    # above, spawned once): the parent keeps only the child's last stdout
+    # line (its timings), so nothing else the run prints reaches the
+    # bench line, and the child's exit releases its JVM and session temp
+    # dirs. Several fresh-JVM slices were measured in round 13 and did
+    # not reduce the tail swing (SCALING.md "bench variance, round-13
+    # measurement").
+    env = dict(os.environ, SPARK_GRAFT_BENCH_SLICE=f"0:{len(HEADLINE)}")
+    proc = subprocess.run(
+        [sys.executable, os.path.abspath(__file__)],
+        env=env, stdout=subprocess.PIPE, text=True,
+    )
+    if proc.returncode != 0:
+        raise SystemExit(f"bench run failed (exit {proc.returncode})")
+    timings = json.loads(proc.stdout.strip().splitlines()[-1])
 
     # ambient-noise controls (see run_canary): start/end machine-speed
     # samples, reported top-level and EXCLUDED from the headline total —

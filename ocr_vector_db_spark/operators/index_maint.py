@@ -31,7 +31,6 @@ commit point). Single-writer contract, same as the indexes' add().
 
 from __future__ import annotations
 
-import os
 import posixpath
 import re
 
@@ -278,22 +277,13 @@ def parquet_file_count(path: str, spark: SparkSession | None = None) -> int:
     Goes through the Hadoop FileSystem API like every other index-layout
     operation, so the trigger works on HDFS/object stores, not just local
     disk (the round-6 straggler). `spark` defaults to the active session;
-    with no session at all (bare scripts), a local-fs os.walk fallback
-    keeps the old behavior."""
+    with none, it raises."""
     spark = spark or SparkSession.getActiveSession()
-    if spark is None:  # sessionless fallback: local filesystem only
-        gens = sorted(
-            int(m.group(1))
-            for m in (_GEN_MARK_RE.fullmatch(f) for f in (
-                os.listdir(path) if os.path.isdir(path) else []))
-            if m and os.path.isdir(os.path.join(path, _gen_name(int(m.group(1)))))
+    if spark is None:
+        raise RuntimeError(
+            "parquet_file_count needs a SparkSession: pass `spark` or "
+            "call it while a session is active"
         )
-        root = os.path.join(path, _gen_name(gens[-1])) if gens else path
-        total = 0
-        for _r, _dirs, files in os.walk(root):
-            total += sum(1 for f in files
-                         if f.endswith(".parquet") and not f.startswith("."))
-        return total
     hpath, fs = _fs(spark, path)
     if not fs.exists(hpath(path)):
         return 0

@@ -28,16 +28,10 @@ from ocr_vector_db_spark.functions import text_analysis as ta
 from ocr_vector_db_spark.functions import validators
 from ocr_vector_db_spark.functions.chunking import chunk_fixed_col
 from ocr_vector_db_spark.operators import dedup, grouping, knn, metrics
-from ocr_vector_db_spark.session import load_table
+from ocr_vector_db_spark.session import load_table, session_memo, session_tempdir
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
-
-# Built-DataFrame memo for queries whose PLAN CONSTRUCTION is expensive
-# (generated wide SQL: each call costs a ~0.45s parse+analyze at 64 dims).
-# DataFrames are immutable lazy plans, so reuse is safe; keyed per
-# (session, sf) like session._TABLE_CACHE.
-_PLAN_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def query(name: str, oracle: str | None = None):
@@ -62,12 +56,11 @@ def _sql_dsum(expr: str, scale: int = 6) -> str:
 
 
 
-def plan_memo_hit(spark, tail: str):
-    """Session-memoized built plan WITH internal cached sub-frames — the
+def cold_plan_memo(spark, sf, name: str, build):
+    """Session-memoized built plan WITH internal cached sub-frames:
+    ``build()`` returns ``(out, cached)`` and this returns ``out`` — the
     `_fixture_store` discipline (nonsql.py) generalized for the
-    constant-fixture decode goldens (optimization r15). Returns the
-    memoized output DataFrame, or None when the caller must build (and
-    then `plan_memo_put`).
+    constant-fixture decode goldens (optimization r15).
 
     The fixture-golden plans cost seconds of EAGER driver analysis per
     construction (deep per-asset decode → signature → banded-join trees,
@@ -85,20 +78,10 @@ def plan_memo_hit(spark, tail: str):
     leaving ZERO decode work in the timed reps — decode-path regressions
     were bench-invisible. Unpersist creates a fresh InMemoryRelation per
     call; nothing survives from any earlier execution."""
-    key = (spark.sparkContext.applicationId, tail)
-    if key not in _PLAN_MEMO:
-        return None
-    out, cached = _PLAN_MEMO[key]
+    out, cached = session_memo(spark, sf, name, build)
     for df in cached:
         df.unpersist()
         df.cache()
-    return out
-
-
-def plan_memo_put(spark, tail: str, out, cached):
-    """Record a built plan + its cache-marked sub-frames (see
-    `plan_memo_hit`) and return `out`."""
-    _PLAN_MEMO[(spark.sparkContext.applicationId, tail)] = (out, cached)
     return out
 
 
@@ -113,21 +96,20 @@ def neardup_pair_index(spark, sf):
     q113, q145) serves from it: candidate-pair GENERATION (shingle+md5+
     band self-join over the corpus) is the persisted artifact; the
     closures / PageRank still execute per call."""
-    import tempfile
-
     from ocr_vector_db_spark.operators.neardup_pair_index import (
         NearDupPairIndex,
     )
 
-    key = (spark.sparkContext.applicationId, sf, "neardup_pair_index_path")
-    if key not in _PLAN_MEMO:
+    def build():
         d = load_table(spark, sf, "documents")
-        path = tempfile.mkdtemp(prefix="ndpairidx_")
+        path = session_tempdir("ndpairidx_")
         idx = NearDupPairIndex.build(
             spark, d.filter(F.col("doc_id") % 2 == 0), path,
             num_hashes=16, bands=4, n=2, n_buckets=16,
         )
         idx.add(d.filter(F.col("doc_id") % 2 == 1))
         idx.compact()
-        _PLAN_MEMO[key] = path
-    return NearDupPairIndex.load(spark, _PLAN_MEMO[key])
+        return path
+
+    path = session_memo(spark, sf, "neardup_pair_index_path", build)
+    return NearDupPairIndex.load(spark, path)

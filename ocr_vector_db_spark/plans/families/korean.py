@@ -28,13 +28,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocr_vector_db_spark.functions import text_analysis as ta
-from ocr_vector_db_spark.plans.families.core import _PLAN_MEMO, query
+from ocr_vector_db_spark.plans.families.core import query
 from ocr_vector_db_spark.plans.families.retrieval import (
     _NGRAM_TOKS_CTE,
     _bm25_scored_sql,
 )
 from ocr_vector_db_spark.plans.families.stats import _bpe_stages_sql
 from ocr_vector_db_spark.plans.families.text import _lang_exprs
+from ocr_vector_db_spark.session import session_memo
 
 # Deterministic KO/EN fixture corpus — OCR-shaped Korean (particles often
 # whitespace-split by line merges, which is also what keeps whole-token
@@ -154,27 +155,27 @@ def q147(spark, sf):
     # fixture). No leg caches anything (bigram_cross_entropy is
     # deliberately uncached), so every count re-executes the whole
     # four-leg pipeline from the fixture rows.
-    pkey = (spark.sparkContext.applicationId, "q147_plan")
-    if pkey in _PLAN_MEMO:
-        return _PLAN_MEMO[pkey]
-    d = _ko_corpus(spark)
-    key = (spark.sparkContext.applicationId, "q147_merges")
-    if key not in _PLAN_MEMO:
-        _PLAN_MEMO[key] = bpe_train(d, _KO_MERGES)[0]
-    merges = _PLAN_MEMO[key]
-
-    lang = d.select("doc_id", ta.detect_language_col(F.col("text")).alias("lang_pred"))
-    bm = retrieval.bm25_scores(d, _KO_TERMS)
-    lm = ngram_lm.bigram_cross_entropy(d)
-    bpec = bpe_token_counts(d, merges)
-    _PLAN_MEMO[pkey] = (
-        lang.join(F.broadcast(bm), lang["doc_id"] == bm["id"], "left")
-        .join(F.broadcast(lm), "doc_id")
-        .join(F.broadcast(bpec), "doc_id")
-        .select(
-            "doc_id", "lang_pred",
-            F.coalesce(F.col("bm25"), F.lit(0.0)).alias("bm25"),
-            "n_bigrams", "avg_neg_logprob", "n_words", "n_bpe_tokens",
+    def build():
+        d = _ko_corpus(spark)
+        merges = session_memo(
+            spark, sf, "q147_merges", lambda: bpe_train(d, _KO_MERGES)[0]
         )
-    )
-    return _PLAN_MEMO[pkey]
+
+        lang = d.select(
+            "doc_id", ta.detect_language_col(F.col("text")).alias("lang_pred")
+        )
+        bm = retrieval.bm25_scores(d, _KO_TERMS)
+        lm = ngram_lm.bigram_cross_entropy(d)
+        bpec = bpe_token_counts(d, merges)
+        return (
+            lang.join(F.broadcast(bm), lang["doc_id"] == bm["id"], "left")
+            .join(F.broadcast(lm), "doc_id")
+            .join(F.broadcast(bpec), "doc_id")
+            .select(
+                "doc_id", "lang_pred",
+                F.coalesce(F.col("bm25"), F.lit(0.0)).alias("bm25"),
+                "n_bigrams", "avg_neg_logprob", "n_words", "n_bpe_tokens",
+            )
+        )
+
+    return session_memo(spark, sf, "q147_plan", build)

@@ -23,12 +23,15 @@ from ocr_vector_db_spark.operators import (  # noqa: F401
 from ocr_vector_db_spark.plans.families.core import (  # noqa: F401
     ORACLES,
     QUERIES,
-    _PLAN_MEMO,
     _sql_dsum,
     dsum,
     query,
 )
-from ocr_vector_db_spark.session import load_table  # noqa: F401
+from ocr_vector_db_spark.session import (  # noqa: F401
+    load_table,
+    session_memo,
+    session_tempdir,
+)
 from ocr_vector_db_spark.plans.families.vector import (  # noqa: F401
     _MH_CAND_SQL,
     _query_vec,
@@ -49,8 +52,7 @@ def _fixture_store(spark, sf):
     (bench.py's ingest_200docs times an un-memoized run)."""
     from ocr_vector_db_spark.sources.ingest import files_df, ingest
 
-    key = (spark.sparkContext.applicationId, sf, "fixture_store")
-    if key not in _PLAN_MEMO:
+    def build():
         out = ingest(spark, files_df(spark, _FIXTURE_FILES), dim=16)
         cached = {
             n: out[n].cache()
@@ -59,16 +61,17 @@ def _fixture_store(spark, sf):
         }
         for df in cached.values():
             df.count()
-        _PLAN_MEMO[key] = cached
-    else:
-        # a spark.catalog.clearCache() elsewhere (bench.py clears between
-        # timed queries) both evicts the data AND clears the persist
-        # mark — re-assert it so the next action re-materializes once
-        # instead of every consumer re-running the ingest per action
-        for df in _PLAN_MEMO[key].values():
-            if not df.storageLevel.useMemory:
-                df.cache()
-    return _PLAN_MEMO[key]
+        return cached
+
+    cached = session_memo(spark, sf, "fixture_store", build)
+    # a spark.catalog.clearCache() elsewhere (bench.py clears between
+    # timed queries) both evicts the data AND clears the persist
+    # mark — re-assert it so the next action re-materializes once
+    # instead of every consumer re-running the ingest per action
+    for df in cached.values():
+        if not df.storageLevel.useMemory:
+            df.cache()
+    return cached
 
 
 _FIXTURE_FILES = [
@@ -145,14 +148,13 @@ def q36(spark, sf):
     """Structured Streaming tumbling-window agg driven to completion with the
     availableNow trigger over a file source fed from the events table."""
     import json as _json
-    import tempfile
 
     from ocr_vector_db_spark.streaming.pipeline import (
         read_events_stream, run_to_memory, windowed_event_counts,
     )
 
     events = load_table(spark, sf, "events").orderBy("event_id").limit(500).collect()
-    tmp = tempfile.mkdtemp(prefix="events_stream_")
+    tmp = session_tempdir("events_stream_")
     with open(f"{tmp}/batch.json", "w") as fh:
         for r in events:
             fh.write(_json.dumps({
@@ -564,13 +566,11 @@ def q53(spark, sf):
     tables, whole-stage codegen) + exact re-rank of the candidate heads.
     KMeans clustering isn't SQL-reproducible, so the gate checks invariants
     (see _ann_invariants)."""
-    import tempfile
-
     from ocr_vector_db_spark.operators.ivfpq import IVFPQIndex
 
     e = load_table(spark, sf, "embeddings")
     idx = IVFPQIndex.build(
-        spark, e, tempfile.mkdtemp(prefix="ivfpq_q53_"), dim=64,
+        spark, e, session_tempdir("ivfpq_q53_"), dim=64,
         num_clusters=8, m=8, k=16,
     )
     qv = _query_vec(spark, sf, 0)
@@ -901,8 +901,6 @@ def q149(spark, sf):
     Reference parity: extends q62 (GPT-3 appendix C / The Pile §6.3
     decontamination) with the membership-sketch scale path; sizing per
     Broder & Mitzenmacher's survey (FP ≈ (1−e^{-kn/m})^k)."""
-    import tempfile
-
     from ocr_vector_db_spark.operators.dedup import _doc_shingles
     from ocr_vector_db_spark.operators.sketches import BloomSketch
 
@@ -911,16 +909,17 @@ def q149(spark, sf):
     sh = _doc_shingles(d, "text", "doc_id", 2)
     bench = sh.filter(F.col("doc") < 5).select("shingle").distinct()
     corpus = sh.filter(F.col("doc") >= 5)
-    key = (spark.sparkContext.applicationId, sf, "q149_bloom_path")
-    if key not in _PLAN_MEMO:
-        path = tempfile.mkdtemp(prefix="bloom_")
+
+    def build():
+        path = session_tempdir("bloom_")
         sk = BloomSketch.build(
             spark, bench.filter(F.crc32("shingle") % 2 == 0), path,
             F.col("shingle"), m=M, k=K,
         )
         sk.add(bench.filter(F.crc32("shingle") % 2 == 1), F.col("shingle"))
-        _PLAN_MEMO[key] = path
-    sk = BloomSketch.load(spark, _PLAN_MEMO[key])
+        return path
+
+    sk = BloomSketch.load(spark, session_memo(spark, sf, "q149_bloom_path", build))
     screened = sk.screen(corpus, F.col("shingle"), "doc")
     perdoc = screened.groupBy("doc").agg(
         F.count("*").alias("n_shingles"),

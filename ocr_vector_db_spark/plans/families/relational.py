@@ -23,7 +23,6 @@ from ocr_vector_db_spark.operators import (  # noqa: F401
 from ocr_vector_db_spark.plans.families.core import (  # noqa: F401
     ORACLES,
     QUERIES,
-    _PLAN_MEMO,
     _sql_dsum,
     dsum,
     query,

@@ -24,12 +24,15 @@ from ocr_vector_db_spark.operators import (  # noqa: F401
 from ocr_vector_db_spark.plans.families.core import (  # noqa: F401
     ORACLES,
     QUERIES,
-    _PLAN_MEMO,
     _sql_dsum,
     dsum,
     query,
 )
-from ocr_vector_db_spark.session import load_table  # noqa: F401
+from ocr_vector_db_spark.session import (  # noqa: F401
+    load_table,
+    session_memo,
+    session_tempdir,
+)
 from ocr_vector_db_spark.plans.families.vector import _MH_CAND_SQL  # noqa: F401
 
 # =====================================================================
@@ -90,35 +93,33 @@ def q66(spark, sf):
     the posexplode formulation would shuffle 64x the table; this shuffles KB.
     Built plan memoized per (session, sf) like q33 — the wide generated SQL
     costs ~0.4s to parse+analyze per construction."""
-    key = (spark.sparkContext.applicationId, sf, "q66")
-    if key in _PLAN_MEMO:
-        return _PLAN_MEMO[key]
-    e = load_table(spark, sf, "embeddings")
-    e.createOrReplaceTempView("q66_embeddings")
-    # Generated-SQL construction: a 64-dim expression tree built column by
-    # column costs hundreds of Py4J round trips (~1.3s driver latency); one
-    # parse of generated SQL yields the identical plan (see q33).
-    sum_terms = ", ".join(
-        f"SUM(CAST(ROUND(CAST(embedding[{i}] AS DOUBLE) * 1000000.0, 0) AS BIGINT))"
-        f" AS s{i}"
-        for i in range(_DIM)
-    )
-    mean_terms = ", ".join(
-        f"ROUND(CAST(s{i} AS DOUBLE) / 1000000.0 / n, 6)" for i in range(_DIM)
-    )
-    # the posexplode here runs over n_labels pre-aggregated rows (KB-scale),
-    # not the input table — input rows never explode
-    out = spark.sql(f"""
-        WITH sums AS (
-            SELECT label, COUNT(*) AS n, {sum_terms}
-            FROM q66_embeddings GROUP BY label
-        ),
-        m AS (SELECT label, posexplode(array({mean_terms})) AS (dim, centroid)
-              FROM sums)
-        SELECT label, CAST(dim AS BIGINT) AS dim, centroid FROM m
-    """)
-    _PLAN_MEMO[key] = out
-    return out
+    def build():
+        e = load_table(spark, sf, "embeddings")
+        e.createOrReplaceTempView("q66_embeddings")
+        # Generated-SQL construction: a 64-dim expression tree built column by
+        # column costs hundreds of Py4J round trips (~1.3s driver latency); one
+        # parse of generated SQL yields the identical plan (see q33).
+        sum_terms = ", ".join(
+            f"SUM(CAST(ROUND(CAST(embedding[{i}] AS DOUBLE) * 1000000.0, 0) AS BIGINT))"
+            f" AS s{i}"
+            for i in range(_DIM)
+        )
+        mean_terms = ", ".join(
+            f"ROUND(CAST(s{i} AS DOUBLE) / 1000000.0 / n, 6)" for i in range(_DIM)
+        )
+        # the posexplode here runs over n_labels pre-aggregated rows (KB-scale),
+        # not the input table — input rows never explode
+        return spark.sql(f"""
+            WITH sums AS (
+                SELECT label, COUNT(*) AS n, {sum_terms}
+                FROM q66_embeddings GROUP BY label
+            ),
+            m AS (SELECT label, posexplode(array({mean_terms})) AS (dim, centroid)
+                  FROM sums)
+            SELECT label, CAST(dim AS BIGINT) AS dim, centroid FROM m
+        """)
+
+    return session_memo(spark, sf, "q66", build)
 
 
 @query(
@@ -1149,17 +1150,15 @@ def q128(spark, sf):
     per-epoch O(m) folds instead of a corpus-wide COUNT(DISTINCT).
     Reference parity: repository.py's COUNT(DISTINCT …) stat surface,
     re-expressed as the sketch a warehouse-scale pipeline needs."""
-    import tempfile
-
     from ocr_vector_db_spark.operators.sketches import HLLSketch
 
     d = load_table(spark, sf, "documents")
     tok = (
         d.select(F.explode(tokens_of(F.col("text"))).alias("tok"))
     )
-    key = (spark.sparkContext.applicationId, sf, "q128_hll_path")
-    if key not in _PLAN_MEMO:
-        path = tempfile.mkdtemp(prefix="hll_")
+
+    def build():
+        path = session_tempdir("hll_")
         sk = HLLSketch.build(
             spark, tok.filter(F.crc32(F.col("tok")) % 4 == 0), path,
             F.col("tok"), p=8,
@@ -1168,11 +1167,13 @@ def q128(spark, sf):
         sk.add(tok.filter(F.crc32(F.col("tok")) % 4 == 2), F.col("tok"))
         other = HLLSketch.build(
             spark, tok.filter(F.crc32(F.col("tok")) % 4 == 3),
-            tempfile.mkdtemp(prefix="hll_"), F.col("tok"), p=8,
+            session_tempdir("hll_"), F.col("tok"), p=8,
         )
         sk.merge(other)
-        _PLAN_MEMO[key] = path
-    return HLLSketch.load(spark, _PLAN_MEMO[key]).summary()
+        return path
+
+    path = session_memo(spark, sf, "q128_hll_path", build)
+    return HLLSketch.load(spark, path).summary()
 
 
 @query(
@@ -1242,16 +1243,14 @@ def q129(spark, sf):
     scaling) bit-for-bit. This is the cross-collection contamination /
     overlap monitor a 100-TB multi-source pipeline runs per epoch at
     O(k) cost."""
-    import tempfile
-
     from ocr_vector_db_spark.operators.ngram_lm import adjacent_bigrams
     from ocr_vector_db_spark.operators.sketches import (
         KMVSketch, kmv_set_relations,
     )
 
     d = load_table(spark, sf, "documents")
-    key = (spark.sparkContext.applicationId, sf, "q129_kmv_paths")
-    if key not in _PLAN_MEMO:
+
+    def build():
         paths = {}
         for src in ("src0", "src1"):
             docs = d.filter(F.col("source") == src)
@@ -1259,15 +1258,16 @@ def q129(spark, sf):
                 "doc_id",
                 F.concat_ws(" ", "tok_a", "tok_b").alias("b"),
             )
-            path = tempfile.mkdtemp(prefix=f"kmv_{src}_")
+            path = session_tempdir(f"kmv_{src}_")
             sk = KMVSketch.build(
                 spark, bgs.filter(F.col("doc_id") % 2 == 0), path,
                 F.col("b"), k=128,
             )
             sk.add(bgs.filter(F.col("doc_id") % 2 == 1), F.col("b"))
             paths[src] = path
-        _PLAN_MEMO[key] = paths
-    paths = _PLAN_MEMO[key]
+        return paths
+
+    paths = session_memo(spark, sf, "q129_kmv_paths", build)
     return kmv_set_relations(
         KMVSketch.load(spark, paths["src0"]),
         KMVSketch.load(spark, paths["src1"]),
@@ -1330,12 +1330,12 @@ def _bpe_train_sql(n_merges: int) -> str:
 def _bpe_merges(spark, sf):
     from ocr_vector_db_spark.operators.bpe import bpe_train
 
-    key = (spark.sparkContext.applicationId, sf, "q132_bpe_merges")
-    if key not in _PLAN_MEMO:
+    def build():
         d = load_table(spark, sf, "documents")
         merges, _vocab = bpe_train(d, _BPE_N_MERGES)
-        _PLAN_MEMO[key] = merges
-    return _PLAN_MEMO[key]
+        return merges
+
+    return session_memo(spark, sf, "q132_bpe_merges", build)
 
 
 @query("q132_bpe_train_merges", _bpe_train_sql(_BPE_N_MERGES))
@@ -1476,18 +1476,17 @@ def q136(spark, sf):
     training all 20 in one run (the oracle replays the full loop from
     scratch in SQL). This is the 'train 10k merges today, extend to 30k
     tomorrow' path: resume cost is vocab-sized, corpus-free."""
-    import tempfile
-
     from ocr_vector_db_spark.operators.bpe import BPETokenizer
 
-    key = (spark.sparkContext.applicationId, sf, "q136_tok_path")
-    if key not in _PLAN_MEMO:
+    def build():
         d = load_table(spark, sf, "documents")
-        path = tempfile.mkdtemp(prefix="bpetok_")
+        path = session_tempdir("bpetok_")
         tok = BPETokenizer.build(spark, d, path, _BPE_N_MERGES // 2)
         tok.extend(_BPE_N_MERGES - _BPE_N_MERGES // 2)
-        _PLAN_MEMO[key] = path
-    return BPETokenizer.load(spark, _PLAN_MEMO[key]).merges_frame()
+        return path
+
+    path = session_memo(spark, sf, "q136_tok_path", build)
+    return BPETokenizer.load(spark, path).merges_frame()
 
 
 @query(
@@ -1605,20 +1604,20 @@ def q138(spark, sf):
     the edge bins, empty bins participate through Laplace smoothing. The
     oracle recomputes baseline + screen from raw data, so the persisted
     path must be bit-identical to the from-scratch formulation."""
-    import tempfile
-
     from ocr_vector_db_spark.operators.drift import DriftBaseline
 
     d = load_table(spark, sf, "documents")
-    key = (spark.sparkContext.applicationId, sf, "q138_baseline_path")
-    if key not in _PLAN_MEMO:
-        path = tempfile.mkdtemp(prefix="driftbl_")
+
+    def build():
+        path = session_tempdir("driftbl_")
         DriftBaseline.build(
             spark, d.filter(F.col("doc_id") % 2 == 0), "n_chars", path,
             bins=10,
         )
-        _PLAN_MEMO[key] = path
-    bl = DriftBaseline.load(spark, _PLAN_MEMO[key])
+        return path
+
+    path = session_memo(spark, sf, "q138_baseline_path", build)
+    bl = DriftBaseline.load(spark, path)
     return bl.psi_of(d.filter(F.col("doc_id") % 2 == 1), "n_chars")
 
 
@@ -2039,24 +2038,24 @@ def q151(spark, sf):
     Reference parity: the reference keeps exact per-collection stats
     (database/repository.py count aggregations); this is the
     monitoring-grade scale path for the same questions."""
-    import tempfile
-
     from ocr_vector_db_spark.operators.sketches import CMSketch
 
     d = load_table(spark, sf, "documents")
     tok = d.select(
         "doc_id", F.explode(tokens_of(F.col("text"))).alias("token")
     )
-    key = (spark.sparkContext.applicationId, sf, "q151_cm_path")
-    if key not in _PLAN_MEMO:
-        path = tempfile.mkdtemp(prefix="cmsketch_")
+
+    def build():
+        path = session_tempdir("cmsketch_")
         sk = CMSketch.build(
             spark, tok.filter(F.pmod("doc_id", F.lit(2)) == 0), path,
             F.col("token"), w=_CM_W, d=_CM_D,
         )
         sk.add(tok.filter(F.pmod("doc_id", F.lit(2)) == 1), F.col("token"))
-        _PLAN_MEMO[key] = path
-    sk = CMSketch.load(spark, _PLAN_MEMO[key])
+        return path
+
+    path = session_memo(spark, sf, "q151_cm_path", build)
+    sk = CMSketch.load(spark, path)
     cand = (
         tok.groupBy("token").agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), "token")

@@ -9,7 +9,9 @@ oracles), Arrow enabled for the pandas-UDF slow path.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
@@ -70,21 +72,59 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
     return out
 
 
-_TABLE_CACHE: dict[tuple[str, str, str], "object"] = {}
+_SESSION_MEMO: dict[tuple[str, str, str], object] = {}
+
+
+def session_memo(spark: SparkSession, sf: str, name: str, build):
+    """The value stored under (session, sf, name); the zero-argument
+    ``build()`` runs only on a miss, and a raising build stores nothing.
+
+    The query families keep here what a deployment builds ONCE and then
+    serves from: persisted-index paths (each index is built once per
+    session, like a real index) and built DataFrames whose PLAN
+    CONSTRUCTION is expensive (generated wide SQL costs a ~0.45 s
+    parse+analyze per call at 64 dims). DataFrames are immutable lazy
+    plans, so reuse is safe; results are never memoized. The scope is
+    frozen: persisted-index serving plans and constant-fixture plans
+    only. Memoizing anything else would hollow the gate it times."""
+    key = (spark.sparkContext.applicationId, sf, name)
+    if key not in _SESSION_MEMO:
+        _SESSION_MEMO[key] = build()
+    return _SESSION_MEMO[key]
+
+
+_TEMP_ROOT: str | None = None
+
+
+def session_tempdir(prefix: str) -> str:
+    """A fresh local directory under one per-process root, which a single
+    ``atexit`` hook removes — persisted indexes and stream checkpoints
+    built for the query families never outlive the process."""
+    import tempfile
+
+    global _TEMP_ROOT
+    if _TEMP_ROOT is None:
+        _TEMP_ROOT = tempfile.mkdtemp(prefix="ocr_vector_db_spark_")
+        atexit.register(shutil.rmtree, _TEMP_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_TEMP_ROOT)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one driver table. DataFrame plan objects are memoized per
     (session, dir, table) — repeated loads in a query batch skip the
-    driver-side file listing / footer read. The events table carries
-    TIMESTAMP(NANOS) parquet (unsupported by Spark's vectorized reader) —
-    read nanos as long and convert to a microsecond timestamp, matching how
-    external engines (DuckDB) truncate ns → µs."""
-    from pyspark.sql import functions as F
+    driver-side file listing / footer read."""
+    return session_memo(
+        spark, sf_dir, f"{name}.parquet",
+        lambda: _read_table(spark, sf_dir, name),
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str):
+    """The events table carries TIMESTAMP(NANOS) parquet (unsupported by
+    Spark's vectorized reader) — read nanos as long and convert to a
+    microsecond timestamp, matching how external engines (DuckDB)
+    truncate ns → µs."""
+    from pyspark.sql import functions as F
 
     # Parquet TIMESTAMP(isAdjustedToUTC=false) must read as plain TIMESTAMP
     # (stored int64 = epoch micros, same value DuckDB's epoch_us sees), not
@@ -126,7 +166,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
             )
     else:
         df = spark.read.parquet(path)
-    _TABLE_CACHE[key] = df
     return df
 
 
