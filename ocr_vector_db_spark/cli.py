@@ -536,10 +536,10 @@ def cmd_decontam(args) -> int:
 
     from ocr_vector_db_spark.operators.dedup import _doc_shingles
     from ocr_vector_db_spark.operators.index_maint import (
-        current_gen_dir, fs_exists,
+        current_gen_dir, fs_exists, publish,
     )
     from ocr_vector_db_spark.operators.sketches import (
-        _BLOOM_WORD_BITS, BloomSketch, _publish_small,
+        _BLOOM_WORD_BITS, BloomSketch,
     )
 
     spark = _spark()
@@ -559,7 +559,7 @@ def cmd_decontam(args) -> int:
         # corpora are eval-sized (tiny vs the corpus), and the streaming
         # gate's phase-2 confirm joins only flagged docs' shingles
         # against it — Bloom FPs then never drop clean documents
-        _publish_small(spark, grams_path, grams, first=True)
+        publish(spark, grams_path, grams.coalesce(1), first=True)
         print(f"[decontam] built m={sk.m} k={sk.k} at {path} "
               f"(+ exact grams at {grams_path})")
         return 0
@@ -576,7 +576,7 @@ def cmd_decontam(args) -> int:
                 spark.read.parquet(current_gen_dir(spark, grams_path))
                 .unionByName(grams).distinct()
             )
-            _publish_small(spark, grams_path, merged)
+            publish(spark, grams_path, merged.coalesce(1))
         else:
             # pre-two-phase store: the build corpus's exact grams were
             # never persisted, so a table seeded from this add alone

@@ -26,6 +26,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_vector_db_spark.operators.index_maint import (
+    PersistedIndex,
+    fs_exists,
+    publish,
+    read_generation,
+    read_small_file,
+    write_small_file,
+)
 from ocr_vector_db_spark.operators.knn import knn_brute_force
 
 
@@ -131,11 +139,6 @@ def fit_hier_layer(
     num_clusters-sized broadcast ever ships. Returns (l1, l2_to_l1)."""
     import numpy as np
 
-    from ocr_vector_db_spark.operators.index_maint import (
-        commit_generation,
-        init_generation,
-        write_small_file,
-    )
     from ocr_vector_db_spark.operators.pq import _lloyd
 
     C = np.asarray([c for _, c in centroids], dtype=np.float64)
@@ -160,12 +163,8 @@ def fit_hier_layer(
         [(l2_to_l1[cid], cid, vec) for cid, vec in centroids],
         "l1_id int, cluster_id int, centroid array<double>",
     )
-    cent_path = os.path.join(path, "centroids_l2")
-    cn_gen, cdest = init_generation(spark, cent_path)
-    cent_df.repartition(1).write.mode("overwrite").partitionBy(
-        "l1_id"
-    ).parquet(cdest)
-    commit_generation(spark, cent_path, cn_gen)
+    publish(spark, os.path.join(path, "centroids_l2"), cent_df.repartition(1),
+            "l1_id")
     return l1, l2_to_l1
 
 
@@ -174,11 +173,6 @@ def load_hier_layer(
 ) -> tuple[list[tuple[int, list[float]]], list[int]]:
     """(l1, l2_to_l1) from `path`/hier.json, or ([], []) for flat
     indexes."""
-    from ocr_vector_db_spark.operators.index_maint import (
-        fs_exists,
-        read_small_file,
-    )
-
     if not fs_exists(spark, os.path.join(path, "hier.json")):
         return [], []
     hier = json.loads(read_small_file(spark, os.path.join(path, "hier.json")))
@@ -192,8 +186,6 @@ def hier_centroids_df(spark: SparkSession, path: str) -> DataFrame:
     """The (l1_id, cluster_id, centroid) parquet table of a hierarchical
     index — the distributed-assignment side that replaces any
     num_clusters-sized broadcast."""
-    from ocr_vector_db_spark.operators.index_maint import read_generation
-
     return read_generation(spark, os.path.join(path, "centroids_l2"))
 
 
@@ -332,15 +324,15 @@ def assign_clusters_hier_df(
     )
 
 
-class IVFIndex:
+class IVFIndex(PersistedIndex):
+    GATE = "centroids.json"
+
     def __init__(self, spark: SparkSession, path: str,
                  centroids: list[tuple[int, list[float]]] | None = None,
                  l1: list[tuple[int, list[float]]] | None = None,
                  l2_to_l1: list[int] | None = None,
                  std_stats: list[tuple[float, float]] | None = None):
-        self.spark = spark
-        self.path = path
-        self._vectors_schema = None  # see vectors()
+        super().__init__(spark, path)
         self.centroids = centroids or []
         # optional hierarchical coarse layer (see build(l1_branches=...)):
         # l1 = the branch centroids (≈ √num_clusters, always tiny);
@@ -445,27 +437,11 @@ class IVFIndex:
             featuresCol="__f", predictionCol="cluster_id",
         ).fit(fit_on)
         assigned = model.transform(feat).drop("__f")
-
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-        )
-
-        vec_path = os.path.join(path, "vectors")
-        n_gen, dest = init_generation(spark, vec_path)
-        assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(dest)
-        commit_generation(spark, vec_path, n_gen)
         centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-        from ocr_vector_db_spark.operators.index_maint import write_small_file
-
-        # Hadoop FS, not open(): keeps the index layout local/HDFS-portable
-        write_small_file(spark, os.path.join(path, "centroids.json"),
-                         json.dumps(centroids).encode("utf-8"))
-
-        l1: list[tuple[int, list[float]]] = []
-        l2_to_l1: list[int] = []
+        idx = cls._start_build(spark, path, centroids, std_stats=std_stats)
+        idx._write("vectors", assigned, "cluster_id", build=True)
         if l1_branches:
-            l1, l2_to_l1 = fit_hier_layer(
+            idx.l1, idx.l2_to_l1 = fit_hier_layer(
                 spark, path, centroids, l1_branches, seed, max_iter
             )
         if std_stats:
@@ -473,20 +449,14 @@ class IVFIndex:
                 spark, os.path.join(path, "standardize.json"),
                 json.dumps(std_stats).encode("utf-8"),
             )
-        return cls(spark, path, centroids, l1, l2_to_l1, std_stats)
+        return idx._finish_build()
+
+    def _gate(self):
+        return self.centroids
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IVFIndex":
-        from ocr_vector_db_spark.operators.index_maint import (
-            fs_exists,
-            read_small_file,
-        )
-
-        centroids = [
-            (int(i), v) for i, v in json.loads(
-                read_small_file(spark, os.path.join(path, "centroids.json"))
-            )
-        ]
+        centroids = [(int(i), v) for i, v in cls._read_gate(spark, path)]
         l1, l2_to_l1 = load_hier_layer(spark, path)
         std_stats: list[tuple[float, float]] = []
         std_path = os.path.join(path, "standardize.json")
@@ -500,14 +470,7 @@ class IVFIndex:
     # -------------------------------------------------------------- search
 
     def vectors(self) -> DataFrame:
-        """The current vectors generation, read with the schema of this
-        object's first read, so search plans start no Spark job."""
-        from ocr_vector_db_spark.operators.index_maint import read_generation
-
-        df = read_generation(self.spark, os.path.join(self.path, "vectors"),
-                             self._vectors_schema)
-        self._vectors_schema = df.schema
-        return df
+        return self._read("vectors")
 
     def probe_clusters(
         self,
@@ -1013,20 +976,9 @@ class IVFIndex:
             for si in range(len(settings))
         ]
 
-    # ---------------------------------------------------------- maintenance
-
-    def compact(self) -> int:
-        """Collapse each cluster partition to one file after many add()
-        appends (OPTIMIZE analogue; see operators/index_maint.py). Returns
-        the vector row count. Single-writer contract."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            compact_partitioned,
-        )
-
-        return compact_partitioned(
-            self.spark, os.path.join(self.path, "vectors"),
-            "cluster_id", max(len(self.centroids), 1),
-        )
+    def _compaction(self):
+        # each cluster partition to one file
+        return (("vectors", "cluster_id", max(len(self.centroids), 1)),)
 
     # ------------------------------------------------------------ increment
 
@@ -1043,15 +995,9 @@ class IVFIndex:
         layout. Centroid drift is handled by periodic rebuilds — the same
         lists-don't-move contract as pgvector's ivfflat.
 
-        Re-add guard (LexicalIndex.add parity): incoming ids anti-join
-        against the indexed ids by default so re-submitting a vector is a
-        no-op instead of a silent duplicate that would surface twice in
-        search results. Costs one distinct over the stored id column; pass
-        ``assume_new=True`` when the pipeline guarantees newness upstream
-        — for per-epoch streaming adds, delegate replay safety to
-        `index_maint.EpochLedger` (the pattern
-        `streaming.pipeline.stream_ingest_deduped` implements) so the
-        corpus-sized anti-join is paid only on crashed-epoch retries.
+        Re-add guard: `PersistedIndex._unindexed` (``assume_new`` skips
+        it; per-epoch streaming adds delegate replay safety to
+        `index_maint.EpochLedger`, as `stream_ingest_deduped` does).
 
         Assignment is the broadcast-centroid join + window argmin
         (`assign_nearest_centroid`) — constant-size plan at any
@@ -1062,10 +1008,8 @@ class IVFIndex:
         L2 join) — past the ~GB centroid-broadcast budget, that is the
         only shape left; serve those vectors with the same `branches`.
         Single-writer contract. Returns the number of vectors added."""
-        df = self._std_df(df, emb_col)  # raw → index space
-        if not assume_new:
-            indexed = self.vectors().select(id_col).distinct()
-            df = df.join(indexed, id_col, "left_anti")
+        df = self._unindexed(self._std_df(df, emb_col), id_col,
+                             self.vectors, assume_new)  # raw → index space
         if branches and self.l1:
             # df is already index-space: use the non-standardizing form
             # (the public assign_clusters_hier would transform again)
@@ -1082,13 +1026,7 @@ class IVFIndex:
             # vectors path, so evaluating it afterwards would see the
             # batch's own rows and count 0 (same hazard as LexicalIndex)
             n = assigned.count()
-            from ocr_vector_db_spark.operators.index_maint import (
-                current_gen_dir,
-            )
-
-            assigned.write.mode("append").partitionBy("cluster_id").parquet(
-                current_gen_dir(self.spark, os.path.join(self.path, "vectors"))
-            )
+            self._write("vectors", assigned, "cluster_id")
             return n
         finally:
             assigned.unpersist()

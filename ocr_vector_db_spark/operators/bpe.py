@@ -269,16 +269,12 @@ class BPETokenizer:
         n_merges: int,
         text_col: str = "text",
     ) -> "BPETokenizer":
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-        )
+        from ocr_vector_db_spark.operators.index_maint import publish
 
         merges, vocab = bpe_train(docs, n_merges, text_col)
         tok = cls(spark, path)
-        n_gen, dest = init_generation(spark, tok._root)
-        tok._write_state(dest, merges_df(spark, merges), vocab)
-        commit_generation(spark, tok._root, n_gen)
+        publish(spark, tok._root,
+                tok._writer(merges_df(spark, merges), vocab), first=True)
         return tok
 
     @classmethod
@@ -290,9 +286,13 @@ class BPETokenizer:
         return f"{self.path}/state"
 
     @staticmethod
-    def _write_state(dest: str, merges: DataFrame, vocab: DataFrame) -> None:
-        merges.coalesce(1).write.mode("overwrite").parquet(f"{dest}/merges")
-        vocab.write.mode("overwrite").parquet(f"{dest}/vocab")
+    def _writer(merges: DataFrame, vocab: DataFrame):
+        def write(dest: str) -> None:
+            merges.coalesce(1).write.mode("overwrite").parquet(
+                f"{dest}/merges")
+            vocab.write.mode("overwrite").parquet(f"{dest}/vocab")
+
+        return write
 
     def _sub(self, sub: str) -> DataFrame:
         from ocr_vector_db_spark.operators.index_maint import current_gen_dir
@@ -321,22 +321,14 @@ class BPETokenizer:
         pair is atomic: a crash mid-extend leaves the previous generation
         current and the retry re-runs from it (deterministic loop ⇒ the
         same result — replay-safe)."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            gc_generations,
-            next_gen_dir,
-        )
+        from ocr_vector_db_spark.operators.index_maint import publish
 
         prior = self.merges()
         start = (prior[-1]["step"] + 1) if prior else 1
         vocab = self._sub("vocab").localCheckpoint()
         new, final_vocab = _train_loop(vocab, start, n_more)
-        n_gen, dest = next_gen_dir(self.spark, self._root)
-        self._write_state(
-            dest, merges_df(self.spark, prior + new), final_vocab
-        )
-        commit_generation(self.spark, self._root, n_gen)
-        gc_generations(self.spark, self._root)
+        publish(self.spark, self._root,
+                self._writer(merges_df(self.spark, prior + new), final_vocab))
         return self
 
     # ------------------------------------------------------------- apply

@@ -138,10 +138,7 @@ class DriftBaseline:
         cls, spark, df: DataFrame, value_col: str, path: str,
         bins: int = 10,
     ) -> "DriftBaseline":
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-        )
+        from ocr_vector_db_spark.operators.index_maint import publish
 
         base = df.filter(F.col(value_col).isNotNull()).select(
             F.col(value_col).cast("bigint").alias("_v")
@@ -165,15 +162,20 @@ class DriftBaseline:
             F.lit(-1).cast("bigint").alias("last_epoch"),
         )
         bl = cls(spark, path)
-        n_gen, dest = init_generation(spark, bl._root)
-        hist.coalesce(1).write.mode("overwrite").parquet(f"{dest}/hist")
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{dest}/meta")
-        commit_generation(spark, bl._root, n_gen)
+        publish(spark, bl._root, bl._writer(hist, meta), first=True)
         return bl
 
     @classmethod
     def load(cls, spark, path: str) -> "DriftBaseline":
         return cls(spark, path)
+
+    @staticmethod
+    def _writer(hist: DataFrame, meta: DataFrame):
+        def write(dest: str) -> None:
+            hist.coalesce(1).write.mode("overwrite").parquet(f"{dest}/hist")
+            meta.coalesce(1).write.mode("overwrite").parquet(f"{dest}/meta")
+
+        return write
 
     def _sub(self, sub: str) -> DataFrame:
         from ocr_vector_db_spark.operators.index_maint import current_gen_dir
@@ -251,11 +253,7 @@ class DriftBaseline:
         `epoch <= meta.last_epoch` makes the fold a no-op — a crashed
         epoch's retry cannot double-count (single-writer, epochs
         monotone)."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            gc_generations,
-            next_gen_dir,
-        )
+        from ocr_vector_db_spark.operators.index_maint import publish
 
         prev = self._sub("meta").head()
         if epoch is not None and epoch <= int(prev.last_epoch):
@@ -273,11 +271,7 @@ class DriftBaseline:
             (F.col("n") + F.lit(n_add)).cast("bigint").alias("n"),
             F.lit(new_epoch).cast("bigint").alias("last_epoch"),
         )
-        n_gen, dest = next_gen_dir(self.spark, self._root)
-        merged.coalesce(1).write.mode("overwrite").parquet(f"{dest}/hist")
-        meta.coalesce(1).write.mode("overwrite").parquet(f"{dest}/meta")
-        commit_generation(self.spark, self._root, n_gen)
-        gc_generations(self.spark, self._root)
+        publish(self.spark, self._root, self._writer(merged, meta))
         return self
 
 

@@ -1,28 +1,49 @@
-"""Maintenance shared by the persisted indexes (lexical / IVF / MinHash).
+"""The persistence lifecycle shared by every persisted index: generation
+publish, empty-layout reads, build commit point, compaction.
 
-Every incremental `add()` appends files into the partitioned layouts, so a
-long-lived index accumulates one small parquet file per (add, partition) —
-the classic small-files problem. `compact_partitioned` is the OPTIMIZE
-analogue (EntityStore.compact for partitioned index layouts): rewrite the
-table hash-repartitioned BY its partition column, so each partition
-directory collapses to one file.
-
-Publication is READER-ATOMIC via generation pointers (the Iceberg/Delta
-snapshot idea reduced to its minimum): a table path holds generation
-directories `gen-000001/, gen-000002/, …` plus zero-byte commit markers
-`gen-000001.committed`. Readers resolve the highest marker whose data dir
-exists and read that directory; writers build the NEXT generation off to
-the side and publish it with a single atomic marker create. There is no
-rename of live data, hence no crash point at which a reader can observe a
-missing or half-swapped path — a reader sees either generation N or N+1,
-both complete. GC keeps the newest two generations so a reader that
-resolved N just before the N+1 commit can still finish its scan; the
-N-1 data is removed only then. Crash before the marker leaves an orphan
-gen dir that the next compaction simply overwrites.
+Generations. A table path holds generation directories `gen-000001/,
+gen-000002/, …` plus zero-byte commit markers `gen-000001.committed`.
+Readers resolve the highest marker whose data dir exists and read that
+directory (the Iceberg/Delta snapshot idea reduced to its minimum).
+`publish` is the one writer: it writes the NEXT generation off to the
+side (the first one, after clearing the path, with `first=True`),
+commits it with a single atomic marker create, then GCs. There is no
+rename of live data, so a reader sees generation N or N+1, both
+complete. GC keeps the newest two generations, so a reader that resolved
+N just before the N+1 commit can still finish its scan. A crash before
+the marker leaves an orphan gen dir that the next publish overwrites.
+Every rewrite goes through `publish`: compaction, the 1-row stats
+tables, the KB-sized sketch tables, DriftBaseline's and BPETokenizer's
+two-subdir states (a writer callable fills the dir), the running sample.
 
 A path with data files but no committed generation is a legacy flat
 layout and resolves to itself, so pre-generation indexes stay readable;
 their first compaction migrates them into `gen-000001`.
+
+`PersistedIndex` is the base of the indexes built from those tables:
+  build    `_start_build` clears the index root ONCE (tables and sidecar
+           files alike: a rebuild at a used path keeps nothing of the old
+           index), each table is published as its generation 1, and
+           `_finish_build` writes the file `load()` gates on LAST
+           (`meta.json`, or the class's `GATE`). A build that dies midway
+           leaves no gate file, so `load()` raises instead of pairing new
+           tables with old parameters.
+  load     `meta.json` holds the constructor parameters named in `META`.
+  add      appends INTO the live generation of each table (`_write`),
+           after the `assume_new` re-add guard (`_unindexed`).
+  read     `_read` reads a table's live generation with the schema of the
+           first read of that generation dir, so a serving plan starts no
+           schema-inference job; a layout without data files (an empty
+           build's partitionBy write leaves none) reads as the typed empty
+           frame the caller names. `read_or_none` is the only tolerance:
+           PATH_NOT_FOUND and UNABLE_TO_INFER_SCHEMA, nothing else (an
+           empty table silently disables a dedup gate, which is far worse
+           than a crash).
+  compact  rewrites each table `_compaction` declares — hash-repartitioned
+           by its partition column so each partition dir holds ONE file,
+           or coalesced — as a new generation (the OPTIMIZE analogue).
+Multi-table indexes commit each table's generation separately; their
+crash windows are argued per index (append order, reader-side dedup).
 
 All filesystem operations go through the Hadoop FileSystem API
 (local/HDFS; on object stores the single marker create is still the
@@ -31,14 +52,18 @@ commit point). Single-writer contract, same as the indexes' add().
 
 from __future__ import annotations
 
+import json
 import posixpath
 import re
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _GEN_DIR_RE = re.compile(r"gen-(\d{6})$")
 _GEN_MARK_RE = re.compile(r"gen-(\d{6})\.committed$")
+# the only read failures that mean "this layout holds no data files"
+_NO_FILES = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def _gen_name(n: int) -> str:
@@ -73,15 +98,35 @@ def current_gen_dir(spark: SparkSession, path: str) -> str:
     return posixpath.join(path, _gen_name(gens[-1])) if gens else path
 
 
+def _reader(spark: SparkSession, schema: StructType | None):
+    return spark.read if schema is None else spark.read.schema(schema)
+
+
 def read_generation(
     spark: SparkSession, path: str, schema: StructType | None = None
 ) -> DataFrame:
     """The current generation of the parquet table at `path`. Passing the
-    table's `schema` (an earlier read's `.schema`) skips parquet schema
-    inference, which is a Spark job of its own; add() and compact() never
-    change a table's schema, so the indexes infer it once per object."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(current_gen_dir(spark, path))
+    table's `schema` skips parquet schema inference, a Spark job of its
+    own."""
+    return _reader(spark, schema).parquet(current_gen_dir(spark, path))
+
+
+def read_or_none(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """The parquet table at `path`, or None when the layout holds no data
+    files (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA). Every other read
+    failure — a corrupt layout, a lost generation — raises."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return _reader(spark, schema).parquet(path)
+    except AnalysisException as exc:
+        # Spark 4 renamed getErrorClass → getCondition; support both
+        condition = (getattr(exc, "getCondition", None) or exc.getErrorClass)()
+        if condition not in _NO_FILES:
+            raise
+        return None
 
 
 def next_gen_dir(spark: SparkSession, path: str) -> tuple[int, str]:
@@ -92,22 +137,18 @@ def next_gen_dir(spark: SparkSession, path: str) -> tuple[int, str]:
 
 def commit_generation(spark: SparkSession, path: str, n: int) -> None:
     """Publish generation `n` with a single atomic marker create — the
-    commit point of every build/compaction. Readers resolving before this
-    call see the previous generation; after it, the new one."""
+    commit point of every publish. Readers resolving before this call see
+    the previous generation; after it, the new one."""
     hpath, fs = _fs(spark, path)
     out = fs.create(hpath(posixpath.join(path, _gen_name(n) + ".committed")),
                     True)
     out.close()
 
 
-def init_generation(spark: SparkSession, path: str) -> tuple[int, str]:
-    """Fresh-build target: clears any previous layout at `path` and returns
-    (1, gen-000001 dir). The caller writes data there, then calls
-    `commit_generation(spark, path, 1)`."""
+def _clear(spark: SparkSession, path: str) -> None:
     hpath, fs = _fs(spark, path)
     if fs.exists(hpath(path)) and not fs.delete(hpath(path), True):
         raise IOError(f"clearing {path} for rebuild failed")
-    return 1, posixpath.join(path, _gen_name(1))
 
 
 def gc_generations(spark: SparkSession, path: str, keep: int = 2) -> None:
@@ -139,36 +180,32 @@ def gc_generations(spark: SparkSession, path: str, keep: int = 2) -> None:
                 raise IOError(f"GC delete of flat {name} under {path} failed")
 
 
-def compact_partitioned(
+def publish(
     spark: SparkSession,
-    path: str,
-    partition_col: str,
-    num_partitions: int,
-) -> int:
-    """Rewrite a partitioned parquet table so each partition directory holds
-    ONE file (hash repartition by the partition column guarantees every
-    partition value lands in exactly one task), published as a new
-    generation. Returns the row count (materialized pre-commit, so a failed
-    rewrite leaves the previous generation live)."""
-    df = read_generation(spark, path).repartition(num_partitions, partition_col)
-    n_gen, dest = next_gen_dir(spark, path)
-    df.write.mode("overwrite").partitionBy(partition_col).parquet(dest)
-    n = spark.read.parquet(dest).count()
-    commit_generation(spark, path, n_gen)
-    gc_generations(spark, path)
-    return n
-
-
-def compact_plain(spark: SparkSession, path: str, num_files: int = 1) -> int:
-    """Rewrite an unpartitioned parquet table at `num_files` granularity,
-    published as a new generation."""
-    df = read_generation(spark, path).coalesce(num_files)
-    n_gen, dest = next_gen_dir(spark, path)
-    df.write.mode("overwrite").parquet(dest)
-    n = spark.read.parquet(dest).count()
-    commit_generation(spark, path, n_gen)
-    gc_generations(spark, path)
-    return n
+    root: str,
+    data: DataFrame | Callable[[str], None],
+    partition_col: str | None = None,
+    first: bool = False,
+) -> str:
+    """Write the next generation of the table at `root` (with `first`, the
+    first one, after clearing `root`), commit it with one marker create,
+    then GC. `data` is a DataFrame, written as parquet (partitioned by
+    `partition_col`), or a callable that fills the generation dir it is
+    given. The data may read the current generation: it materializes into
+    the next dir before the marker lands. Returns the committed dir."""
+    if first:
+        _clear(spark, root)
+    n, dest = next_gen_dir(spark, root)
+    if callable(data):
+        data(dest)
+    else:
+        w = data.write.mode("overwrite")
+        if partition_col is not None:
+            w = w.partitionBy(partition_col)
+        w.parquet(dest)
+    commit_generation(spark, root, n)
+    gc_generations(spark, root)
+    return dest
 
 
 def write_small_file(spark: SparkSession, path: str, data: bytes) -> None:
@@ -295,3 +332,124 @@ def parquet_file_count(path: str, spark: SparkSession | None = None) -> int:
         if name.endswith(".parquet") and not name.startswith("."):
             total += 1
     return total
+
+
+class PersistedIndex:
+    """Base of the persisted indexes: the lifecycle the module docstring
+    describes, keyed by a subclass's `META` (constructor parameters kept in
+    `meta.json`) and `_compaction()` (the tables compact() rewrites)."""
+
+    META: tuple[str, ...] = ()
+    GATE = "meta.json"  # the file load() reads; a build writes it last
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark = spark
+        self.path = path
+        self._schemas: dict[str, StructType] = {}  # generation dir → schema
+
+    # ------------------------------------------------------------ lifecycle
+
+    @classmethod
+    def _start_build(cls, spark: SparkSession, path: str, *args, **kwargs):
+        """Clear the index root (every table and sidecar file) and return
+        the new, empty index."""
+        _clear(spark, path)
+        return cls(spark, path, *args, **kwargs)
+
+    def _gate(self):
+        """The JSON payload of the gate file."""
+        return {k: getattr(self, k) for k in self.META}
+
+    def _finish_build(self):
+        """Write the gate file — the build's commit point."""
+        write_small_file(self.spark, posixpath.join(self.path, self.GATE),
+                         json.dumps(self._gate()).encode("utf-8"))
+        return self
+
+    @classmethod
+    def _read_gate(cls, spark: SparkSession, path: str):
+        return json.loads(read_small_file(spark, posixpath.join(path, cls.GATE)))
+
+    @classmethod
+    def load(cls, spark: SparkSession, path: str):
+        meta = cls._read_gate(spark, path)
+        return cls(spark, path, **{k: meta[k] for k in cls.META if k in meta})
+
+    # --------------------------------------------------------------- tables
+
+    def _root(self, name: str) -> str:
+        return posixpath.join(self.path, name)
+
+    def _table_dir(self, name: str) -> str:
+        return current_gen_dir(self.spark, self._root(name))
+
+    def _read(self, name: str, empty=None) -> DataFrame:
+        """Table `name`'s live generation. A layout without data files
+        reads as `empty`: a typed empty frame of that schema (DDL string
+        or StructType), or the frame a callable returns; with
+        `empty=None` it raises."""
+        gen = self._table_dir(name)
+        schema = self._schemas.get(gen)
+        if empty is None:
+            df = _reader(self.spark, schema).parquet(gen)
+        else:
+            df = read_or_none(self.spark, gen, schema)
+            if df is None:
+                return (empty() if callable(empty)
+                        else self.spark.createDataFrame([], empty))
+        self._schemas[gen] = df.schema
+        return df
+
+    def _publish(self, name: str, data, partition_col: str | None = None) -> str:
+        return publish(self.spark, self._root(name), data, partition_col)
+
+    def _write(self, name: str, df: DataFrame,
+               partition_col: str | None = None, build: bool = False) -> None:
+        """A build publishes `df` as table `name`'s first generation; an
+        add appends it into the live one."""
+        if build:
+            self._publish(name, df, partition_col)
+            return
+        w = df.write.mode("append")
+        if partition_col is not None:
+            w = w.partitionBy(partition_col)
+        w.parquet(self._table_dir(name))
+
+    @staticmethod
+    def _unindexed(df: DataFrame, key: str, stored: Callable[[], DataFrame],
+                   assume_new: bool) -> DataFrame:
+        """The re-add guard: `df` without the rows whose `key` is already
+        in `stored()`, so re-submitting an indexed item is a no-op instead
+        of a silent duplicate. It costs one distinct over the stored ids;
+        `assume_new=True` skips it when newness is guaranteed upstream
+        (e.g. by an `EpochLedger`)."""
+        if assume_new:
+            return df
+        return df.join(stored().select(key).distinct(), key, "left_anti")
+
+    # ---------------------------------------------------------- maintenance
+
+    def _compaction(self) -> tuple[tuple[str, str | None, int], ...]:
+        """(table, partition column or None, file count) for each table
+        compact() rewrites, in order."""
+        return ()
+
+    def _rewrite(self, name: str, df: DataFrame, partition_col: str | None,
+                 num_files: int) -> int:
+        """Publish `df` as table `name`'s next generation at `num_files`
+        files (per partition value, when partitioned); returns its rows."""
+        df = (df.repartition(num_files, partition_col) if partition_col
+              else df.coalesce(num_files))
+        return self.spark.read.parquet(
+            self._publish(name, df, partition_col)
+        ).count()
+
+    def compact(self) -> int:
+        """Rewrite each `_compaction()` table as a new generation after
+        many add() appends; a table without data files is skipped. Returns
+        the row count of the last table. Single-writer contract."""
+        n = 0
+        for name, part, files in self._compaction():
+            df = read_or_none(self.spark, self._table_dir(name))
+            n = 0 if df is None else self._rewrite(name, df, part, files)
+        return n

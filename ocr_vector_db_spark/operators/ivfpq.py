@@ -35,18 +35,16 @@ online graph.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_vector_db_spark.operators.ann_index import IVFIndex, _cos
+from ocr_vector_db_spark.operators.index_maint import PersistedIndex
 from ocr_vector_db_spark.operators.knn import knn_brute_force
 from ocr_vector_db_spark.operators.pq import PQIndex
 
 
-class IVFPQIndex:
+class IVFPQIndex(PersistedIndex):
     """Coarse KMeans quantizer + per-subspace PQ codebook over residuals."""
 
     def __init__(self, spark: SparkSession, path: str,
@@ -54,8 +52,7 @@ class IVFPQIndex:
                  l1: list[tuple[int, list[float]]] | None = None,
                  l2_to_l1: list[int] | None = None,
                  std_stats: list[tuple[float, float]] | None = None):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.centroids = centroids
         self.pq = pq
         # optional hierarchical coarse layer — IVFIndex parity (same
@@ -166,43 +163,29 @@ class IVFPQIndex:
             "cluster_id",
             pq.encode_col(F.col("__residual")).alias("pq_codes"),
         )
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-            write_small_file,
-        )
-
-        codes_root = os.path.join(path, "codes")
-        n_gen, dest = init_generation(spark, codes_root)
-        codes.write.mode("overwrite").partitionBy("cluster_id").parquet(dest)
-        commit_generation(spark, codes_root, n_gen)
-        write_small_file(
-            spark, os.path.join(path, "meta.json"),
-            json.dumps({"dim": dim, "m": m, "centroids": centroids,
-                        "codebooks": pq.codebooks,
-                        "std_stats": std_stats}).encode("utf-8"),
-        )
-        l1: list[tuple[int, list[float]]] = []
-        l2_to_l1: list[int] = []
+        idx = cls._start_build(spark, path, centroids, pq,
+                               std_stats=std_stats)
+        idx._write("codes", codes, "cluster_id", build=True)
         if l1_branches:
             from ocr_vector_db_spark.operators.ann_index import fit_hier_layer
 
-            l1, l2_to_l1 = fit_hier_layer(
+            idx.l1, idx.l2_to_l1 = fit_hier_layer(
                 spark, path, centroids, l1_branches, seed
             )
-        return cls(spark, path, centroids, pq, l1, l2_to_l1, std_stats)
+        return idx._finish_build()
+
+    def _gate(self):
+        return {"dim": self.pq.dim, "m": self.pq.m,
+                "centroids": self.centroids, "codebooks": self.pq.codebooks,
+                "std_stats": self.std_stats}
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IVFPQIndex":
-        from ocr_vector_db_spark.operators.index_maint import read_small_file
-
-        meta = json.loads(
-            read_small_file(spark, os.path.join(path, "meta.json"))
-        )
-        pq = PQIndex(meta["dim"], meta["m"], meta["codebooks"])
-        centroids = [(int(i), v) for i, v in meta["centroids"]]
         from ocr_vector_db_spark.operators.ann_index import load_hier_layer
 
+        meta = cls._read_gate(spark, path)
+        pq = PQIndex(meta["dim"], meta["m"], meta["codebooks"])
+        centroids = [(int(i), v) for i, v in meta["centroids"]]
         l1, l2_to_l1 = load_hier_layer(spark, path)
         std_stats = [
             (float(m_), float(s_)) for m_, s_ in meta.get("std_stats", [])
@@ -272,51 +255,28 @@ class IVFPQIndex:
         existing codes. Assign nearest existing centroid, encode the
         residual, append into the cluster-partitioned layout.
 
-        Re-add guard / ``assume_new`` escape / EpochLedger delegation:
-        IVFIndex.add parity. Single-writer contract. Returns the number
-        of vectors added."""
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        df = self._std_df(df, emb_col)  # raw → index space
-        if not assume_new:
-            indexed = self.codes().select(id_col).distinct()
-            df = df.join(indexed, id_col, "left_anti")
+        Re-add guard and ``assume_new``: IVFIndex.add parity.
+        Single-writer contract. Returns the number of vectors added."""
+        df = self._unindexed(self._std_df(df, emb_col), id_col, self.codes,
+                             assume_new)  # raw → index space
         codes = self._residual_codes(df, emb_col, id_col, branches).cache()
         try:
             # materialize BEFORE the append: the anti-join above reads the
             # codes path (same self-read hazard as IVFIndex.add)
             n = codes.count()
-            codes.write.mode("append").partitionBy("cluster_id").parquet(
-                current_gen_dir(self.spark, os.path.join(self.path, "codes"))
-            )
+            self._write("codes", codes, "cluster_id")
             return n
         finally:
             codes.unpersist()
 
-    # ---------------------------------------------------------- maintenance
-
-    def compact(self) -> int:
-        """Collapse each cluster partition to one file after many add()
-        appends (OPTIMIZE analogue; generation-pointer publish, see
-        operators/index_maint.py). Returns the code row count.
-        Single-writer contract."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            compact_partitioned,
-        )
-
-        return compact_partitioned(
-            self.spark, os.path.join(self.path, "codes"),
-            "cluster_id", max(len(self.centroids), 1),
-        )
+    def _compaction(self):
+        # each cluster partition to one file
+        return (("codes", "cluster_id", max(len(self.centroids), 1)),)
 
     # -------------------------------------------------------------- search
 
     def codes(self) -> DataFrame:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        return self.spark.read.parquet(
-            current_gen_dir(self.spark, os.path.join(self.path, "codes"))
-        )
+        return self._read("codes")
 
     def probe_clusters(self, query: list[float], nprobe: int,
                        branches: int | None = None) -> list[int]:

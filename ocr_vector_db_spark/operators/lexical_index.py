@@ -20,8 +20,8 @@ table whose physical layout prunes the scan down to the query's own terms:
 Building a search plan starts no Spark job; the caller's action is the
 only one. The bucket list is `pmod(xxhash64(lit(term)), n_buckets)` per
 term, which the optimizer folds into the scan's partition filter; the
-postings are read with the schema of this object's first read (no
-per-search schema inference); (N, avgdl) are literals, read on the driver
+postings are read with the schema of the first read of their generation
+(no per-search schema inference); (N, avgdl) are literals, read on the driver
 once per committed stats generation, so an add() by this or any other
 writer is seen by the next search. The postings listing stays serial (no
 job) while n_buckets ≤ spark.sql.sources.parallelPartitionDiscovery.threshold.
@@ -44,6 +44,7 @@ import os
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_vector_db_spark.operators.index_maint import PersistedIndex
 from ocr_vector_db_spark.operators.retrieval import (
     _bm25_score_cols,
     _dsum6,
@@ -71,6 +72,19 @@ def _postings_of(toks: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
+def _term_slice(postings: DataFrame, terms: list[str],
+                n_buckets: int) -> DataFrame:
+    """The postings rows of `terms`: the buckets' partition-pruned scan,
+    then the term filter. Each bucket is a foldable
+    `pmod(xxhash64(lit(term)), n_buckets)` — the hash `_postings_of` lays
+    out by — which the optimizer folds into the scan's partition filter, so
+    building the plan starts no Spark job."""
+    terms = sorted(set(terms))
+    buckets = [F.pmod(F.xxhash64(F.lit(t)), F.lit(n_buckets)) for t in terms]
+    return (postings.filter(F.col("bucket").isin(buckets))
+            .filter(F.col("term").isin(terms)))
+
+
 def _read_stats(spark: SparkSession, path: str) -> DataFrame:
     """Latest-committed stats read: resolve the current generation of the
     1-row stats table (see operators/index_maint.py — the commit marker is
@@ -83,12 +97,8 @@ def _read_stats(spark: SparkSession, path: str) -> DataFrame:
 def _commit_stats(
     spark: SparkSession, path: str, n_docs: int, total_dl: int, n_buckets: int
 ) -> tuple[str, Row]:
-    """Crash-safe replacement of the 1-row stats table: write the complete
-    new copy as the NEXT generation of `{path}/stats`, publish it with a
-    single atomic marker create, GC superseded generations. No live data is
-    ever renamed or deleted before its replacement is committed, so every
-    crash point (and every concurrent read) sees a complete committed
-    version — the previous one until the marker lands, the new one after.
+    """Publish a new 1-row stats table (`index_maint.publish`: every crash
+    point and every concurrent read sees a complete committed version).
 
     Single-writer contract: concurrent `add()` calls are NOT supported —
     the read-fold-commit cycle is not transactional, so a concurrent
@@ -98,31 +108,21 @@ def _commit_stats(
     avgdl is one double division of the exact integer total (the same IEEE
     op AVG() performs), so build(A∪B) ≡ build(A)+add(B) to the last bit.
     Returns (committed generation dir, the row written)."""
-    from ocr_vector_db_spark.operators.index_maint import (
-        commit_generation,
-        gc_generations,
-        next_gen_dir,
-    )
+    from ocr_vector_db_spark.operators.index_maint import publish
 
     row = Row(n_docs=n_docs, avgdl=total_dl / n_docs if n_docs else 0.0,
               n_buckets=n_buckets, total_dl=total_dl)
-    stats_root = os.path.join(path, "stats")
-    n, dest = next_gen_dir(spark, stats_root)
-    spark.createDataFrame(
+    dest = publish(spark, os.path.join(path, "stats"), spark.createDataFrame(
         [tuple(row)],
         "n_docs bigint, avgdl double, n_buckets int, total_dl bigint",
-    ).write.mode("overwrite").parquet(dest)
-    commit_generation(spark, stats_root, n)
-    gc_generations(spark, stats_root)
+    ))
     return dest, row
 
 
-class LexicalIndex:
+class LexicalIndex(PersistedIndex):
     def __init__(self, spark: SparkSession, path: str, n_buckets: int):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.n_buckets = n_buckets
-        self._postings_schema = None
         # (committed stats generation dir, its row) — see _stats_row()
         self._stats: tuple[str, Row] | None = None
 
@@ -138,22 +138,15 @@ class LexicalIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> "LexicalIndex":
-        """One tokenize pass → bucketed postings + 1-row corpus stats.
+        """One tokenize pass → bucketed postings + 1-row corpus stats (the
+        table load() gates on, committed last).
         `n_buckets` trades pruning granularity against file count: at
         100 TB use O(1k) buckets so a 5-term query reads ≤ 5 buckets
         (~0.5% of postings) while each bucket stays multi-file splittable."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-        )
-
         toks = _tokenized(docs, id_col, text_col)
-        postings_root = os.path.join(path, "postings")
-        n_gen, dest = init_generation(spark, postings_root)
-        _postings_of(toks, n_buckets).write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(dest)
-        commit_generation(spark, postings_root, n_gen)
+        idx = cls._start_build(spark, path, n_buckets)
+        idx._write("postings", _postings_of(toks, n_buckets), "bucket",
+                   build=True)
         # stats over ALL docs — a zero-token doc contributes dl=0 to avgdl
         # and counts in N, matching the scan path's semantics exactly (the
         # explode above would silently drop it). total_dl is kept as an
@@ -161,7 +154,6 @@ class LexicalIndex:
         row = toks.select(F.size("__ws").alias("dl")).agg(
             F.count("*").alias("n"), F.sum("dl").alias("s")
         ).head()
-        idx = cls(spark, path, n_buckets)
         idx._stats = _commit_stats(
             spark, path, int(row["n"]), int(row["s"] or 0), n_buckets
         )
@@ -180,9 +172,7 @@ class LexicalIndex:
         one — a filesystem listing, not a Spark job — is enough to notice
         it. A rebuild at the same path restarts the generations and needs
         a fresh load(), as it already does for n_buckets."""
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        gen = current_gen_dir(self.spark, os.path.join(self.path, "stats"))
+        gen = self._table_dir("stats")
         if self._stats is None or self._stats[0] != gen:
             self._stats = (gen, self.spark.read.parquet(gen).head())
         return self._stats[1]
@@ -202,22 +192,17 @@ class LexicalIndex:
         it from the pruned postings slice at query time, so it is always
         exact. Returns the number of docs actually added.
 
-        Re-add guard: incoming ids are anti-joined against the indexed ids
-        by default, so re-submitting an already-indexed doc is a no-op
-        instead of silently double-counting its postings and inflating
-        (N, avgdl, tf, df). The guard costs one distinct over the postings'
-        id column; pass ``assume_new=True`` to skip it when the pipeline
-        guarantees newness upstream (e.g. ingest already deduped on doc_id).
+        The re-add guard (`PersistedIndex._unindexed`; ``assume_new``
+        skips it) keeps a re-submitted doc from double-counting its
+        postings and inflating (N, avgdl, tf, df).
 
         Stats commit is crash-safe (`_commit_stats`); single-writer
         contract applies. If a crash lands between the postings append and
         the stats commit, the appended docs' (count, dl) fold is lost —
         stats go stale exactly the way the module docstring allows (search
         stays well-defined; `build()` restores exactness)."""
-        toks = _tokenized(docs, id_col, text_col)
-        if not assume_new:
-            indexed = self.postings().select("id").distinct()
-            toks = toks.join(indexed, "id", "left_anti")
+        toks = self._unindexed(_tokenized(docs, id_col, text_col), "id",
+                               self.postings, assume_new)
         toks = toks.cache()  # two consumers: postings append + stats fold
         try:
             # Materialize the batch (and its stats fold) BEFORE the append:
@@ -227,15 +212,8 @@ class LexicalIndex:
             new = toks.select(F.size("__ws").alias("dl")).agg(
                 F.count("*").alias("n"), F.sum("dl").alias("s")
             ).head()
-            from ocr_vector_db_spark.operators.index_maint import (
-                current_gen_dir,
-            )
-
-            _postings_of(toks, self.n_buckets).write.mode(
-                "append"
-            ).partitionBy("bucket").parquet(
-                current_gen_dir(self.spark, os.path.join(self.path, "postings"))
-            )
+            self._write("postings", _postings_of(toks, self.n_buckets),
+                        "bucket")
             old = self._stats_row()
             # exact integer fold — see build(): incremental ≡ full rebuild.
             # Indexes persisted before total_dl existed reconstruct it from
@@ -254,30 +232,14 @@ class LexicalIndex:
         finally:
             toks.unpersist()
 
-    # ---------------------------------------------------------- maintenance
-
-    def compact(self) -> int:
-        """Collapse each postings bucket to one file after many add()
-        appends (OPTIMIZE analogue; see operators/index_maint.py). Returns
-        the postings row count. Single-writer contract."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            compact_partitioned,
-        )
-
-        return compact_partitioned(
-            self.spark, os.path.join(self.path, "postings"),
-            "bucket", self.n_buckets,
-        )
+    def _compaction(self):
+        # each postings bucket to one file
+        return (("postings", "bucket", self.n_buckets),)
 
     # -------------------------------------------------------------- search
 
     def postings(self) -> DataFrame:
-        from ocr_vector_db_spark.operators.index_maint import read_generation
-
-        df = read_generation(self.spark, os.path.join(self.path, "postings"),
-                             self._postings_schema)
-        self._postings_schema = df.schema
-        return df
+        return self._read("postings")
 
     def stats(self) -> DataFrame:
         return _read_stats(self.spark, self.path).select("n_docs", "avgdl")
@@ -291,16 +253,8 @@ class LexicalIndex:
     ) -> DataFrame:
         """(id, bm25, rank) top-k — identical output contract (and scores)
         to retrieval.bm25_topk, but reading only the query terms' buckets."""
-        terms = sorted(set(t.lower() for t in query_terms))
-        # foldable per-term bucket expressions — the same hash _postings_of
-        # lays out by; the optimizer folds them into the partition filter
-        buckets = [F.pmod(F.xxhash64(F.lit(t)), F.lit(self.n_buckets))
-                   for t in terms]
-        pruned = (
-            self.postings()
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-        )
+        pruned = _term_slice(self.postings(),
+                             [t.lower() for t in query_terms], self.n_buckets)
         df_ = pruned.groupBy("term").agg(F.count("*").alias("df"))
         st = self._stats_row()
         scored = (

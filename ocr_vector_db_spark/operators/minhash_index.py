@@ -28,33 +28,110 @@ q20's SQL machinery restricted to cross-side pairs).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_vector_db_spark.operators.dedup import banded_of, minhash_signatures
+from ocr_vector_db_spark.operators.index_maint import PersistedIndex
 
 
-def _error_condition(exc) -> str | None:
-    """Spark 4 renamed getErrorClass → getCondition (FutureWarning);
-    support both."""
-    get = getattr(exc, "getCondition", None) or exc.getErrorClass
-    return get()
+class BandedSignatureIndex(PersistedIndex):
+    """A signature table (doc, …) plus its banding rows partitioned by
+    `bucket` — the layout MinHashIndex and SimHashIndex share. Subclasses
+    supply the signature function `_sig_expr(docs, id_col, text_col)`, the
+    band rows `_bands(sig)` and the band columns of an empty layout
+    (`BAND_COLS`, a DDL string)."""
+
+    def _build(self, docs: DataFrame, id_col: str, text_col: str):
+        # cache: _append consumes sig twice (bands + signatures writes);
+        # uncached, the signature pass would run twice
+        sig = self._sig_expr(docs, id_col, text_col).cache()
+        try:
+            sig.count()
+            self._append(sig, build=True)
+        finally:
+            sig.unpersist()
+        return self._finish_build()
+
+    def signatures(self) -> DataFrame:
+        return self._read("signatures")
+
+    def signatures_of(self, docs: DataFrame, id_col: str = "doc_id",
+                      text_col: str = "text") -> DataFrame:
+        """Public signatures-once seam: ONE signature DataFrame for a
+        batch, reusable (localCheckpoint it) across the batch's own
+        near-dup pass, `screen(sigs=)`, `dedup_new(sigs=)` and
+        `add(sigs=)` — the streaming gates hash each micro-batch once
+        instead of three times."""
+        return self._sig_expr(docs, id_col, text_col)
+
+    def bands_table(self) -> DataFrame:
+        # an EMPTY build's partitionBy write leaves no band files —
+        # synthesize the typed empty relation so screen()/add() work on a
+        # fresh index that the stream itself will populate
+        return self._read("bands", empty=lambda: self.spark.createDataFrame(
+            [], f"doc {self.signatures().schema['doc'].dataType.simpleString()}"
+                f", {self.BAND_COLS}"
+        ))
+
+    def _append(self, sig: DataFrame, build: bool = False) -> None:
+        """Bands FIRST, signatures second — deliberately. add()'s re-add
+        anti-join reads {path}/signatures, and Spark invalidates cached
+        plans that reference a path when that path is written; writing
+        signatures first would therefore recompute `sig` for the bands
+        write WITH the batch already appended, anti-join everything away,
+        and silently write zero band rows. The bands path is not read by
+        the plan, so its write leaves the cache intact. (Crash between the
+        two appends leaves band rows whose signatures are missing: they
+        can never produce a screen hit — the signature join is inner — and
+        the re-add guard keys on signatures, so a retried add() re-appends
+        the batch cleanly; duplicate band rows collapse in screen()'s
+        dropDuplicates.)"""
+        self._write("bands", self._bands(sig), "bucket", build)
+        self._write("signatures", sig, build=build)
+
+    def add(
+        self,
+        docs: DataFrame | None = None,
+        id_col: str = "doc_id",
+        text_col: str = "text",
+        assume_new: bool = False,
+        sigs: DataFrame | None = None,
+    ) -> int:
+        """Append a batch's signatures + bands behind the re-add guard
+        (`assume_new` skips it; streaming ingestion at scale delegates
+        replay safety to `index_maint.EpochLedger`, see
+        `streaming.pipeline.stream_ingest_deduped`). Returns the number of
+        docs added. Precomputed `sigs` (a `signatures_of` result) skip
+        re-hashing `docs`. Single-writer contract."""
+        sig = sigs if sigs is not None else self._sig_expr(
+            docs, id_col, text_col
+        )
+        sig = self._unindexed(sig, "doc", self.signatures, assume_new).cache()
+        try:
+            n = sig.count()  # materialize before the append (self-read)
+            self._append(sig)
+            return n
+        finally:
+            sig.unpersist()
+
+    def _compaction(self):
+        # each band bucket to one file, the signatures to a bounded count
+        return (("bands", "bucket", self.n_buckets),
+                ("signatures", None, max(self.n_buckets // 4, 1)))
 
 
-class MinHashIndex:
+class MinHashIndex(BandedSignatureIndex):
+    META = ("num_hashes", "bands", "n", "n_buckets")
+    BAND_COLS = "band_id int, band_hash string, bucket bigint"
+
     def __init__(self, spark: SparkSession, path: str, num_hashes: int,
                  bands: int, n: int, n_buckets: int):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.num_hashes = num_hashes
         self.bands = bands
         self.n = n
         self.n_buckets = n_buckets
-
-    # --------------------------------------------------------------- build
 
     @classmethod
     def build(
@@ -70,186 +147,18 @@ class MinHashIndex:
         text_col: str = "text",
     ) -> "MinHashIndex":
         assert num_hashes % bands == 0
-        idx = cls(spark, path, num_hashes, bands, n, n_buckets)
-        # cache: _append consumes sig twice (bands + signatures writes);
-        # uncached, the shingle explode + K MIN aggs would run twice
-        sig = minhash_signatures(docs, num_hashes, n, text_col, id_col).cache()
-        try:
-            sig.count()
-            idx._append(sig, overwrite=True)
-        finally:
-            sig.unpersist()
-        # Hadoop FS, not open(): the data layout is already fs-portable
-        # (local/HDFS); the meta file must not pin the index to local disk
-        from ocr_vector_db_spark.operators.index_maint import write_small_file
+        return cls._start_build(
+            spark, path, num_hashes, bands, n, n_buckets
+        )._build(docs, id_col, text_col)
 
-        write_small_file(
-            spark, os.path.join(path, "meta.json"),
-            json.dumps({"num_hashes": num_hashes, "bands": bands, "n": n,
-                        "n_buckets": n_buckets}).encode("utf-8"),
-        )
-        return idx
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "MinHashIndex":
-        from ocr_vector_db_spark.operators.index_maint import read_small_file
-
-        m = json.loads(
-            read_small_file(spark, os.path.join(path, "meta.json"))
-        )
-        return cls(spark, path, m["num_hashes"], m["bands"], m["n"],
-                   m["n_buckets"])
-
-    def _table_dir(self, name: str) -> str:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        return current_gen_dir(self.spark, os.path.join(self.path, name))
-
-    def signatures(self) -> DataFrame:
-        return self.spark.read.parquet(self._table_dir("signatures"))
-
-    def signatures_of(self, docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
-        """Public signatures-once seam (SimHashIndex parity): ONE
-        (doc, mh_0..mh_{K-1}) DataFrame for a batch, reusable
-        (localCheckpoint it) across `dedup.minhash_dropped_ids(sigs=)`,
-        `screen(sigs=)`, `dedup_new(sigs=)` and `add(sigs=)` — the
-        streaming text gate shingles+hashes each micro-batch exactly
-        once instead of three times."""
+    def _sig_expr(self, docs: DataFrame, id_col: str,
+                  text_col: str) -> DataFrame:
         return minhash_signatures(docs, self.num_hashes, self.n,
                                   text_col, id_col)
 
-    def bands_table(self) -> DataFrame:
-        from pyspark.errors import AnalysisException
-        from pyspark.sql import types as T
-
-        try:
-            return self.spark.read.parquet(self._table_dir("bands"))
-        except AnalysisException as exc:
-            # an EMPTY build's partitionBy write leaves no files at all
-            # (nothing to infer a schema from) — synthesize the typed empty
-            # relation so screen()/add() work on a fresh index that the
-            # stream itself will populate. ONLY those two error classes
-            # qualify: any other read failure (corrupt layout, lost swap)
-            # must raise — an empty bands table silently disables the
-            # dedup gate, which is far worse than crashing.
-            if _error_condition(exc) not in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise
-            doc_t = self.signatures().schema["doc"].dataType
-            return self.spark.createDataFrame([], T.StructType([
-                T.StructField("doc", doc_t),
-                T.StructField("band_id", T.IntegerType()),
-                T.StructField("band_hash", T.StringType()),
-                T.StructField("bucket", T.LongType()),
-            ]))
-
-    def _append(self, sig: DataFrame, overwrite: bool = False) -> None:
-        """Bands FIRST, signatures second — deliberately. add()'s re-add
-        anti-join reads {path}/signatures, and Spark invalidates cached
-        plans that reference a path when that path is written; writing
-        signatures first would therefore recompute `sig` for the bands
-        write WITH the batch already appended, anti-join everything away,
-        and silently write zero band rows. The bands path is not read by
-        the plan, so its write leaves the cache intact. (Crash between the
-        two appends leaves band rows whose signatures are missing: they
-        can never produce a screen hit — the signature join is inner — and
-        the re-add guard keys on signatures, so a retried add() re-appends
-        the batch cleanly; duplicate band rows collapse in screen()'s
-        dropDuplicates.)
-
-        Layout versioning: build() targets a fresh generation-1 directory
-        per table and publishes it with an atomic commit marker; add()
-        appends INTO the live generation (see operators/index_maint.py —
-        compaction publishes later generations the same way, so readers
-        never see a half-swapped path)."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-        )
-
-        bands_root = os.path.join(self.path, "bands")
-        sigs_root = os.path.join(self.path, "signatures")
-        if overwrite:
-            _, bands_dest = init_generation(self.spark, bands_root)
-            _, sigs_dest = init_generation(self.spark, sigs_root)
-        else:
-            bands_dest = self._table_dir("bands")
-            sigs_dest = self._table_dir("signatures")
-        mode = "overwrite" if overwrite else "append"
-        banded = banded_of(sig, self.num_hashes, self.bands).withColumn(
+    def _bands(self, sig: DataFrame) -> DataFrame:
+        return banded_of(sig, self.num_hashes, self.bands).withColumn(
             "bucket", F.pmod(F.xxhash64("band_hash"), F.lit(self.n_buckets))
-        )
-        banded.write.mode(mode).partitionBy("bucket").parquet(bands_dest)
-        sig.write.mode(mode).parquet(sigs_dest)
-        if overwrite:
-            commit_generation(self.spark, bands_root, 1)
-            commit_generation(self.spark, sigs_root, 1)
-
-    # ------------------------------------------------------------ increment
-
-    def add(
-        self,
-        docs: DataFrame | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        assume_new: bool = False,
-        sigs: DataFrame | None = None,
-    ) -> int:
-        """Append a batch's signatures + bands (LexicalIndex.add parity:
-        anti-join re-add guard, `assume_new` escape, single-writer
-        contract). Returns the number of docs added. Precomputed `sigs`
-        (a `signatures_of` result) skip re-shingling `docs`.
-
-        The default guard reads the stored id set per call — O(corpus).
-        Streaming ingestion at scale should pass ``assume_new=True`` and
-        delegate replay safety to `index_maint.EpochLedger` (see
-        `streaming.pipeline.stream_ingest_deduped`), which pays the
-        guarded anti-join only when retrying a crashed epoch."""
-        sig = sigs if sigs is not None else minhash_signatures(
-            docs, self.num_hashes, self.n, text_col, id_col
-        )
-        if not assume_new:
-            indexed = self.signatures().select("doc").distinct()
-            sig = sig.join(indexed, "doc", "left_anti")
-        sig = sig.cache()
-        try:
-            n = sig.count()  # materialize before the append (self-read)
-            self._append(sig)
-            return n
-        finally:
-            sig.unpersist()
-
-    # ---------------------------------------------------------- maintenance
-
-    def compact(self) -> int:
-        """Collapse each band bucket to one file and the signature table to
-        a bounded file count after many add() appends (OPTIMIZE analogue;
-        see operators/index_maint.py). Returns the signature row count.
-        Single-writer contract."""
-        from pyspark.errors import AnalysisException
-
-        from ocr_vector_db_spark.operators.index_maint import (
-            compact_partitioned,
-            compact_plain,
-        )
-
-        try:
-            compact_partitioned(
-                self.spark, os.path.join(self.path, "bands"),
-                "bucket", self.n_buckets,
-            )
-        except AnalysisException as exc:
-            # an empty build leaves no band files (see bands_table) —
-            # nothing to compact; anything else must surface
-            if _error_condition(exc) not in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise
-        return compact_plain(
-            self.spark, os.path.join(self.path, "signatures"),
-            max(self.n_buckets // 4, 1),
         )
 
     # -------------------------------------------------------------- screen
@@ -279,12 +188,10 @@ class MinHashIndex:
         # the stored bands scan to the batch's own buckets (test_plan_shapes
         # gates it on q105) — at 100 TB the pruned index scan is worth far
         # more than one batch re-hash.
-        new_sig = sigs if sigs is not None else minhash_signatures(
-            new_docs, self.num_hashes, self.n, text_col, id_col
+        new_sig = sigs if sigs is not None else self._sig_expr(
+            new_docs, id_col, text_col
         )
-        new_banded = banded_of(new_sig, self.num_hashes, self.bands).withColumn(
-            "bucket", F.pmod(F.xxhash64("band_hash"), F.lit(self.n_buckets))
-        )
+        new_banded = self._bands(new_sig)
         cand = (
             new_banded.alias("x")
             .join(self.bands_table().alias("y"),

@@ -54,9 +54,6 @@ members pair at est 1.0, agreeing on all slots).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,7 +62,7 @@ from ocr_vector_db_spark.operators.dedup import (
     components_from_collapsed,
     minhash_signatures,
 )
-from ocr_vector_db_spark.operators.minhash_index import _error_condition
+from ocr_vector_db_spark.operators.index_maint import PersistedIndex
 
 
 def _sig_key_col(num_hashes: int):
@@ -74,11 +71,12 @@ def _sig_key_col(num_hashes: int):
     return F.md5(F.concat_ws("\x1f", *[f"mh_{i}" for i in range(num_hashes)]))
 
 
-class NearDupPairIndex:
+class NearDupPairIndex(PersistedIndex):
+    META = ("num_hashes", "bands", "n", "n_buckets")
+
     def __init__(self, spark: SparkSession, path: str, num_hashes: int,
                  bands: int, n: int, n_buckets: int):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.num_hashes = num_hashes
         self.bands = bands
         self.n = n
@@ -100,13 +98,7 @@ class NearDupPairIndex:
         text_col: str = "text",
     ) -> "NearDupPairIndex":
         assert num_hashes % bands == 0
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-            write_small_file,
-        )
-
-        idx = cls(spark, path, num_hashes, bands, n, n_buckets)
+        idx = cls._start_build(spark, path, num_hashes, bands, n, n_buckets)
         # cache: members / rep_sigs / bands / pairs all derive from the one
         # shingle+hash pass — uncached it would run four times
         sig = (
@@ -118,75 +110,33 @@ class NearDupPairIndex:
             sig.count()
             rep_sigs = sig.dropDuplicates(["sig_key"]).drop("doc")
             bands_df = idx._bands_of(rep_sigs)
-            pairs = idx._pairs_of(rep_sigs, bands_df)
-            for name, df, part in (
-                ("members", sig.select("doc", "sig_key"), None),
-                ("rep_sigs", rep_sigs, None),
-                ("rep_bands", bands_df, "bucket"),
-                ("pairs", pairs, None),
-            ):
-                root = os.path.join(path, name)
-                _, dest = init_generation(spark, root)
-                w = df.write.mode("overwrite")
-                if part:
-                    w = w.partitionBy(part)
-                w.parquet(dest)
-                commit_generation(spark, root, 1)
+            idx._write("members", sig.select("doc", "sig_key"), build=True)
+            idx._write("rep_sigs", rep_sigs, build=True)
+            idx._write("rep_bands", bands_df, "bucket", build=True)
+            idx._write("pairs", idx._pairs_of(rep_sigs, bands_df), build=True)
         finally:
             sig.unpersist()
-        write_small_file(
-            spark, os.path.join(path, "meta.json"),
-            json.dumps({"num_hashes": num_hashes, "bands": bands, "n": n,
-                        "n_buckets": n_buckets}).encode("utf-8"),
-        )
-        return idx
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "NearDupPairIndex":
-        from ocr_vector_db_spark.operators.index_maint import read_small_file
-
-        m = json.loads(read_small_file(spark, os.path.join(path, "meta.json")))
-        return cls(spark, path, m["num_hashes"], m["bands"], m["n"],
-                   m["n_buckets"])
+        return idx._finish_build()
 
     # ------------------------------------------------------------- plumbing
 
-    def _table_dir(self, name: str) -> str:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        return current_gen_dir(self.spark, os.path.join(self.path, name))
-
-    def _read_or_empty(self, name: str, schema_ddl: str) -> DataFrame:
-        """Read a stored table; a file-less layout (empty partitionBy write,
-        or an empty pairs table) synthesizes the typed empty relation. Only
-        the two no-files error classes qualify — anything else (corrupt
-        layout, lost generation swap) must raise, exactly like
-        MinHashIndex.bands_table."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            return self.spark.read.parquet(self._table_dir(name))
-        except AnalysisException as exc:
-            if _error_condition(exc) not in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise
-            return self.spark.createDataFrame([], schema_ddl)
-
     def members(self) -> DataFrame:
-        return self.spark.read.parquet(self._table_dir("members"))
+        return self._read("members")
 
     def rep_sigs(self) -> DataFrame:
-        return self.spark.read.parquet(self._table_dir("rep_sigs"))
+        return self._read("rep_sigs")
+
+    # file-less layouts (an empty partitionBy write, or an empty pairs
+    # table) read as the typed empty relation
 
     def bands_table(self) -> DataFrame:
-        return self._read_or_empty(
+        return self._read(
             "rep_bands",
             "sig_key string, band_id int, band_hash string, bucket bigint",
         )
 
     def pairs(self) -> DataFrame:
-        return self._read_or_empty(
+        return self._read(
             "pairs", "key_a string, key_b string, est_jaccard double"
         )
 
@@ -276,10 +226,7 @@ class NearDupPairIndex:
             docs, self.num_hashes, self.n, text_col, id_col
         )
         sig = sig.withColumn("sig_key", _sig_key_col(self.num_hashes))
-        if not assume_new:
-            indexed = self.members().select("doc").distinct()
-            sig = sig.join(indexed, "doc", "left_anti")
-        sig = sig.cache()
+        sig = self._unindexed(sig, "doc", self.members, assume_new).cache()
         new_rep = None
         try:
             n = sig.count()  # materialize before any append (self-read)
@@ -297,14 +244,10 @@ class NearDupPairIndex:
             all_bands = self.bands_table().unionByName(new_bands)
             all_sigs = self.rep_sigs().unionByName(new_rep)
             new_pairs = self._pairs_of(all_sigs, new_bands, all_bands)
-            new_pairs.write.mode("append").parquet(self._table_dir("pairs"))
-            new_bands.write.mode("append").partitionBy("bucket").parquet(
-                self._table_dir("rep_bands")
-            )
-            new_rep.write.mode("append").parquet(self._table_dir("rep_sigs"))
-            sig.select("doc", "sig_key").write.mode("append").parquet(
-                self._table_dir("members")
-            )
+            self._write("pairs", new_pairs)
+            self._write("rep_bands", new_bands, "bucket")
+            self._write("rep_sigs", new_rep)
+            self._write("members", sig.select("doc", "sig_key"))
             return n
         finally:
             sig.unpersist()
@@ -313,39 +256,11 @@ class NearDupPairIndex:
 
     # ---------------------------------------------------------- maintenance
 
-    def compact(self) -> int:
-        """Collapse each table to a bounded file count after many add()
-        appends (OPTIMIZE analogue; operators/index_maint.py). Returns the
-        members row count. Single-writer contract."""
-        from pyspark.errors import AnalysisException
-
-        from ocr_vector_db_spark.operators.index_maint import (
-            compact_partitioned,
-            compact_plain,
-        )
-
-        try:
-            compact_partitioned(
-                self.spark, os.path.join(self.path, "rep_bands"),
-                "bucket", self.n_buckets,
-            )
-        except AnalysisException as exc:
-            if _error_condition(exc) not in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise
+    def _compaction(self):
         small = max(self.n_buckets // 4, 1)
-        for name in ("pairs", "rep_sigs"):
-            try:
-                compact_plain(self.spark, os.path.join(self.path, name), small)
-            except AnalysisException as exc:
-                if _error_condition(exc) not in (
-                    "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-                ):
-                    raise
-        return compact_plain(
-            self.spark, os.path.join(self.path, "members"), small
-        )
+        return (("rep_bands", "bucket", self.n_buckets),
+                ("pairs", None, small), ("rep_sigs", None, small),
+                ("members", None, small))
 
     # -------------------------------------------------------------- serving
 

@@ -46,11 +46,10 @@ lose a stats fold — serialize index updates.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_vector_db_spark.operators.index_maint import PersistedIndex
 from ocr_vector_db_spark.operators.ngram_lm import _tokens_arr, adjacent_bigrams
 
 
@@ -83,15 +82,14 @@ def _unigram_counts_of(docs: DataFrame, text_col: str,
     )
 
 
-class NgramLMIndex:
+class NgramLMIndex(PersistedIndex):
     """Persisted add-one-smoothed bigram LM with incremental count folds."""
 
     STATS_SCHEMA = ("vocab bigint, n_tokens bigint, n_bigrams bigint, "
                     "n_docs bigint, n_buckets int")
 
     def __init__(self, spark: SparkSession, path: str, n_buckets: int):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.n_buckets = n_buckets
 
     # --------------------------------------------------------------- build
@@ -106,29 +104,17 @@ class NgramLMIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> "NgramLMIndex":
-        """One tokenize pass → bucketed pair + unigram counts, 1-row stats,
-        doc-id ledger. `n_buckets` trades pruning granularity against file
-        count exactly like LexicalIndex (O(1k) at 100 TB)."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-        )
-
-        idx = cls(spark, path, n_buckets)
-        for sub, df, part in (
-            ("pairs", _pair_counts_of(docs, id_col, text_col, n_buckets),
-             "bucket"),
-            ("unigrams", _unigram_counts_of(docs, text_col, n_buckets),
-             "ubucket"),
-            ("docs", docs.select(F.col(id_col).alias("id")), None),
-        ):
-            root = os.path.join(path, sub)
-            n_gen, dest = init_generation(spark, root)
-            w = df.write.mode("overwrite")
-            if part:
-                w = w.partitionBy(part)
-            w.parquet(dest)
-            commit_generation(spark, root, n_gen)
+        """One tokenize pass → bucketed pair + unigram counts, doc-id
+        ledger, then the 1-row stats (the table load() gates on).
+        `n_buckets` trades pruning granularity against file count exactly
+        like LexicalIndex (O(1k) at 100 TB)."""
+        idx = cls._start_build(spark, path, n_buckets)
+        idx._write("pairs", _pair_counts_of(docs, id_col, text_col, n_buckets),
+                   "bucket", build=True)
+        idx._write("unigrams", _unigram_counts_of(docs, text_col, n_buckets),
+                   "ubucket", build=True)
+        idx._write("docs", docs.select(F.col(id_col).alias("id")),
+                   build=True)
         # exact integer stats from the just-written layouts (reading back
         # beats recomputing the token stream a third time)
         uni = idx.unigrams()
@@ -136,12 +122,11 @@ class NgramLMIndex:
         nbg = int(
             idx.pairs().agg(F.sum("cnt").alias("s")).head()["s"] or 0
         )
-        stats = spark.createDataFrame(
+        idx._publish("stats", spark.createDataFrame(
             [(int(row["v"]), int(row["s"] or 0), nbg, docs.count(),
               n_buckets)],
             cls.STATS_SCHEMA,
-        )
-        idx._commit_stats(stats)
+        ))
         return idx
 
     @classmethod
@@ -152,37 +137,17 @@ class NgramLMIndex:
 
     # ---------------------------------------------------------------- reads
 
-    def _gen(self, sub: str) -> str:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        return current_gen_dir(self.spark, os.path.join(self.path, sub))
-
     def pairs(self) -> DataFrame:
-        return self.spark.read.parquet(self._gen("pairs"))
+        return self._read("pairs")
 
     def unigrams(self) -> DataFrame:
-        return self.spark.read.parquet(self._gen("unigrams"))
+        return self._read("unigrams")
 
     def doc_ids(self) -> DataFrame:
-        return self.spark.read.parquet(self._gen("docs"))
+        return self._read("docs")
 
     def stats(self) -> DataFrame:
-        return self.spark.read.parquet(self._gen("stats"))
-
-    def _commit_stats(self, new_stats: DataFrame) -> None:
-        """Crash-safe 1-row stats replacement (LexicalIndex discipline:
-        write next generation, publish with one atomic marker, GC)."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            gc_generations,
-            next_gen_dir,
-        )
-
-        root = os.path.join(self.path, "stats")
-        n, dest = next_gen_dir(self.spark, root)
-        new_stats.write.mode("overwrite").parquet(dest)
-        commit_generation(self.spark, root, n)
-        gc_generations(self.spark, root)
+        return self._read("stats")
 
     # ------------------------------------------------------------ increment
 
@@ -201,17 +166,14 @@ class NgramLMIndex:
         the indexed vocab, partition-pruned to the batch tokens' own
         ubuckets — an exact integer fold, so incremental ≡ full rebuild.
 
-        Re-add guard (default): incoming ids anti-join the doc ledger so a
-        re-submitted doc is a no-op instead of double-counting; pass
-        ``assume_new=True`` when the pipeline dedupes upstream. Crash
-        between the count appends and the stats commit loses only the
-        stats fold (scores drift the way stale avgdl does for BM25;
+        The re-add guard checks the doc ledger (``assume_new`` skips it).
+        Crash between the count appends and the stats commit loses only
+        the stats fold (scores drift the way stale avgdl does for BM25;
         ``build()`` restores exactness). Returns docs actually added."""
-        if not assume_new:
-            docs = docs.join(
-                self.doc_ids().withColumnRenamed("id", id_col),
-                id_col, "left_anti",
-            )
+        docs = self._unindexed(
+            docs, id_col,
+            lambda: self.doc_ids().withColumnRenamed("id", id_col), assume_new,
+        )
         docs = docs.cache()  # consumers: 2 count layouts + ledger + stats
         try:
             n_new = docs.count()  # pins the cache pre-append
@@ -237,24 +199,19 @@ class NgramLMIndex:
                     .join(indexed_toks, "tok", "left_anti")
                     .count()
                 )
-                new_uni.write.mode("append").partitionBy("ubucket").parquet(
-                    self._gen("unigrams")
-                )
+                self._write("unigrams", new_uni, "ubucket")
             finally:
                 new_uni.unpersist()
             pc = _pair_counts_of(docs, id_col, text_col, self.n_buckets).cache()
             try:
                 nbg_new = int(pc.agg(F.sum("cnt").alias("s")).head()["s"] or 0)
-                pc.write.mode("append").partitionBy("bucket").parquet(
-                    self._gen("pairs")
-                )
+                self._write("pairs", pc, "bucket")
             finally:
                 pc.unpersist()
-            docs.select(F.col(id_col).alias("id")).write.mode("append").parquet(
-                self._gen("docs")
-            )
+            self._write("docs", docs.select(F.col(id_col).alias("id")))
             old = self.stats().head()
-            self._commit_stats(
+            self._publish(
+                "stats",
                 self.spark.createDataFrame(
                     [(
                         int(old["vocab"]) + int(vocab_delta),
@@ -275,34 +232,15 @@ class NgramLMIndex:
     def compact(self) -> int:
         """Fold the appended count rows: re-aggregate each table so every
         (pair)/(tok) key holds ONE row and each bucket ONE file, published
-        as new generations (OPTIMIZE analogue; scores are unchanged because
-        reads always fold). Returns the pair-table row count."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            compact_plain,
-            gc_generations,
-            next_gen_dir,
-        )
-
-        n_pairs = 0
-        for sub, keys, part in (
-            ("pairs", ["tok_a", "tok_b"], "bucket"),
-            ("unigrams", ["tok"], "ubucket"),
-        ):
-            root = os.path.join(self.path, sub)
-            folded = (
-                self.spark.read.parquet(self._gen(sub))
-                .groupBy(part, *keys).agg(F.sum("cnt").alias("cnt"))
-                .repartition(self.n_buckets, part)
-            )
-            n_gen, dest = next_gen_dir(self.spark, root)
-            folded.write.mode("overwrite").partitionBy(part).parquet(dest)
-            n = self.spark.read.parquet(dest).count()
-            commit_generation(self.spark, root, n_gen)
-            gc_generations(self.spark, root)
-            if sub == "pairs":
-                n_pairs = n
-        compact_plain(self.spark, os.path.join(self.path, "docs"))
+        as new generations (scores are unchanged because reads always
+        fold). Returns the pair-table row count."""
+        n_pairs = self._rewrite("pairs", self.pairs().groupBy(
+            "bucket", "tok_a", "tok_b").agg(F.sum("cnt").alias("cnt")),
+            "bucket", self.n_buckets)
+        self._rewrite("unigrams", self.unigrams().groupBy("ubucket", "tok")
+                      .agg(F.sum("cnt").alias("cnt")),
+                      "ubucket", self.n_buckets)
+        self._rewrite("docs", self.doc_ids(), None, 1)
         return n_pairs
 
     # ------------------------------------------------------------------ pmi

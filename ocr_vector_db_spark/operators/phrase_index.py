@@ -27,12 +27,11 @@ DuckDB oracle can re-derive every hit from the raw text (q131).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_vector_db_spark.operators.minhash_index import _error_condition
+from ocr_vector_db_spark.operators.index_maint import PersistedIndex
+from ocr_vector_db_spark.operators.lexical_index import _term_slice
 from ocr_vector_db_spark.operators.tfidf import words_col
 
 
@@ -52,10 +51,11 @@ def _positional_postings(
     )
 
 
-class PositionalIndex:
+class PositionalIndex(PersistedIndex):
+    META = ("n_buckets",)
+
     def __init__(self, spark: SparkSession, path: str, n_buckets: int):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.n_buckets = n_buckets
 
     # --------------------------------------------------------------- build
@@ -70,62 +70,21 @@ class PositionalIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> "PositionalIndex":
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-            write_small_file,
+        idx = cls._start_build(spark, path, n_buckets)
+        idx._write(
+            "postings",
+            _positional_postings(docs, n_buckets, id_col, text_col),
+            "bucket", build=True,
         )
-
-        root = os.path.join(path, "postings")
-        n_gen, dest = init_generation(spark, root)
-        _positional_postings(docs, n_buckets, id_col, text_col).write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(dest)
-        commit_generation(spark, root, n_gen)
-        import json
-
-        write_small_file(
-            spark, os.path.join(path, "meta.json"),
-            json.dumps({"n_buckets": n_buckets}).encode("utf-8"),
-        )
-        return cls(spark, path, n_buckets)
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "PositionalIndex":
-        import json
-
-        from ocr_vector_db_spark.operators.index_maint import read_small_file
-
-        meta = json.loads(
-            read_small_file(spark, os.path.join(path, "meta.json"))
-        )
-        return cls(spark, path, meta["n_buckets"])
+        return idx._finish_build()
 
     # ---------------------------------------------------------------- reads
 
     def postings(self) -> DataFrame:
-        from pyspark.errors import AnalysisException
-        from pyspark.sql import types as T
-
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        try:
-            return self.spark.read.parquet(
-                current_gen_dir(self.spark, os.path.join(self.path, "postings"))
-            )
-        except AnalysisException as exc:
-            # empty build wrote no files — typed empty relation, same two
-            # qualifying conditions as the other index families
-            if _error_condition(exc) not in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise
-            return self.spark.createDataFrame([], T.StructType([
-                T.StructField("id", T.LongType()),
-                T.StructField("term", T.StringType()),
-                T.StructField("pos", T.IntegerType()),
-                T.StructField("bucket", T.LongType()),
-            ]))
+        # an empty build wrote no files — typed empty relation
+        return self._read(
+            "postings", empty="id bigint, term string, pos int, bucket bigint"
+        )
 
     # ------------------------------------------------------------ increment
 
@@ -137,52 +96,28 @@ class PositionalIndex:
         assume_new: bool = False,
     ) -> int:
         """Append a batch's positional postings (LexicalIndex.add parity:
-        anti-join re-add guard, ``assume_new`` escape, single-writer).
-        Returns docs added. No stats to fold — nothing can go stale."""
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        batch = docs.select(F.col(id_col).alias("id"), F.col(text_col)
-                            .alias("__text"))
-        if not assume_new:
-            indexed = self.postings().select("id").distinct()
-            batch = batch.join(indexed, "id", "left_anti")
-        batch = batch.cache()
+        re-add guard, single-writer). Returns docs added. No stats to
+        fold — nothing can go stale."""
+        batch = self._unindexed(
+            docs.select(F.col(id_col).alias("id"),
+                        F.col(text_col).alias("__text")),
+            "id", self.postings, assume_new,
+        ).cache()
         try:
             n = batch.select("id").distinct().count()  # pin pre-append
-            _positional_postings(
-                batch, self.n_buckets, "id", "__text"
-            ).write.mode("append").partitionBy("bucket").parquet(
-                current_gen_dir(self.spark, os.path.join(self.path, "postings"))
+            self._write(
+                "postings",
+                _positional_postings(batch, self.n_buckets, "id", "__text"),
+                "bucket",
             )
             return n
         finally:
             batch.unpersist()
 
-    def compact(self) -> int:
-        from ocr_vector_db_spark.operators.index_maint import (
-            compact_partitioned,
-        )
-
-        return compact_partitioned(
-            self.spark, os.path.join(self.path, "postings"),
-            "bucket", self.n_buckets,
-        )
+    def _compaction(self):
+        return (("postings", "bucket", self.n_buckets),)
 
     # -------------------------------------------------------------- search
-
-    def _pruned(self, terms: list[str]) -> DataFrame:
-        buckets = sorted({
-            r.b for r in self.spark.createDataFrame(
-                [(t,) for t in sorted(set(terms))], "term string"
-            ).select(
-                F.pmod(F.xxhash64("term"), F.lit(self.n_buckets)).alias("b")
-            ).collect()
-        })
-        return (
-            self.postings()
-            .filter(F.col("bucket").isin(buckets))
-            .filter(F.col("term").isin(sorted(set(terms))))
-        )
 
     def phrase_search(self, phrase: str, k: int = 10) -> DataFrame:
         """(id, n_hits, first_pos, rank): docs containing the EXACT token
@@ -199,7 +134,7 @@ class PositionalIndex:
         # each term re-filters the pruned scan: n small partition-pruned
         # parquet reads (one per phrase term), kept lazy so the returned
         # plan is self-contained
-        pruned = self._pruned(terms)
+        pruned = _term_slice(self.postings(), terms, self.n_buckets)
         hits = (
             pruned.filter(F.col("term") == terms[0])
             .select("id", F.col("pos").alias("p0"))

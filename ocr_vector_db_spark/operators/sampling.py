@@ -131,21 +131,13 @@ class RunningSample:
         """Fold one accepted batch and publish the new sample as the next
         generation (atomic marker commit; readers always see a complete
         k-row sample — the previous one until the marker lands)."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            gc_generations,
-            next_gen_dir,
-        )
+        from ocr_vector_db_spark.operators.index_maint import publish
 
         new = fold_sample(
             self.current(), batch, self.k, self.weight_col,
             id_col=self.id_col, salt=self.salt,
         )
-        n_gen, dest = next_gen_dir(self.spark, self.path)
-        # ≤ k rows: one file
-        new.coalesce(1).write.mode("overwrite").parquet(dest)
-        commit_generation(self.spark, self.path, n_gen)
-        gc_generations(self.spark, self.path)
+        publish(self.spark, self.path, new.coalesce(1))  # ≤ k rows: one file
 
 
 def stratified_sample(

@@ -34,9 +34,6 @@ per candidate, the cheaper screen when "near-dup" means tiny edits.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,7 +41,7 @@ from ocr_vector_db_spark.operators.dedup import (
     simhash_band_widths,
     simhash_col,
 )
-from ocr_vector_db_spark.operators.minhash_index import _error_condition
+from ocr_vector_db_spark.operators.minhash_index import BandedSignatureIndex
 
 
 def _sigs_of(docs: DataFrame, bits: int, id_col: str,
@@ -126,11 +123,13 @@ def simhash_pairs_from_sigs(
     )
 
 
-class SimHashIndex:
+class SimHashIndex(BandedSignatureIndex):
+    META = ("bits", "r", "n_buckets")
+    BAND_COLS = "band int, val bigint, bucket bigint"
+
     def __init__(self, spark: SparkSession, path: str, bits: int, r: int,
                  n_buckets: int):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.bits = bits
         self.r = r
         self.n_buckets = n_buckets
@@ -147,14 +146,8 @@ class SimHashIndex:
         near-dup metric."""
         return _sigs_of(docs, self.bits, id_col, text_col)
 
-    def signatures_of(self, docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
-        """Public signatures-once seam: ONE (doc, simhash) DataFrame for
-        a batch, reusable (localCheckpoint it) across
-        `batch_dropped_ids`, `screen(sigs=)`, `dedup_new(sigs=)` and
-        `add(sigs=)` — the streaming gates derive signatures once per
-        micro-batch instead of re-hashing raw bytes three times."""
-        return self._sig_expr(docs, id_col, text_col)
+    def _bands(self, sig: DataFrame) -> DataFrame:
+        return _bands_of(sig, self.bits, self.r, self.n_buckets)
 
     def _sig_asset_id(self, doc: F.Column) -> F.Column:
         """Map a signature `doc` value to the batch asset id it belongs
@@ -199,145 +192,8 @@ class SimHashIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> "SimHashIndex":
-        from ocr_vector_db_spark.operators.index_maint import write_small_file
-
-        idx = cls(spark, path, bits, r, n_buckets)
-        sig = idx._sig_expr(docs, id_col, text_col).cache()
-        try:
-            sig.count()
-            idx._append(sig, overwrite=True)
-        finally:
-            sig.unpersist()
-        write_small_file(
-            spark, os.path.join(path, "meta.json"),
-            json.dumps({"bits": bits, "r": r,
-                        "n_buckets": n_buckets}).encode("utf-8"),
-        )
-        return idx
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "SimHashIndex":
-        from ocr_vector_db_spark.operators.index_maint import read_small_file
-
-        m = json.loads(
-            read_small_file(spark, os.path.join(path, "meta.json"))
-        )
-        return cls(spark, path, m["bits"], m["r"], m["n_buckets"])
-
-    # ---------------------------------------------------------------- reads
-
-    def _table_dir(self, name: str) -> str:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        return current_gen_dir(self.spark, os.path.join(self.path, name))
-
-    def signatures(self) -> DataFrame:
-        return self.spark.read.parquet(self._table_dir("signatures"))
-
-    def bands_table(self) -> DataFrame:
-        from pyspark.errors import AnalysisException
-        from pyspark.sql import types as T
-
-        try:
-            return self.spark.read.parquet(self._table_dir("bands"))
-        except AnalysisException as exc:
-            # empty build wrote no band files — synthesize the typed empty
-            # relation (MinHashIndex.bands_table's contract: ONLY these
-            # two conditions qualify; anything else must raise)
-            if _error_condition(exc) not in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise
-            doc_t = self.signatures().schema["doc"].dataType
-            return self.spark.createDataFrame([], T.StructType([
-                T.StructField("doc", doc_t),
-                T.StructField("band", T.IntegerType()),
-                T.StructField("val", T.LongType()),
-                T.StructField("bucket", T.LongType()),
-            ]))
-
-    def _append(self, sig: DataFrame, overwrite: bool = False) -> None:
-        """Bands FIRST, signatures second — the re-add anti-join reads the
-        signatures path, and writing it first would invalidate the cached
-        plan mid-append (MinHashIndex._append's finding; same crash-window
-        adjudication: orphan band rows can never screen-hit, the inner
-        signature join filters them)."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-        )
-
-        bands_root = os.path.join(self.path, "bands")
-        sigs_root = os.path.join(self.path, "signatures")
-        if overwrite:
-            _, bands_dest = init_generation(self.spark, bands_root)
-            _, sigs_dest = init_generation(self.spark, sigs_root)
-        else:
-            bands_dest = self._table_dir("bands")
-            sigs_dest = self._table_dir("signatures")
-        mode = "overwrite" if overwrite else "append"
-        _bands_of(sig, self.bits, self.r, self.n_buckets).write.mode(
-            mode
-        ).partitionBy("bucket").parquet(bands_dest)
-        sig.write.mode(mode).parquet(sigs_dest)
-        if overwrite:
-            commit_generation(self.spark, bands_root, 1)
-            commit_generation(self.spark, sigs_root, 1)
-
-    # ------------------------------------------------------------ increment
-
-    def add(
-        self,
-        docs: DataFrame | None = None,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        assume_new: bool = False,
-        sigs: DataFrame | None = None,
-    ) -> int:
-        """Append a batch's signatures + bands (MinHashIndex.add parity:
-        anti-join re-add guard, ``assume_new`` escape for ledger-guarded
-        streaming, single-writer contract). Returns docs added. Pass
-        precomputed `sigs` (a `signatures_of` result) to skip re-hashing
-        `docs` — the signatures-once streaming path."""
-        sig = sigs if sigs is not None else self._sig_expr(
+        return cls._start_build(spark, path, bits, r, n_buckets)._build(
             docs, id_col, text_col
-        )
-        if not assume_new:
-            indexed = self.signatures().select("doc").distinct()
-            sig = sig.join(indexed, "doc", "left_anti")
-        sig = sig.cache()
-        try:
-            n = sig.count()  # materialize before the append (self-read)
-            self._append(sig)
-            return n
-        finally:
-            sig.unpersist()
-
-    # ---------------------------------------------------------- maintenance
-
-    def compact(self) -> int:
-        """Collapse each band bucket to one file and bound the signature
-        file count (OPTIMIZE analogue). Returns the signature row count."""
-        from pyspark.errors import AnalysisException
-
-        from ocr_vector_db_spark.operators.index_maint import (
-            compact_partitioned,
-            compact_plain,
-        )
-
-        try:
-            compact_partitioned(
-                self.spark, os.path.join(self.path, "bands"),
-                "bucket", self.n_buckets,
-            )
-        except AnalysisException as exc:
-            if _error_condition(exc) not in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise
-        return compact_plain(
-            self.spark, os.path.join(self.path, "signatures"),
-            max(self.n_buckets // 4, 1),
         )
 
     # -------------------------------------------------------------- screen
@@ -367,7 +223,7 @@ class SimHashIndex:
         new_sig = sigs if sigs is not None else self._sig_expr(
             new_docs, id_col, text_col
         )
-        new_banded = _bands_of(new_sig, self.bits, self.r, self.n_buckets)
+        new_banded = self._bands(new_sig)
         cand = (
             new_banded.alias("x")
             .join(self.bands_table().alias("y"), ["bucket", "band", "val"])

@@ -44,11 +44,17 @@ corpus-sized after the first projection.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ocr_vector_db_spark.operators.index_maint import (
+    PersistedIndex,
+    fs_exists,
+    read_small_file,
+    write_small_file,
+)
 
 _HEX = "0123456789abcdef"
 
@@ -160,41 +166,13 @@ def hll_summary(regs: DataFrame, p: int) -> DataFrame:
     )
 
 
-def _publish_small(
-    spark: SparkSession, root: str, df: DataFrame, first: bool = False,
-    marker: tuple[str, bytes] | None = None,
-) -> None:
-    """Write a KB-sized sketch table as a NEW generation and swap the
-    pointer (reader-atomic). Sketch tables are bounded (≤ m registers /
-    ≤ k minima), so a one-file rewrite per fold is cheaper and simpler
-    than append+compact. The fold may read the CURRENT generation: it
-    materializes into the next gen dir before the pointer flips.
-    `marker` = (filename, bytes) rides INSIDE the new generation dir
-    (underscore-prefix the name so parquet readers skip it) and commits
-    atomically with the pointer swap — the epoch-guard carrier for
-    non-idempotent folds (CMSketch)."""
-    from ocr_vector_db_spark.operators.index_maint import (
-        commit_generation,
-        gc_generations,
-        init_generation,
-        next_gen_dir,
-        write_small_file,
-    )
-
-    n, dest = (init_generation if first else next_gen_dir)(spark, root)
-    df.coalesce(1).write.mode("overwrite").parquet(dest)
-    if marker is not None:
-        write_small_file(spark, os.path.join(dest, marker[0]), marker[1])
-    commit_generation(spark, root, n)
-    gc_generations(spark, root, keep=2)
-
-
-class HLLSketch:
+class HLLSketch(PersistedIndex):
     """Persisted HLL register table under generation pointers."""
 
+    META = ("p",)
+
     def __init__(self, spark: SparkSession, path: str, p: int):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.p = p
 
     # --------------------------------------------------------------- build
@@ -208,33 +186,14 @@ class HLLSketch:
         key: Column,
         p: int = 8,
     ) -> "HLLSketch":
-        from ocr_vector_db_spark.operators.index_maint import write_small_file
-
-        sk = cls(spark, path, p)
-        sk._publish(hll_registers(df, key, p), first=True)
-        write_small_file(
-            spark, os.path.join(path, "meta.json"),
-            json.dumps({"p": p}).encode("utf-8"),
-        )
-        return sk
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "HLLSketch":
-        from ocr_vector_db_spark.operators.index_maint import read_small_file
-
-        meta = json.loads(
-            read_small_file(spark, os.path.join(path, "meta.json"))
-        )
-        return cls(spark, path, meta["p"])
+        return cls._start_build(spark, path, p)._fold(
+            hll_registers(df, key, p)
+        )._finish_build()
 
     # ---------------------------------------------------------------- reads
 
     def registers(self) -> DataFrame:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        return self.spark.read.parquet(
-            current_gen_dir(self.spark, os.path.join(self.path, "registers"))
-        )
+        return self._read("registers")
 
     def summary(self) -> DataFrame:
         return hll_summary(self.registers(), self.p)
@@ -244,21 +203,17 @@ class HLLSketch:
 
     # ------------------------------------------------------------ increment
 
-    def _publish(self, regs: DataFrame, first: bool = False) -> None:
-        _publish_small(
-            self.spark, os.path.join(self.path, "registers"), regs, first
-        )
+    def _fold(self, regs: DataFrame) -> "HLLSketch":
+        self._publish("registers", regs.coalesce(1))
+        return self
 
     def add(self, df: DataFrame, key: Column) -> "HLLSketch":
         """Fold a batch in: per-bucket MAX of stored ∪ batch registers.
 
         Idempotent by construction (MAX), so replaying a batch — the
         crash-window case — cannot move a register. O(batch + m)."""
-        self._publish(
-            _merge_registers([self.registers(),
-                              hll_registers(df, key, self.p)])
-        )
-        return self
+        return self._fold(_merge_registers([self.registers(),
+                                            hll_registers(df, key, self.p)]))
 
     def merge(self, *others: "HLLSketch") -> "HLLSketch":
         """Fold other sketches' registers into this one (same p). The
@@ -268,11 +223,9 @@ class HLLSketch:
                 raise ValueError(
                     f"precision mismatch: {self.p} vs {o.p}"
                 )
-        self._publish(
-            _merge_registers([self.registers()]
-                             + [o.registers() for o in others])
-        )
-        return self
+        return self._fold(_merge_registers(
+            [self.registers()] + [o.registers() for o in others]
+        ))
 
 
 # ---------------------------------------------------------------------------
@@ -321,12 +274,13 @@ def _kmv_est(n_min: Column, kth_hex: Column, k: int) -> Column:
     )
 
 
-class KMVSketch:
+class KMVSketch(PersistedIndex):
     """Persisted k-minimum-values table under generation pointers."""
 
+    META = ("k",)
+
     def __init__(self, spark: SparkSession, path: str, k: int):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.k = k
 
     @classmethod
@@ -338,42 +292,19 @@ class KMVSketch:
         key: Column,
         k: int = 128,
     ) -> "KMVSketch":
-        from ocr_vector_db_spark.operators.index_maint import write_small_file
-
-        sk = cls(spark, path, k)
-        _publish_small(
-            spark, os.path.join(path, "minima"),
-            kmv_minima(df, key, k), first=True,
-        )
-        write_small_file(
-            spark, os.path.join(path, "meta.json"),
-            json.dumps({"k": k}).encode("utf-8"),
-        )
-        return sk
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "KMVSketch":
-        from ocr_vector_db_spark.operators.index_maint import read_small_file
-
-        meta = json.loads(
-            read_small_file(spark, os.path.join(path, "meta.json"))
-        )
-        return cls(spark, path, meta["k"])
+        sk = cls._start_build(spark, path, k)
+        sk._publish("minima", kmv_minima(df, key, k).coalesce(1))
+        return sk._finish_build()
 
     def minima(self) -> DataFrame:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        return self.spark.read.parquet(
-            current_gen_dir(self.spark, os.path.join(self.path, "minima"))
-        )
+        return self._read("minima")
 
     def _fold(self, parts: list[DataFrame]) -> None:
         u = parts[0]
         for nxt in parts[1:]:
             u = u.unionByName(nxt)
-        _publish_small(
-            self.spark, os.path.join(self.path, "minima"),
-            u.distinct().orderBy("h").limit(self.k),
+        self._publish(
+            "minima", u.distinct().orderBy("h").limit(self.k).coalesce(1)
         )
 
     def add(self, df: DataFrame, key: Column) -> "KMVSketch":
@@ -572,12 +503,13 @@ def bloom_screen(
     )
 
 
-class BloomSketch:
+class BloomSketch(PersistedIndex):
     """Persisted Bloom filter (packed-word table) under generation pointers."""
 
+    META = ("m", "k")
+
     def __init__(self, spark: SparkSession, path: str, m: int, k: int):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.m = m
         self.k = k
 
@@ -591,49 +523,26 @@ class BloomSketch:
         m: int = 1 << 13,
         k: int = 3,
     ) -> "BloomSketch":
-        from ocr_vector_db_spark.operators.index_maint import write_small_file
-
         if m % _BLOOM_WORD_BITS != 0:
             # keep word boundaries aligned so % / // never straddle words
             raise ValueError(f"m must be a multiple of {_BLOOM_WORD_BITS}")
-        sk = cls(spark, path, m, k)
-        sk._publish(bloom_words(df, key, m, k), first=True)
-        write_small_file(
-            spark, os.path.join(path, "meta.json"),
-            json.dumps({"m": m, "k": k}).encode("utf-8"),
-        )
-        return sk
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "BloomSketch":
-        from ocr_vector_db_spark.operators.index_maint import read_small_file
-
-        meta = json.loads(
-            read_small_file(spark, os.path.join(path, "meta.json"))
-        )
-        return cls(spark, path, meta["m"], meta["k"])
+        return cls._start_build(spark, path, m, k)._fold(
+            bloom_words(df, key, m, k)
+        )._finish_build()
 
     def words(self) -> DataFrame:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
+        return self._read("words")
 
-        return self.spark.read.parquet(
-            current_gen_dir(self.spark, os.path.join(self.path, "words"))
-        )
-
-    def _publish(self, words: DataFrame, first: bool = False) -> None:
-        _publish_small(
-            self.spark, os.path.join(self.path, "words"), words, first
-        )
+    def _fold(self, words: DataFrame) -> "BloomSketch":
+        self._publish("words", words.coalesce(1))
+        return self
 
     def add(self, df: DataFrame, key: Column) -> "BloomSketch":
         """Fold member keys in: per-word bit_or of stored ∪ batch words.
         OR is idempotent, so replaying a batch (the crash window) cannot
         flip a bit; add ≡ rebuild bit-for-bit. O(batch + m/60)."""
-        self._publish(
-            _merge_words([self.words(),
-                          bloom_words(df, key, self.m, self.k)])
-        )
-        return self
+        return self._fold(_merge_words([self.words(),
+                                        bloom_words(df, key, self.m, self.k)]))
 
     def merge(self, *others: "BloomSketch") -> "BloomSketch":
         """Bloom union: per-word bit_or across same-(m,k) filters."""
@@ -642,10 +551,9 @@ class BloomSketch:
                 raise ValueError(
                     f"shape mismatch: ({self.m},{self.k}) vs ({o.m},{o.k})"
                 )
-        self._publish(
+        return self._fold(
             _merge_words([self.words()] + [o.words() for o in others])
         )
-        return self
 
     def screen(self, df: DataFrame, key: Column, *id_cols: str) -> DataFrame:
         return bloom_screen(df, self.words(), self.m, self.k, key, *id_cols)
@@ -768,13 +676,14 @@ def cm_estimate(
     )
 
 
-class CMSketch:
+class CMSketch(PersistedIndex):
     """Persisted count-min sketch (sparse cell table) under generation
     pointers."""
 
+    META = ("w", "d")
+
     def __init__(self, spark: SparkSession, path: str, w: int, d: int):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.w = w
         self.d = d
 
@@ -789,31 +698,12 @@ class CMSketch:
         d: int = 4,
         weight: Column | None = None,
     ) -> "CMSketch":
-        from ocr_vector_db_spark.operators.index_maint import write_small_file
-
-        sk = cls(spark, path, w, d)
-        sk._publish(cm_cells(df, key, w, d, weight=weight), first=True)
-        write_small_file(
-            spark, os.path.join(path, "meta.json"),
-            json.dumps({"w": w, "d": d}).encode("utf-8"),
-        )
-        return sk
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "CMSketch":
-        from ocr_vector_db_spark.operators.index_maint import read_small_file
-
-        meta = json.loads(
-            read_small_file(spark, os.path.join(path, "meta.json"))
-        )
-        return cls(spark, path, meta["w"], meta["d"])
+        return cls._start_build(spark, path, w, d)._fold(
+            cm_cells(df, key, w, d, weight=weight)
+        )._finish_build()
 
     def cells(self) -> DataFrame:
-        from ocr_vector_db_spark.operators.index_maint import current_gen_dir
-
-        return self.spark.read.parquet(
-            current_gen_dir(self.spark, os.path.join(self.path, "cells"))
-        )
+        return self._read("cells")
 
     def last_epoch(self) -> int:
         """Highest epoch folded via `add(..., epoch=)`, −1 before any.
@@ -821,31 +711,26 @@ class CMSketch:
         (committed atomically with the pointer swap), so 'did this
         epoch's fold land' and 'which cells does a reader see' can never
         disagree across a crash."""
-        from ocr_vector_db_spark.operators.index_maint import (
-            current_gen_dir,
-            fs_exists,
-            read_small_file,
-        )
-
-        gen = current_gen_dir(self.spark, os.path.join(self.path, "cells"))
-        p = os.path.join(gen, "_last_epoch")
+        p = os.path.join(self._table_dir("cells"), "_last_epoch")
         if not fs_exists(self.spark, p):
             return -1
         return int(read_small_file(self.spark, p).decode("ascii"))
 
-    def _publish(
-        self, cells: DataFrame, first: bool = False,
-        epoch: int | None = None,
-    ) -> None:
+    def _fold(self, cells: DataFrame, epoch: int | None = None) -> "CMSketch":
         # every publish carries the marker forward (max of stored and
         # the fold's epoch) so a later merge/compaction cannot reopen a
-        # previously-folded epoch's replay window
-        mark = max(-1 if first else self.last_epoch(),
-                   -1 if epoch is None else epoch)
-        _publish_small(
-            self.spark, os.path.join(self.path, "cells"), cells, first,
-            marker=("_last_epoch", str(mark).encode("ascii")),
-        )
+        # previously-folded epoch's replay window; the underscore name
+        # keeps parquet readers off it
+        mark = str(max(self.last_epoch(),
+                       -1 if epoch is None else epoch)).encode("ascii")
+
+        def write(dest: str) -> None:
+            cells.coalesce(1).write.mode("overwrite").parquet(dest)
+            write_small_file(self.spark, os.path.join(dest, "_last_epoch"),
+                             mark)
+
+        self._publish("cells", write)
+        return self
 
     def add(
         self, df: DataFrame, key: Column, weight: Column | None = None,
@@ -859,12 +744,11 @@ class CMSketch:
         discipline, operators/drift.py). O(batch + d·w)."""
         if epoch is not None and epoch <= self.last_epoch():
             return self  # replayed epoch: already folded
-        self._publish(
+        return self._fold(
             _sum_cells([self.cells(),
                         cm_cells(df, key, self.w, self.d, weight=weight)]),
             epoch=epoch,
         )
-        return self
 
     def merge(self, *others: "CMSketch") -> "CMSketch":
         """CM union: cell-wise sum across same-(w,d) sketches — the
@@ -875,10 +759,9 @@ class CMSketch:
                 raise ValueError(
                     f"shape mismatch: ({self.w},{self.d}) vs ({o.w},{o.d})"
                 )
-        self._publish(
+        return self._fold(
             _sum_cells([self.cells()] + [o.cells() for o in others])
         )
-        return self
 
     def estimate(self, df: DataFrame, key: Column, *id_cols: str) -> DataFrame:
         return cm_estimate(df, self.cells(), self.w, self.d, key, *id_cols)

@@ -230,6 +230,8 @@ class VideoFpIndex(SimHashIndex):
     height, n_frames); `every` and `min_frac` persist in meta.json so
     every later screen samples identically."""
 
+    META = (*SimHashIndex.META, "every", "min_frac")
+
     def __init__(self, spark, path: str, bits: int, r: int,
                  n_buckets: int, every: int = 1, min_frac: float = 0.6):
         super().__init__(spark, path, bits, r, n_buckets)
@@ -294,56 +296,29 @@ class VideoFpIndex(SimHashIndex):
             .distinct()
         )
 
-    def _append(self, sig: DataFrame, overwrite: bool = False) -> None:
+    def _append(self, sig: DataFrame, build: bool = False) -> None:
         """Parent append plus the per-video sampled-frame counts side
         table (`vcounts`: one (doc=video id, n) row per video), written
         FIRST — an orphan count row for a video whose signatures never
         landed is harmless (it can never match a candidate), while the
         reverse order could leave a screen-able video uncounted."""
-        import os
-
-        from ocr_vector_db_spark.operators.index_maint import (
-            commit_generation,
-            init_generation,
-        )
-
         vc = (
             sig.select(self._sig_asset_id(F.col("doc")).alias("doc"))
             .groupBy("doc").agg(F.count("*").alias("n"))
         )
-        vroot = os.path.join(self.path, "vcounts")
-        if overwrite:
-            _, vdest = init_generation(self.spark, vroot)
-        else:
-            vdest = self._table_dir("vcounts")
-        vc.write.mode("overwrite" if overwrite else "append").parquet(vdest)
-        if overwrite:
-            commit_generation(self.spark, vroot, 1)
-        super()._append(sig, overwrite=overwrite)
+        self._write("vcounts", vc, build=build)
+        super()._append(sig, build=build)
 
     def vcounts_table(self) -> DataFrame:
         """(doc=video id, n sampled frames) for every indexed video. A
         pre-vcounts index (or an empty build) falls back to ONE bounded
         aggregate over the frame-grain signatures — correct, but the
         point of the side table is that screens never need it."""
-        from pyspark.errors import AnalysisException
-
-        from ocr_vector_db_spark.operators.minhash_index import (
-            _error_condition,
-        )
-
-        try:
-            vc = self.spark.read.parquet(self._table_dir("vcounts"))
-        except AnalysisException as exc:
-            if _error_condition(exc) not in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise
-            vc = (
-                self.signatures()
-                .select(self._sig_asset_id(F.col("doc")).alias("doc"))
-                .groupBy("doc").agg(F.count("*").cast("long").alias("n"))
-            )
+        vc = self._read("vcounts", empty=lambda: (
+            self.signatures()
+            .select(self._sig_asset_id(F.col("doc")).alias("doc"))
+            .groupBy("doc").agg(F.count("*").cast("long").alias("n"))
+        ))
         # max-fold so duplicate rows stay exact: the sampled-frame count
         # is invariant for a fixed `every`, so a crash between the
         # vcounts append and the ledger commit (retried add writes a
@@ -352,25 +327,9 @@ class VideoFpIndex(SimHashIndex):
         # min(n_new, n_corpus) containment screen back to matched/n_new
         return vc.groupBy("doc").agg(F.max("n").alias("n"))
 
-    def compact(self) -> int:
-        from pyspark.errors import AnalysisException
-
-        from ocr_vector_db_spark.operators.index_maint import compact_plain
-        from ocr_vector_db_spark.operators.minhash_index import (
-            _error_condition,
-        )
-
-        import os
-
-        try:
-            compact_plain(self.spark, os.path.join(self.path, "vcounts"),
-                          max(self.n_buckets // 8, 1))
-        except AnalysisException as exc:
-            if _error_condition(exc) not in (
-                "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise
-        return super().compact()
+    def _compaction(self):
+        return (("vcounts", None, max(self.n_buckets // 8, 1)),
+                *super()._compaction())
 
     @classmethod
     def build(  # noqa: D417 - narrowed signature over the text parent
@@ -378,42 +337,9 @@ class VideoFpIndex(SimHashIndex):
         n_buckets: int = 64, every: int = 1, min_frac: float = 0.6,
         id_col: str = "asset_id",
     ) -> "VideoFpIndex":
-        import json
-        import os
-
-        from ocr_vector_db_spark.operators.index_maint import (
-            write_small_file,
-        )
-
-        idx = cls(spark, path, 64, r, n_buckets, every=every,
-                  min_frac=min_frac)
-        sig = idx._sig_expr(clips, id_col, "data").cache()
-        try:
-            sig.count()
-            idx._append(sig, overwrite=True)
-        finally:
-            sig.unpersist()
-        write_small_file(
-            spark, os.path.join(path, "meta.json"),
-            json.dumps({"bits": 64, "r": r, "n_buckets": n_buckets,
-                        "every": every,
-                        "min_frac": min_frac}).encode("utf-8"),
-        )
-        return idx
-
-    @classmethod
-    def load(cls, spark, path: str) -> "VideoFpIndex":
-        import json
-        import os
-
-        from ocr_vector_db_spark.operators.index_maint import (
-            read_small_file,
-        )
-
-        m = json.loads(read_small_file(spark, os.path.join(path,
-                                                           "meta.json")))
-        return cls(spark, path, m["bits"], m["r"], m["n_buckets"],
-                   every=m.get("every", 1), min_frac=m.get("min_frac", 0.6))
+        return cls._start_build(
+            spark, path, 64, r, n_buckets, every=every, min_frac=min_frac
+        )._build(clips, id_col, "data")
 
     def screen(
         self,

@@ -127,24 +127,12 @@ class ExactFrameStore:
         # sources — while a GENUINE read error (transient IO, corrupt
         # footer on a stage that holds the only copy of folded keys)
         # raises instead of silently weakening the exact screen.
-        from pyspark.errors import AnalysisException
-
-        from ocr_vector_db_spark.operators.minhash_index import (
-            _error_condition,
-        )
+        from ocr_vector_db_spark.operators.index_maint import read_or_none
 
         for name in stages:
-            try:
-                staged = self.spark.read.parquet(
-                    os.path.join(self.path, name)
-                ).select("__xkey")
-            except AnalysisException as exc:
-                if _error_condition(exc) not in (
-                    "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-                ):
-                    raise
-                continue
-            out = out.unionByName(staged)
+            staged = read_or_none(self.spark, os.path.join(self.path, name))
+            if staged is not None:
+                out = out.unionByName(staged.select("__xkey"))
         return out
 
     def _list_dirs(self) -> tuple:
@@ -223,24 +211,12 @@ class ExactFrameStore:
         # would be permanent key loss, after which byte-identical
         # assets re-admit forever. Aborting is always safe here: every
         # key is still on disk and the next cycle retries the fold.
-        from pyspark.errors import AnalysisException
-
-        from ocr_vector_db_spark.operators.minhash_index import (
-            _error_condition,
-        )
+        from ocr_vector_db_spark.operators.index_maint import read_or_none
 
         for name in stale:
-            try:
-                merged = merged.unionByName(
-                    self.spark.read.parquet(
-                        os.path.join(self.path, name)
-                    ).select("__xkey")
-                )
-            except AnalysisException as exc:
-                if _error_condition(exc) not in (
-                    "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-                ):
-                    raise
+            staged = read_or_none(self.spark, os.path.join(self.path, name))
+            if staged is not None:
+                merged = merged.unionByName(staged.select("__xkey"))
         merged = merged.distinct()
         stage_name = f"_compact_{below_epoch}"
         while fs.exists(jvm.org.apache.hadoop.fs.Path(

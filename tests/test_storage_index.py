@@ -265,17 +265,21 @@ def _plan_jobs(spark, build):
 
 
 def test_index_search_plans_start_no_spark_jobs(spark, tables, tmp_path_factory):
-    """Lexical and IVF search build their plans without a Spark job: the
-    bucket list folds into the scan's partition filter, the postings and
-    vectors are read with the schema of the object's first read, and the
-    BM25 stats are driver literals. The caller's action is the only work."""
+    """Lexical, IVF and phrase search build their plans without a Spark
+    job: the bucket list folds into the scan's partition filter, the
+    postings and vectors are read with the schema of the object's first
+    read, and the BM25 stats are driver literals. The caller's action is
+    the only work."""
     from ocr_vector_db_spark.operators.lexical_index import LexicalIndex
+    from ocr_vector_db_spark.operators.phrase_index import PositionalIndex
 
     docs, emb = tables["documents"], tables["embeddings"]
     lex = LexicalIndex.build(spark, docs, str(tmp_path_factory.mktemp("lexj")),
                              n_buckets=16)
     ivf = IVFIndex.build(spark, emb, str(tmp_path_factory.mktemp("ivfj")),
                          num_clusters=4)
+    pos = PositionalIndex.build(
+        spark, docs, str(tmp_path_factory.mktemp("posj")), n_buckets=16)
     loaded = LexicalIndex.load(spark, lex.path)
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 3).head().embedding]
     terms = ["distributed", "shuffle", "data"]
@@ -283,6 +287,12 @@ def test_index_search_plans_start_no_spark_jobs(spark, tables, tmp_path_factory)
     for idx in (lex, loaded):
         idx.search(terms, k=10).collect()
     ivf.search(qv, k=5, nprobe=2).collect()
+    want = pos.phrase_search("distributed data").collect()
+
+    phrase, jobs = _plan_jobs(spark, lambda: pos.phrase_search(
+        "distributed data"))
+    assert jobs == []
+    assert phrase.collect() == want
 
     for idx in (lex, loaded):
         via_index, jobs = _plan_jobs(spark, lambda: idx.search(terms, k=10))
@@ -596,10 +606,10 @@ def test_minhash_and_ivf_compaction(spark, tables, tmp_path_factory):
 
 
 def _compact_crash_points(spark, path, partition_col=None, num_partitions=1):
-    """Run compact_partitioned/compact_plain step by step, yielding a label
-    after every crash point, so a test can assert reads stay correct at
-    each one: (a) new generation fully written but uncommitted, (b) marker
-    committed but GC not yet run, (c) GC done."""
+    """Run a compaction (`PersistedIndex._rewrite`) step by step, yielding
+    a label after every crash point, so a test can assert reads stay
+    correct at each one: (a) new generation fully written but
+    uncommitted, (b) marker committed but GC not yet run, (c) GC done."""
     from ocr_vector_db_spark.operators.index_maint import (
         commit_generation,
         current_gen_dir,
