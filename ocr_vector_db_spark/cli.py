@@ -101,7 +101,8 @@ def cmd_ingest(args) -> int:
     out = ingest(spark, files, dim=args.dim)
     store.save_ingest(out)
     n = store.read("embeddings").count()
-    print(f"[ingest] stored {n} embeddings from {files.count()} files into {args.store}")
+    print(f"[ingest] stored {files.count()} files into {args.store}, "
+          f"which now holds {n} embeddings")
     return 0
 
 
@@ -209,10 +210,11 @@ def _load_serving_indexes(spark, store_dir: str):
     import os
 
     from ocr_vector_db_spark.operators.ann_index import IVFIndex
+    from ocr_vector_db_spark.operators.index_maint import fs_exists
     from ocr_vector_db_spark.operators.lexical_index import LexicalIndex
 
-    if os.path.isdir(os.path.join(store_dir, "lex")) and os.path.isdir(
-        os.path.join(store_dir, "ivf")
+    if fs_exists(spark, os.path.join(store_dir, "lex")) and fs_exists(
+        spark, os.path.join(store_dir, "ivf")
     ):
         try:
             return (

@@ -7,8 +7,7 @@ parent level, so the whole cascade is four shuffle-free (broadcast) anti-joins
 when the deleted-key set is small, and plain shuffled anti-joins otherwise.
 
 Re-ingest idempotency (api/use_cases/ingest.py:147-160) = cascade_delete of
-the document id followed by appending the fresh tree; with partitioned
-storage, overwrite-partition-by-document_id is the cheaper physical plan.
+the document id followed by appending the fresh tree (`storage.py`).
 """
 
 from __future__ import annotations

@@ -12,8 +12,8 @@ after the fragments DF is built-in expressions. The shuffle points are
 exactly: repartition by document for unitize, one hash-agg for parents.
 
 Re-ingest idempotency (api/use_cases/ingest.py:147-160): same source_path →
-same document id → cascade_delete + append, or overwrite-by-partition when
-the entity tables are stored partitioned by document_id.
+same document id → cascade_delete of that id, then `EntityStore.save_ingest`
+appends the fresh tree.
 """
 
 from __future__ import annotations

@@ -1,84 +1,89 @@
-"""Entity-table storage: the Postgres schema re-expressed as partitioned
-parquet with upsert/cascade/idempotent-reingest semantics.
+"""Entity-table storage: the Postgres schema re-expressed as parquet tables
+with upsert/cascade/additive-ingest semantics, each table persisted through
+`index_maint`'s generation protocol.
+
+Layout: `{base}/{table}/gen-NNNNNN/` plus `gen-NNNNNN.committed` markers
+(see operators/index_maint.py). Embeddings are written `partitionBy("view")`;
+documents, concepts, fragments and parents are plain tables.
 
 Mapping from the reference's storage layer:
 
-- expression BTREEs on view/lang (storage/schema.py:93-118)  →  embeddings
-  written `partitionBy("view", "lang")`: an equality filter on either is
-  partition pruning (directories skipped, not rows filtered).
+- expression BTREE on view (storage/schema.py:93-118)  →  the embeddings
+  `view` partitioning: an equality filter on it is partition pruning
+  (directories skipped, not rows filtered).
+- ingest inserts (api/use_cases/ingest.py)  →  `save_ingest` appends the
+  new trees INTO each table's live generation; a table without one
+  publishes generation 1.
 - `ON CONFLICT (key) DO UPDATE` upserts (parent_store.py:47-54,
   app/storage.py:327-438)  →  `upsert_by_key`: anti-join out the incoming
-  keys, union, rewrite — last-writer-wins, exactly the reference's merge
-  semantics. On a lakehouse table format (Delta/Iceberg, jars not present
-  here) the same call becomes MERGE INTO without a full rewrite.
+  keys, union, publish as the next generation — last-writer-wins, exactly
+  the reference's merge semantics. On a lakehouse table format
+  (Delta/Iceberg, jars not present here) the same call becomes MERGE INTO
+  without a full rewrite.
 - re-ingest idempotency (api/use_cases/ingest.py:147-160)  →
-  `overwrite_document`: dynamic partition overwrite of one document_id.
+  `cascade_delete` of the re-ingested document ids, then `save_ingest`.
 - cascade delete (storage/cascade.py:83-151)  →  operators/cascade.py
-  anti-joins, persisted here by rewriting each level.
+  anti-joins; each surviving table is published as its next generation,
+  child-first, so a delete that dies midway leaves every table readable
+  at its before or its after state.
+
+A store written before generations (flat parquet under `{base}/{table}`)
+stays readable; the first write of each table moves its rows into
+generation 1.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ocr_vector_db_spark.operators.index_maint import (
+    PersistedIndex,
+    committed_generations,
+    fs_exists,
+    read_or_none,
+)
 
-class EntityStore:
+
+class EntityStore(PersistedIndex):
     """Parquet-backed store for documents/concepts/fragments/embeddings/parents."""
 
-    PARTITIONING: dict[str, list[str]] = {
-        "embeddings": ["view"],
-        "fragments": ["document_id"],
-        "concepts": ["document_id"],
-    }
-
-    def __init__(self, spark: SparkSession, base_dir: str):
-        self.spark = spark
-        self.base_dir = base_dir
-
-    def path(self, table: str) -> str:
-        return os.path.join(self.base_dir, table)
+    TABLES = ("documents", "concepts", "fragments", "embeddings", "parents")
+    PARTITIONING: dict[str, str] = {"embeddings": "view"}
 
     def exists(self, table: str) -> bool:
-        return os.path.exists(self.path(table))
-
-    def write(self, table: str, df: DataFrame, mode: str = "overwrite") -> None:
-        writer = df.write.mode(mode)
-        parts = self.PARTITIONING.get(table)
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(self.path(table))
-        self._save_schema(table, df)
+        return fs_exists(self.spark, self._root(table))
 
     def read(self, table: str) -> DataFrame:
-        # a fully-deleted table has no parquet footers to infer from — fall
-        # back to the schema persisted at write time
-        schema = self._load_schema(table)
-        if schema is not None:
-            return self.spark.read.schema(schema).parquet(self.path(table))
-        return self.spark.read.parquet(self.path(table))
+        """The live generation of `table`. A fully deleted partitioned
+        table (embeddings; also concepts/fragments in a store written
+        before generations, partitioned by document) has no parquet footer
+        to take its schema from: it reads as an empty frame of the schema
+        ingest writes to it."""
+        if table in self.TABLES and self.exists(table):
+            return self._read(table, empty=lambda: self._no_rows(table))
+        return self._read(table)
 
-    def _schema_path(self, table: str) -> str:
-        return self.path(table) + ".schema.json"
+    def _no_rows(self, table: str) -> DataFrame:
+        from ocr_vector_db_spark.sources.ingest import files_df, ingest
 
-    def _save_schema(self, table: str, df: DataFrame) -> None:
-        import json
+        out = ingest(self.spark, files_df(self.spark, []), dim=1)
+        return self.spark.createDataFrame([], out[table].schema)
 
-        with open(self._schema_path(table), "w") as fh:
-            fh.write(json.dumps(df.schema.jsonValue()))
+    def write(self, table: str, df: DataFrame) -> None:
+        """Replace `table` with `df`: publish it as the next generation."""
+        self._publish(table, df, self.PARTITIONING.get(table))
 
-    def _load_schema(self, table: str):
-        import json
-
-        from pyspark.sql import types as T
-
-        p = self._schema_path(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return T.StructType.fromJson(json.loads(fh.read()))
+    def _append(self, table: str, df: DataFrame) -> None:
+        """Append `df` into `table`'s live generation. A table without a
+        committed generation publishes generation 1: its flat rows from
+        before generations (none when the table is new) plus `df`."""
+        first = not committed_generations(self.spark, self._root(table))
+        if first:
+            flat = read_or_none(self.spark, self._root(table))
+            if flat is not None:
+                df = flat.unionByName(df)
+        self._write(table, df, self.PARTITIONING.get(table), build=first)
 
     # ------------------------------------------------------------- upserts
 
@@ -86,47 +91,33 @@ class EntityStore:
         """Last-writer-wins merge on `key` (the ON CONFLICT DO UPDATE
         analogue). Incoming duplicates collapse to one row per key first."""
         incoming = incoming.dropDuplicates([key])
-        if self.exists(table):
-            existing = self.read(table)
+        existing = read_or_none(self.spark, self._table_dir(table))
+        if existing is not None:
             survivors = existing.join(
                 F.broadcast(incoming.select(key)), key, "left_anti"
             )
-            merged = survivors.unionByName(incoming)
-        else:
-            merged = incoming
-        # write through a temp dir: the plan reads the same files it replaces
-        tmp = self.path(table) + "__tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = self.path(table)
-        self._swap(tmp, final)
-        self._save_schema(table, merged)
+            incoming = survivors.unionByName(incoming)
+        self.write(table, incoming)
 
     def insert_if_absent(self, table: str, incoming: DataFrame, keys: list[str]) -> None:
         """`ON CONFLICT DO NOTHING` over a composite key — the custom
         child_chunks dedupe index (storage/schema.py:192-195): keep existing
         rows, append only unseen keys."""
         incoming = incoming.dropDuplicates(keys)
-        if self.exists(table):
-            existing_keys = self.read(table).select(*keys)
-            fresh = incoming.join(existing_keys, keys, "left_anti")
-            fresh.write.mode("append").parquet(self.path(table))
-            self._save_schema(table, incoming)
-        else:
-            incoming.write.mode("overwrite").parquet(self.path(table))
-            self._save_schema(table, incoming)
+        existing = read_or_none(self.spark, self._table_dir(table))
+        if existing is not None:
+            incoming = incoming.join(existing.select(*keys), keys, "left_anti")
+        self._append(table, incoming)
 
-    # -------------------------------------------------- re-ingest / cascade
+    # ---------------------------------------------------- ingest / cascade
 
-    def overwrite_document(self, table: str, document_id: str, rows: DataFrame) -> None:
-        """Idempotent re-ingest for document-partitioned tables: replace
-        exactly one document's partition."""
-        assert "document_id" in self.PARTITIONING.get(table, []), (
-            f"{table} is not partitioned by document_id"
-        )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        rows.filter(F.col("document_id") == document_id).write.mode(
-            "overwrite"
-        ).partitionBy("document_id").parquet(self.path(table))
+    def save_ingest(self, out: dict[str, DataFrame]) -> None:
+        """Add a full ingest result (documents/concepts/fragments/
+        embeddings/parents) to the store. Rows of documents already stored
+        are not replaced: re-ingest cascade-deletes them first."""
+        for table in ("documents", "concepts", "fragments", "embeddings"):
+            self._append(table, out[table])
+        self.upsert_by_key("parents", out["parents"], "id")
 
     def cascade_delete(self, doc_ids: list[str]) -> dict[str, int]:
         """Delete document trees child-first (CASCADE-001..004); returns
@@ -138,46 +129,19 @@ class EntityStore:
             self.read("documents"),
             self.read("concepts"),
             self.read("fragments"),
-            self.read("embeddings").withColumnRenamed("parent_id", "__pid").withColumn(
-                "parent_id", F.col("__pid")
-            ).drop("__pid"),
+            self.read("embeddings"),
             doomed,
         )
         counts = {}
         for table in ("embeddings", "fragments", "concepts", "documents"):  # child-first
-            df = survivors[table]
-            tmp = self.path(table) + "__tmp"
-            writer = df.write.mode("overwrite")
-            parts = self.PARTITIONING.get(table)
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(tmp)
-            self._swap(tmp, self.path(table))
-            self._save_schema(table, df)
+            self.write(table, survivors[table])
             counts[table] = self.read(table).count()
         return counts
 
-    @staticmethod
-    def _swap(tmp: str, final: str) -> None:
-        import shutil
+    # ---------------------------------------------------------- maintenance
 
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
-
-    # ----------------------------------------------------------- lifecycle
-
-    def save_ingest(self, out: dict[str, DataFrame]) -> None:
-        """Persist a full ingest result (documents/concepts/fragments/
-        embeddings/parents)."""
-        for table in ("documents", "concepts", "fragments", "embeddings"):
-            self.write(table, out[table])
-        self.upsert_by_key("parents", out["parents"], "id")
-
-    def compact(self, table: str, target_partitions: int) -> None:
-        """OPTIMIZE analogue: rewrite a table at a chosen file granularity
-        (small-file compaction after many incremental appends)."""
-        df = self.read(table).coalesce(target_partitions)
-        tmp = self.path(table) + "__tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        self._swap(tmp, self.path(table))
+    def _compaction(self):
+        # `compact()` (the OPTIMIZE analogue): embeddings to one file per
+        # view dir, every other table to one file per core
+        n = self.spark.sparkContext.defaultParallelism
+        return tuple((t, self.PARTITIONING.get(t), n) for t in self.TABLES)

@@ -30,6 +30,15 @@ def test_generation_lifecycle_lives_in_index_maint():
     assert offenders == []
 
 
+def test_entity_store_commits_through_index_maint():
+    """storage.py has no commit path of its own: no rename swap, no
+    rmtree, no local-only file access, no schema sidecars."""
+    text = (PACKAGE / "storage.py").read_text()
+    banned = ("shutil", "os.rename", "open(", "os.path.exists", ".schema.json",
+              "_swap", "overwrite_document")
+    assert [b for b in banned if b in text] == []
+
+
 def test_rebuild_at_used_path_drops_old_sidecars(spark, tables, tmp_path):
     """A flat rebuild over a hierarchical, standardized index loads as a
     flat, raw-space index: hier.json and standardize.json of the old build

@@ -1,6 +1,7 @@
 """EntityStore (upsert/cascade/reingest/compaction), IVF index persistence +
 partition pruning + recall, embedding-provider harness."""
 
+import re
 import time
 
 import pytest
@@ -26,12 +27,22 @@ def store(spark, tmp_path_factory):
     return st
 
 
+def _view_partition_filters(store) -> str:
+    """The scan's PartitionFilters list for a `view = 'code'` filter."""
+    emb = store.read("embeddings").filter(F.col("view") == "code")
+    plan = emb._jdf.queryExecution().executedPlan().toString()
+    return re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
+
+
 def test_store_roundtrip_and_partitioning(store):
-    emb = store.read("embeddings")
-    assert emb.count() > 0
-    # partitioned by view → equality filter is partition pruning
-    plan = emb.filter(F.col("view") == "code")._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "view" in plan.split("PartitionFilters")[1][:200]
+    n = store.read("embeddings").count()
+    assert n > 0
+    # partitioned by view → equality filter is partition pruning, before
+    # and after compaction rewrites the table
+    assert "view" in _view_partition_filters(store)
+    store.compact()
+    assert "view" in _view_partition_filters(store)
+    assert store.read("embeddings").count() == n
 
 
 def test_upsert_by_key_last_writer_wins(store, spark):
@@ -66,6 +77,88 @@ def test_cascade_delete(store):
     assert counts["documents"] == 1
     assert store.read("concepts").filter(F.col("document_id") == doomed).count() == 0
     assert store.read("fragments").filter(F.col("document_id") == doomed).count() == 0
+
+
+def _ids(store, table: str, col: str = "id") -> set:
+    return {r[0] for r in store.read(table).select(col).collect()}
+
+
+def test_ingests_add_to_the_store(spark, tmp_path):
+    """Two ingests of different files keep both trees; re-ingesting one
+    (cascade delete, then ingest) leaves no duplicate rows."""
+    from ocr_vector_db_spark.functions import hashing
+
+    st = EntityStore(spark, str(tmp_path / "store"))
+    for doc in DOCS:
+        st.save_ingest(ingest(spark, files_df(spark, [doc]), dim=16))
+    both = ingest(spark, files_df(spark, DOCS), dim=16)
+
+    def expected(table, col="id"):
+        return {r[0] for r in both[table].select(col).collect()}
+
+    for table, col in (("documents", "id"), ("concepts", "id"),
+                       ("fragments", "id"), ("embeddings", "doc_id")):
+        assert _ids(st, table, col) == expected(table, col), table
+    concepts = _ids(st, "concepts")
+    assert _ids(st, "parents") <= concepts
+    assert _ids(st, "embeddings", "parent_id") <= concepts
+
+    counts = {t: st.read(t).count() for t in ("concepts", "fragments", "embeddings")}
+    st.cascade_delete([hashing.document_id(DOCS[0][0])])
+    st.save_ingest(ingest(spark, files_df(spark, DOCS[:1]), dim=16))
+    assert {t: st.read(t).count() for t in counts} == counts
+    assert _ids(st, "embeddings", "doc_id") == expected("embeddings", "doc_id")
+
+    # deleting every tree leaves the view-partitioned embeddings table no
+    # parquet footer; it still reads, with the columns ingest writes
+    st.cascade_delete([hashing.document_id(p) for p, _, _ in DOCS])
+    for table in ("documents", "concepts", "fragments", "embeddings"):
+        df = st.read(table)
+        assert df.count() == 0 and sorted(df.dtypes) == sorted(both[table].dtypes)
+
+
+@pytest.mark.parametrize("crash_point", ["write", "commit"])
+def test_failed_cascade_delete_loses_no_table(spark, tmp_path, monkeypatch,
+                                              crash_point):
+    """A cascade delete whose third table write raises — in the parquet
+    write, or at its commit — leaves all four tables readable, each at its
+    rows from before or from after the delete; running the delete again
+    finishes it."""
+    from pyspark.sql import DataFrameWriter
+
+    from ocr_vector_db_spark.functions import hashing
+    from ocr_vector_db_spark.operators import index_maint
+
+    st = EntityStore(spark, str(tmp_path / "store"))
+    st.save_ingest(ingest(spark, files_df(spark, DOCS), dim=16))
+    keys = {"documents": "id", "concepts": "id", "fragments": "id",
+            "embeddings": "doc_id"}
+    before = {t: _ids(st, t, k) for t, k in keys.items()}
+    owner, name = {"write": (DataFrameWriter, "parquet"),
+                   "commit": (index_maint, "commit_generation")}[crash_point]
+    real = getattr(owner, name)
+    calls = []
+
+    def dying(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 3:
+            raise RuntimeError("writer died")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, dying)
+    doomed = [hashing.document_id(DOCS[0][0])]
+    with pytest.raises(RuntimeError, match="writer died"):
+        st.cascade_delete(doomed)
+    monkeypatch.undo()
+
+    mid = {t: _ids(st, t, k) for t, k in keys.items()}
+    st.cascade_delete(doomed)
+    after = {t: _ids(st, t, k) for t, k in keys.items()}
+    assert all(after[t] < before[t] for t in keys)
+    # child-first: embeddings and fragments committed, concepts and
+    # documents did not
+    assert [mid[t] == after[t] for t in keys] == [False, False, True, True]
+    assert [mid[t] == before[t] for t in keys] == [True, True, False, False]
 
 
 def test_ivf_index_persist_prune_recall(spark, tables, tmp_path_factory):
