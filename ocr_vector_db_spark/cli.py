@@ -87,6 +87,8 @@ def _spark():
 
 
 def cmd_ingest(args) -> int:
+    from pyspark.sql import functions as F
+
     from ocr_vector_db_spark.functions import hashing
     from ocr_vector_db_spark.sources.ingest import ingest, read_files
     from ocr_vector_db_spark.storage import EntityStore
@@ -94,9 +96,13 @@ def cmd_ingest(args) -> int:
     spark = _spark()
     store = EntityStore(spark, args.store)
     if store.exists("documents"):
-        # re-ingest idempotency: drop existing trees for these paths first
-        doomed = [hashing.document_id(p) for p in args.files]
-        store.cascade_delete(doomed)
+        # re-ingest idempotency: drop existing trees for these paths
+        # first; a store holding none of them is only appended to
+        ids = [hashing.document_id(p) for p in args.files]
+        stored = (store.read("documents").select("id")
+                  .filter(F.col("id").isin(ids)).collect())
+        if stored:
+            store.cascade_delete([r.id for r in stored])
     files = read_files(spark, args.files)
     out = ingest(spark, files, dim=args.dim)
     store.save_ingest(out)
@@ -925,245 +931,164 @@ def cmd_stream_ingest(args) -> int:
     return 0
 
 
-def cmd_stream_ingest_images(args) -> int:
-    """Incremental IMAGE-dedup-gated ingestion — `stream-ingest`'s twin
-    for raster assets (`streaming/assets.py`): each run drains the
-    parquet asset-frame files under --source (asset_id, data, width,
-    height — `asset_gray_frames` output), drops intra-batch perceptual
-    duplicates (dHash keep-min), screens survivors against the store's
-    PERSISTED PhashIndex at --radius, and folds accepted frames in so
-    later batches (and later runs) screen against them too. Re-scans and
-    re-encodes of already-accepted pages never reach the sink."""
+# One row per modality of the streaming asset gate (`streaming/assets.py`).
+# Objects are dotted names under the package, imported when the command
+# runs. `normalize` decodes container rows (PNG pages, mono 16-bit WAV
+# clips, animated gray GIFs; magic-byte detected) to the raw row shape
+# before the gate, so a re-encode of an indexed asset dedups perceptually
+# instead of falling to the exact-hash path. `dirs` are the index,
+# exact-key store, sink and checkpoint dirs under --store; `extras` are
+# index parameters persisted at build time (flag, argparse kwargs);
+# `nouns` fill the summary line.
+_ASSET_MODALITIES = {
+    "images": {
+        "index": "operators.image_hash.PhashIndex",
+        "schema": "asset_id string, data binary, width int, height int",
+        "normalize": "sources.containers.normalize_frame_rows",
+        "hashable": "streaming.assets.hashable_frames_pred",
+        "exact_key": "streaming.assets.exact_frame_key",
+        "dirs": ("phash_index", "exact_frames", "accepted_assets",
+                 "asset_stream_checkpoint"),
+        "extras": (),
+        "nouns": ("images", "hash", "frames"),
+        "radius": (4, "dHash Hamming radius for 'same image'"),
+        "source_help": "directory of parquet asset-frame files "
+                       "(asset_id string, data binary, width int, "
+                       "height int — asset_gray_frames output; mixed "
+                       "gray/RGB corpora use the library path with "
+                       "asset_raw_frames)",
+    },
+    "audio": {
+        "index": "operators.audio_fingerprint.AudioFpIndex",
+        "schema": "asset_id string, data binary",
+        "normalize": "sources.containers.normalize_clip_rows",
+        "hashable": "streaming.assets.hashable_clips_pred",
+        "exact_key": "streaming.assets.exact_clip_key",
+        "dirs": ("afp_index", "exact_clips", "accepted_audio",
+                 "audio_stream_checkpoint"),
+        "extras": (),
+        "nouns": ("clips", "frame", "clips"),
+        "radius": (6, "fingerprint Hamming radius for 'same recording'"),
+        "source_help": "directory of parquet clip files (asset_id "
+                       "string, data binary — raw mono PCM16LE, "
+                       "asset_pcm_frames output)",
+    },
+    "video": {
+        "index": "operators.video_hash.VideoFpIndex",
+        "schema": "asset_id string, data binary, width int, height int, "
+                  "n_frames int",
+        "normalize": "sources.containers.normalize_video_rows",
+        "hashable": "streaming.assets.hashable_videos_pred",
+        "exact_key": "streaming.assets.exact_video_key",
+        "dirs": ("vfp_index", "exact_videos", "accepted_videos",
+                 "video_stream_checkpoint"),
+        "extras": (
+            ("--every", {"type": int, "default": 1,
+                         "help": "frame sampling stride (persisted in the "
+                                 "index)"}),
+            ("--min-frac", {"type": float, "default": 0.6,
+                            "help": "aligned matched fraction for 'same "
+                                    "video'"}),
+        ),
+        "nouns": ("videos", "hash", "clips"),
+        "radius": (4, "per-frame dHash Hamming radius"),
+        "source_help": "directory of parquet clip files (asset_id "
+                       "string, data binary, width int, height int, "
+                       "n_frames int — raw gray frame buffers)",
+    },
+}
+
+
+def cmd_stream_ingest_assets(args) -> int:
+    """Incremental dedup-gated ingestion of image, audio or video assets —
+    `stream-ingest`'s twin for raw assets (`streaming/assets.py`). Each
+    run drains the parquet asset files under --source, drops intra-batch
+    near-dups (keep-min), screens survivors against the store's PERSISTED
+    fingerprint index at --radius, and folds accepted assets in so later
+    batches (and later runs) screen against them too. Images hash by
+    dHash (PhashIndex), PCM clips by energy fingerprint (AudioFpIndex:
+    gain and 2x-resample re-encodes land at Hamming 0), video clips by
+    aligned frame hashes (VideoFpIndex: a duplicate when >= --min-frac of
+    its sampled positions match one indexed clip within --radius). Assets
+    below the hash grid dedup by exact byte hash against the persisted
+    ExactFrameStore."""
+    import importlib
     import os
 
-    from ocr_vector_db_spark.operators.image_hash import PhashIndex
     from ocr_vector_db_spark.operators.index_maint import (
         EpochLedger, fs_exists,
     )
     from ocr_vector_db_spark.streaming.assets import (
         ExactFrameStore,
-        asset_store_paths,
         stream_ingest_asset_dedup,
     )
     from ocr_vector_db_spark.streaming.pipeline import ParquetAcceptedSink
 
+    def obj(dotted: str):
+        mod, _, name = dotted.rpartition(".")
+        return getattr(
+            importlib.import_module(f"ocr_vector_db_spark.{mod}"), name
+        )
+
+    m = _ASSET_MODALITIES[args.modality]
+    index_dir, exact_dir, accepted_dir, ckpt_dir = (
+        os.path.join(args.store, d) for d in m["dirs"]
+    )
+    extras = {flag[2:].replace("-", "_"): flag for flag, _ in m["extras"]}
+    index_cls = obj(m["index"])
     spark = _spark()
-    paths = asset_store_paths(args.store)
-    if fs_exists(spark, os.path.join(paths["index"], "meta.json")):
-        idx = PhashIndex.load(spark, paths["index"])
+    if fs_exists(spark, os.path.join(index_dir, "meta.json")):
+        idx = index_cls.load(spark, index_dir)
         if idx.r != args.radius:
             print(f"[error] store index was built at r={idx.r}; "
                   f"--radius {args.radius} would change the banded "
                   "layout — rebuild or match it")
             return 1
+        # extras travel WITH the index (a screen sampling differently
+        # from the build silently misses alignments) — the persisted
+        # values win, so a differing flag deserves a warning
+        for dest, flag in extras.items():
+            if getattr(args, dest) != getattr(idx, dest):
+                print(f"[warn] store index was built at "
+                      f"{dest}={getattr(idx, dest)}; {flag} "
+                      f"{getattr(args, dest)} is ignored (persisted value "
+                      "wins)")
     else:
-        empty = spark.createDataFrame(
-            [], "asset_id string, data binary, width int, height int"
-        )
-        idx = PhashIndex.build(
-            spark, empty, paths["index"],
+        idx = index_cls.build(
+            spark, spark.createDataFrame([], m["schema"]), index_dir,
             r=args.radius, n_buckets=args.buckets,
+            **{dest: getattr(args, dest) for dest in extras},
         )
-    from ocr_vector_db_spark.sources.containers import normalize_frame_rows
 
     stats: list = []
     q = stream_ingest_asset_dedup(
-        # PNG rows (magic-byte detected) decode to raw pixels with
-        # width/height overwritten from IHDR before the gate, so a
-        # PNG re-encode of an indexed page dedups PERCEPTUALLY instead
-        # of falling to the exact-hash path
-        normalize_frame_rows(
+        obj(m["normalize"])(
             spark.readStream
-            .schema("asset_id string, data binary, width int, height int")
+            .schema(m["schema"])
             .option("maxFilesPerTrigger", args.files_per_batch)
             .parquet(args.source)
         ),
         idx,
-        ParquetAcceptedSink(paths["accepted"]),
+        ParquetAcceptedSink(accepted_dir),
         stats=stats,
-        checkpoint=paths["checkpoint"],
-        ledger=EpochLedger(spark, paths["ledger"]),
+        checkpoint=ckpt_dir,
+        ledger=EpochLedger(spark, os.path.join(index_dir, "_epochs")),
         compact_every=args.compact_every,
-        exact_store=ExactFrameStore(spark, paths["exact"]),
+        exact_store=ExactFrameStore(spark, exact_dir),
+        hashable_pred=obj(m["hashable"]),
+        exact_key=obj(m["exact_key"]),
     )
     q.awaitTermination()
-    acc = sum(s["accepted"] for s in stats)
-    drop = sum(s["dropped_as_dup"] for s in stats)
-    unh = sum(s["unhashable"] for s in stats)
-    xdrop = sum(s["dropped_exact_dup"] for s in stats)
-    print(f"[stream-ingest-images] {len(stats)} micro-batches: accepted "
-          f"{acc}, dropped {drop} near-dup images; {unh} below the hash "
-          f"grid ({xdrop} dropped byte-identical); accepted frames under "
-          f"{paths['accepted']}")
-    return 0
-
-
-def cmd_stream_ingest_audio(args) -> int:
-    """Incremental AUDIO-dedup-gated ingestion — `stream-ingest-images`'
-    twin for PCM clips (the same `streaming/assets.py` gate through its
-    modality seams): each run drains parquet clip files under --source
-    (asset_id, data — raw mono PCM16LE, `asset_pcm_frames` output),
-    drops intra-batch near-dups (energy-fingerprint keep-min: gain and
-    2x-resample re-encodes land at Hamming 0 exactly), screens survivors
-    against the store's persisted AudioFpIndex at --radius, and folds
-    accepted clips in. Clips below the 65-sample frame grid dedup by
-    exact byte hash against the persisted ExactFrameStore."""
-    import os
-
-    from ocr_vector_db_spark.operators.audio_fingerprint import AudioFpIndex
-    from ocr_vector_db_spark.operators.index_maint import (
-        EpochLedger, fs_exists,
+    acc, drop, unh, xdrop = (
+        sum(s[k] for s in stats)
+        for k in ("accepted", "dropped_as_dup", "unhashable",
+                  "dropped_exact_dup")
     )
-    from ocr_vector_db_spark.streaming.assets import (
-        ExactFrameStore,
-        audio_store_paths,
-        exact_clip_key,
-        hashable_clips_pred,
-        stream_ingest_asset_dedup,
-    )
-    from ocr_vector_db_spark.streaming.pipeline import ParquetAcceptedSink
-
-    spark = _spark()
-    paths = audio_store_paths(args.store)
-    if fs_exists(spark, os.path.join(paths["index"], "meta.json")):
-        idx = AudioFpIndex.load(spark, paths["index"])
-        if idx.r != args.radius:
-            print(f"[error] store index was built at r={idx.r}; "
-                  f"--radius {args.radius} would change the banded "
-                  "layout — rebuild or match it")
-            return 1
-    else:
-        empty = spark.createDataFrame([], "asset_id string, data binary")
-        idx = AudioFpIndex.build(
-            spark, empty, paths["index"],
-            r=args.radius, n_buckets=args.buckets,
-        )
-    from ocr_vector_db_spark.sources.containers import normalize_clip_rows
-
-    stats: list = []
-    q = stream_ingest_asset_dedup(
-        # mono 16-bit WAV rows (magic-byte detected) decode to their raw
-        # PCM payload before the gate — a WAV re-encode of an indexed
-        # clip dedups perceptually instead of falling to the exact path
-        normalize_clip_rows(
-            spark.readStream
-            .schema("asset_id string, data binary")
-            .option("maxFilesPerTrigger", args.files_per_batch)
-            .parquet(args.source)
-        ),
-        idx,
-        ParquetAcceptedSink(paths["accepted"]),
-        stats=stats,
-        checkpoint=paths["checkpoint"],
-        ledger=EpochLedger(spark, paths["ledger"]),
-        compact_every=args.compact_every,
-        exact_store=ExactFrameStore(spark, paths["exact"]),
-        hashable_pred=hashable_clips_pred,
-        exact_key=exact_clip_key,
-    )
-    q.awaitTermination()
-    acc = sum(s["accepted"] for s in stats)
-    drop = sum(s["dropped_as_dup"] for s in stats)
-    unh = sum(s["unhashable"] for s in stats)
-    xdrop = sum(s["dropped_exact_dup"] for s in stats)
-    print(f"[stream-ingest-audio] {len(stats)} micro-batches: accepted "
-          f"{acc}, dropped {drop} near-dup clips; {unh} below the frame "
-          f"grid ({xdrop} dropped byte-identical); accepted clips under "
-          f"{paths['accepted']}")
-    return 0
-
-
-def cmd_stream_ingest_video(args) -> int:
-    """Incremental VIDEO-dedup-gated ingestion — the third modality of
-    the `streaming/assets.py` gate: each run drains parquet clip files
-    under --source (asset_id, data, width, height, n_frames — raw gray
-    frame buffers back to back), drops intra-batch near-dups (aligned
-    frame-hash keep-min), screens survivors against the store's
-    persisted VideoFpIndex (a new video is a duplicate when >= min-frac
-    of its sampled positions match one indexed video at the same
-    position within --radius), and folds accepted clips' frame
-    signatures in. Sub-grid clips dedup by exact byte hash."""
-    import os
-
-    from ocr_vector_db_spark.operators.index_maint import (
-        EpochLedger, fs_exists,
-    )
-    from ocr_vector_db_spark.operators.video_hash import VideoFpIndex
-    from ocr_vector_db_spark.streaming.assets import (
-        ExactFrameStore,
-        exact_video_key,
-        hashable_videos_pred,
-        stream_ingest_asset_dedup,
-        video_store_paths,
-    )
-    from ocr_vector_db_spark.streaming.pipeline import ParquetAcceptedSink
-
-    spark = _spark()
-    paths = video_store_paths(args.store)
-    if fs_exists(spark, os.path.join(paths["index"], "meta.json")):
-        idx = VideoFpIndex.load(spark, paths["index"])
-        if idx.r != args.radius:
-            print(f"[error] store index was built at r={idx.r}; "
-                  f"--radius {args.radius} would change the banded "
-                  "layout — rebuild or match it")
-            return 1
-        # every/min_frac travel WITH the index (a screen sampling
-        # differently from the build silently misses alignments) — the
-        # persisted values win, so a differing flag deserves a warning
-        if args.every != idx.every:
-            print(f"[warn] store index was built at every={idx.every}; "
-                  f"--every {args.every} is ignored (persisted value "
-                  "wins)")
-        if args.min_frac != idx.min_frac:
-            print(f"[warn] store index was built at "
-                  f"min_frac={idx.min_frac}; --min-frac {args.min_frac} "
-                  "is ignored (persisted value wins)")
-    else:
-        empty = spark.createDataFrame(
-            [], "asset_id string, data binary, width int, height int, "
-                "n_frames int"
-        )
-        idx = VideoFpIndex.build(
-            spark, empty, paths["index"], r=args.radius,
-            n_buckets=args.buckets, every=args.every,
-            min_frac=args.min_frac,
-        )
-    from ocr_vector_db_spark.sources.containers import (
-        normalize_video_rows,
-    )
-
-    stats: list = []
-    q = stream_ingest_asset_dedup(
-        # animated gray GIFs (magic-byte detected) decode to raw frame
-        # buffers with width/height/n_frames overwritten from the
-        # container before the gate — a GIF re-encode of an indexed
-        # clip dedups perceptually instead of falling to the exact path
-        normalize_video_rows(
-            spark.readStream
-            .schema("asset_id string, data binary, width int, "
-                    "height int, n_frames int")
-            .option("maxFilesPerTrigger", args.files_per_batch)
-            .parquet(args.source)
-        ),
-        idx,
-        ParquetAcceptedSink(paths["accepted"]),
-        stats=stats,
-        checkpoint=paths["checkpoint"],
-        ledger=EpochLedger(spark, paths["ledger"]),
-        compact_every=args.compact_every,
-        exact_store=ExactFrameStore(spark, paths["exact"]),
-        hashable_pred=hashable_videos_pred,
-        exact_key=exact_video_key,
-    )
-    q.awaitTermination()
-    acc = sum(s["accepted"] for s in stats)
-    drop = sum(s["dropped_as_dup"] for s in stats)
-    unh = sum(s["unhashable"] for s in stats)
-    xdrop = sum(s["dropped_exact_dup"] for s in stats)
-    print(f"[stream-ingest-video] {len(stats)} micro-batches: accepted "
-          f"{acc}, dropped {drop} near-dup videos; {unh} below the hash "
-          f"grid ({xdrop} dropped byte-identical); accepted clips under "
-          f"{paths['accepted']}")
+    dup, grid, kept = m["nouns"]
+    print(f"[stream-ingest-{args.modality}] {len(stats)} micro-batches: "
+          f"accepted {acc}, dropped {drop} near-dup {dup}; {unh} below the "
+          f"{grid} grid ({xdrop} dropped byte-identical); accepted {kept} "
+          f"under {accepted_dir}")
     return 0
 
 
@@ -1536,50 +1461,19 @@ def build_parser() -> argparse.ArgumentParser:
                          "(default 0.3; needs `decontam --build` first)")
     sp.set_defaults(fn=cmd_stream_ingest)
 
-    sp = sub.add_parser("stream-ingest-images")
-    common(sp)
-    sp.add_argument("--source", required=True,
-                    help="directory of parquet asset-frame files "
-                         "(asset_id string, data binary, width int, "
-                         "height int — asset_gray_frames output; mixed "
-                         "gray/RGB corpora use the library path with "
-                         "asset_raw_frames)")
-    sp.add_argument("--radius", type=int, default=4,
-                    help="dHash Hamming radius for 'same image'")
-    sp.add_argument("--buckets", type=int, default=64)
-    sp.add_argument("--files-per-batch", type=int, default=64)
-    sp.add_argument("--compact-every", type=int, default=32)
-    sp.set_defaults(fn=cmd_stream_ingest_images)
-
-    sp = sub.add_parser("stream-ingest-audio")
-    common(sp)
-    sp.add_argument("--source", required=True,
-                    help="directory of parquet clip files (asset_id "
-                         "string, data binary — raw mono PCM16LE, "
-                         "asset_pcm_frames output)")
-    sp.add_argument("--radius", type=int, default=6,
-                    help="fingerprint Hamming radius for 'same recording'")
-    sp.add_argument("--buckets", type=int, default=64)
-    sp.add_argument("--files-per-batch", type=int, default=64)
-    sp.add_argument("--compact-every", type=int, default=32)
-    sp.set_defaults(fn=cmd_stream_ingest_audio)
-
-    sp = sub.add_parser("stream-ingest-video")
-    common(sp)
-    sp.add_argument("--source", required=True,
-                    help="directory of parquet clip files (asset_id "
-                         "string, data binary, width int, height int, "
-                         "n_frames int — raw gray frame buffers)")
-    sp.add_argument("--radius", type=int, default=4,
-                    help="per-frame dHash Hamming radius")
-    sp.add_argument("--every", type=int, default=1,
-                    help="frame sampling stride (persisted in the index)")
-    sp.add_argument("--min-frac", type=float, default=0.6,
-                    help="aligned matched fraction for 'same video'")
-    sp.add_argument("--buckets", type=int, default=64)
-    sp.add_argument("--files-per-batch", type=int, default=64)
-    sp.add_argument("--compact-every", type=int, default=32)
-    sp.set_defaults(fn=cmd_stream_ingest_video)
+    for name, m in _ASSET_MODALITIES.items():
+        sp = sub.add_parser(f"stream-ingest-{name}")
+        common(sp)
+        sp.add_argument("--source", required=True, help=m["source_help"])
+        radius, radius_help = m["radius"]
+        sp.add_argument("--radius", type=int, default=radius,
+                        help=radius_help)
+        for flag, kwargs in m["extras"]:
+            sp.add_argument(flag, **kwargs)
+        sp.add_argument("--buckets", type=int, default=64)
+        sp.add_argument("--files-per-batch", type=int, default=64)
+        sp.add_argument("--compact-every", type=int, default=32)
+        sp.set_defaults(fn=cmd_stream_ingest_assets, modality=name)
 
     sp = sub.add_parser("semantic-index")
     common(sp)

@@ -15,10 +15,17 @@ the marker leaves an orphan gen dir that the next publish overwrites.
 Every rewrite goes through `publish`: compaction, the 1-row stats
 tables, the KB-sized sketch tables, DriftBaseline's and BPETokenizer's
 two-subdir states (a writer callable fills the dir), the running sample.
+`append` is the one appender: it writes rows INTO the live generation.
 
 A path with data files but no committed generation is a legacy flat
 layout and resolves to itself, so pre-generation indexes stay readable;
-their first compaction migrates them into `gen-000001`.
+their first compaction (or `append`) migrates them into `gen-000001`.
+
+Two stores use `publish`/`append` directly instead of `PersistedIndex`:
+the entity tables (`storage.py`) and the streaming gates' exact-key
+store (`streaming/assets.py:ExactFrameStore`, one `(__xkey, epoch)`
+table rooted at the store path; a pre-generation store's `epoch=N/`
+dirs are its legacy flat layout).
 
 `PersistedIndex` is the base of the indexes built from those tables:
   build    `_start_build` clears the index root ONCE (tables and sidecar
@@ -76,13 +83,19 @@ def _fs(spark: SparkSession, path: str):
     return hpath, hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
 
 
+def list_names(spark: SparkSession, path: str) -> set[str]:
+    """Names of the entries directly under `path` (empty when `path` does
+    not exist) — one FileSystem listing, no Spark job."""
+    hpath, fs = _fs(spark, path)
+    if not fs.exists(hpath(path)):
+        return set()
+    return {st.getPath().getName() for st in fs.listStatus(hpath(path))}
+
+
 def committed_generations(spark: SparkSession, path: str) -> list[int]:
     """Sorted generation numbers that have BOTH a commit marker and their
     data directory present under `path`."""
-    hpath, fs = _fs(spark, path)
-    if not fs.exists(hpath(path)):
-        return []
-    names = {st.getPath().getName() for st in fs.listStatus(hpath(path))}
+    names = list_names(spark, path)
     out = []
     for name in names:
         m = _GEN_MARK_RE.fullmatch(name)
@@ -208,6 +221,28 @@ def publish(
     return dest
 
 
+def append(
+    spark: SparkSession,
+    root: str,
+    df: DataFrame,
+    partition_col: str | None = None,
+) -> None:
+    """Append `df` into the live generation of the table at `root`. A
+    table without a committed generation publishes generation 1: its
+    legacy flat rows (none when the table is new) plus `df`."""
+    gens = committed_generations(spark, root)
+    if not gens:
+        # a new table skips the read: Spark logs a stack trace for it
+        flat = read_or_none(spark, root) if fs_exists(spark, root) else None
+        publish(spark, root, df if flat is None else flat.unionByName(df),
+                partition_col)
+        return
+    w = df.write.mode("append")
+    if partition_col is not None:
+        w = w.partitionBy(partition_col)
+    w.parquet(posixpath.join(root, _gen_name(gens[-1])))
+
+
 def write_small_file(spark: SparkSession, path: str, data: bytes) -> None:
     """Write a small metadata file (index meta/centroids) through the
     Hadoop FileSystem API so the index layouts stay local/HDFS-portable —
@@ -271,10 +306,7 @@ class EpochLedger:
         self.path = path
 
     def _names(self) -> set[str]:
-        hpath, fs = _fs(self.spark, self.path)
-        if not fs.exists(hpath(self.path)):
-            return set()
-        return {st.getPath().getName() for st in fs.listStatus(hpath(self.path))}
+        return list_names(self.spark, self.path)
 
     def _max_of(self, kind: str) -> int:
         pat = re.compile(rf"{kind}-(\d{{12}})$")

@@ -188,25 +188,6 @@ def video_clip_frames(
         )
 
 
-def video_dropped_ids(
-    clips: DataFrame,
-    r: int,
-    id_col: str = "asset_id",
-    every: int = 1,
-    min_frac: float = 0.6,
-) -> DataFrame:
-    """`image_dropped_ids`' video twin: ids to DROP from a batch under
-    the keep-min convention — every video with a LOWER-id near-dup
-    (aligned matched fraction ≥ min_frac at Hamming ≤ r) in the same
-    batch. Input is the projected clip shape (`video_clip_frames`)."""
-    vsigs = video_frame_signatures(video_clip_frames(clips, every, id_col))
-    return (
-        video_near_dup_pairs(vsigs, r=r, min_frac=min_frac)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-
-
 class VideoFpIndex(SimHashIndex):
     """Persisted video near-dup index — the third modality on
     SimHashIndex's banded machinery (PhashIndex = images, AudioFpIndex =

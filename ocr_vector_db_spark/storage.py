@@ -23,7 +23,8 @@ Mapping from the reference's storage layer:
 - re-ingest idempotency (api/use_cases/ingest.py:147-160)  →
   `cascade_delete` of the re-ingested document ids, then `save_ingest`.
 - cascade delete (storage/cascade.py:83-151)  →  operators/cascade.py
-  anti-joins; each surviving table is published as its next generation,
+  anti-joins, plus the parents rows of the deleted concepts; each
+  surviving table is published as its next generation,
   child-first, so a delete that dies midway leaves every table readable
   at its before or its after state.
 
@@ -39,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ocr_vector_db_spark.operators.index_maint import (
     PersistedIndex,
-    committed_generations,
+    append,
     fs_exists,
     read_or_none,
 )
@@ -75,15 +76,9 @@ class EntityStore(PersistedIndex):
         self._publish(table, df, self.PARTITIONING.get(table))
 
     def _append(self, table: str, df: DataFrame) -> None:
-        """Append `df` into `table`'s live generation. A table without a
-        committed generation publishes generation 1: its flat rows from
-        before generations (none when the table is new) plus `df`."""
-        first = not committed_generations(self.spark, self._root(table))
-        if first:
-            flat = read_or_none(self.spark, self._root(table))
-            if flat is not None:
-                df = flat.unionByName(df)
-        self._write(table, df, self.PARTITIONING.get(table), build=first)
+        """Append `df` into `table`'s live generation (`index_maint.append`:
+        a table without one publishes generation 1)."""
+        append(self.spark, self._root(table), df, self.PARTITIONING.get(table))
 
     # ------------------------------------------------------------- upserts
 
@@ -120,20 +115,32 @@ class EntityStore(PersistedIndex):
         self.upsert_by_key("parents", out["parents"], "id")
 
     def cascade_delete(self, doc_ids: list[str]) -> dict[str, int]:
-        """Delete document trees child-first (CASCADE-001..004); returns
-        per-table surviving row counts."""
+        """Delete document trees child-first (CASCADE-001..004), with the
+        parent contexts of their concepts; returns per-table surviving row
+        counts."""
         from ocr_vector_db_spark.operators.cascade import cascade_delete
 
         doomed = self.spark.createDataFrame([(d,) for d in doc_ids], ["id"])
+        concepts = self.read("concepts")
         survivors = cascade_delete(
             self.read("documents"),
-            self.read("concepts"),
+            concepts,
             self.read("fragments"),
             self.read("embeddings"),
             doomed,
         )
+        # parents are keyed by concept id; published before concepts, so
+        # this plan still reads the concepts generation it was built over
+        doomed_concepts = concepts.join(
+            F.broadcast(doomed.withColumnRenamed("id", "document_id")),
+            "document_id", "left_semi",
+        ).select("id")
+        survivors["parents"] = self.read("parents").join(
+            doomed_concepts, "id", "left_anti"
+        )
         counts = {}
-        for table in ("embeddings", "fragments", "concepts", "documents"):  # child-first
+        for table in ("embeddings", "fragments", "parents", "concepts",
+                      "documents"):  # child-first
             self.write(table, survivors[table])
             counts[table] = self.read(table).count()
         return counts

@@ -31,19 +31,21 @@ Batch cost is independent of how much the stream has already ingested.
 Replay safety mirrors the text pipeline: foreachBatch re-runs the last
 uncommitted epoch; `ParquetAcceptedSink` overwrites its own epoch dir,
 the index re-add guard (or the `EpochLedger` fast path) makes the fold a
-no-op, and a fully committed epoch short-circuits entirely.
+no-op, the exact store screens each epoch against older epochs' keys
+only, and a fully committed epoch short-circuits entirely.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocr_vector_db_spark.operators.image_hash import (
-    dhash_signatures,
-    phash_near_dup_pairs,
+from ocr_vector_db_spark.operators.index_maint import (
+    append,
+    current_gen_dir,
+    list_names,
+    publish,
+    read_or_none,
 )
 from ocr_vector_db_spark.streaming.pipeline import _start_foreach_batch
 
@@ -87,194 +89,62 @@ def exact_frame_key(df: DataFrame) -> "F.Column":
 class ExactFrameStore:
     """Persisted exact-content keys of accepted UNHASHABLE frames — the
     byte-hash sidecar to the PhashIndex (image_hash.py's 'screen them by
-    exact byte hash instead'). Layout: one parquet dir per epoch
-    (`path/epoch=N`, key column only), so a replayed epoch's add is an
-    idempotent overwrite; `keys(before_epoch)` reads strictly OLDER
-    epochs, so a crash between the store add and the ledger commit can
-    never make the retry screen a batch against its own keys (which
-    would sink the epoch empty)."""
+    exact byte hash instead'). One `(__xkey, epoch)` table rooted at
+    `path`, on `index_maint`'s generations: `add` appends an epoch's
+    keys into the live generation, `compact` publishes the live rows as
+    the next one. Each row keeps its epoch, and `keys(before_epoch)`
+    reads strictly OLDER epochs, so a replayed epoch never screens its
+    batch against its own keys (which would sink the epoch empty); the
+    duplicate keys a replay appends are harmless to the anti-join.
+
+    A store written before generations (`path/epoch=N/` dirs) reads
+    through partition discovery as the same two columns, and its first
+    `add` or `compact` migrates it into `gen-000001`. A `_compact_*`
+    stage dir left by that era's compaction may hold the only copy of
+    folded keys, which partition discovery skips: such a store raises
+    instead of reading or migrating without them."""
+
+    SCHEMA = "__xkey string, epoch int"
 
     def __init__(self, spark, path: str):
         self.spark = spark
         self.path = path
 
+    def _live(self) -> DataFrame | None:
+        """The live rows, or None while the store holds no data files."""
+        gen = current_gen_dir(self.spark, self.path)
+        if gen == self.path:  # no generation yet: a new or legacy store
+            names = list_names(self.spark, self.path)
+            stages = sorted(n for n in names if n.startswith("_compact_"))
+            if stages:
+                raise IOError(
+                    f"ExactFrameStore {self.path}: legacy stage dir "
+                    f"{stages[0]} may hold keys no epoch dir has; restore "
+                    "it as the epoch dir it was staged for (its number "
+                    "minus one) before using the store"
+                )
+            if not names:
+                return None
+        return read_or_none(self.spark, gen, self.SCHEMA)
+
     def keys(self, before_epoch: int) -> DataFrame:
-        from ocr_vector_db_spark.operators.index_maint import fs_exists
-
-        if not fs_exists(self.spark, self.path):
+        live = self._live()
+        if live is None:
             return self.spark.createDataFrame([], "__xkey string")
-        epochs, stages = self._list_dirs()  # ONE FS listing per screen
-        if epochs:
-            out = (
-                self.spark.read.parquet(self.path)
-                .filter(F.col("epoch") < before_epoch)
-                .select("__xkey")
-            )
-        else:
-            # a crash can leave ONLY stage dirs (every epoch folded,
-            # rename pending) — the bare root read would fail to infer
-            out = self.spark.createDataFrame([], "__xkey string")
-        # union readable _compact_* stage dirs: between compact()'s
-        # fs.delete(target) and fs.rename, the target epoch's keys exist
-        # ONLY in an underscore-prefixed stage that partition discovery
-        # ignores — without this, a crash in that window silently
-        # re-admits byte-identical assets until a later compact folds
-        # the stage back in. Staged keys are always merges of COMMITTED
-        # epochs strictly below the current one (compact's
-        # precondition), so including them never screens a batch against
-        # its own keys. Only the mid-write-crash shapes are skipped — an
-        # empty/schema-less stage is redundant with its still-present
-        # sources — while a GENUINE read error (transient IO, corrupt
-        # footer on a stage that holds the only copy of folded keys)
-        # raises instead of silently weakening the exact screen.
-        from ocr_vector_db_spark.operators.index_maint import read_or_none
-
-        for name in stages:
-            staged = read_or_none(self.spark, os.path.join(self.path, name))
-            if staged is not None:
-                out = out.unionByName(staged.select("__xkey"))
-        return out
-
-    def _list_dirs(self) -> tuple:
-        """(epoch numbers, `_compact_*` stage dir names) currently on
-        disk — one FileSystem listing, no Spark job."""
-        jvm = self.spark.sparkContext._jvm
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = root.getFileSystem(conf)
-        epochs, stages = [], []
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith("epoch="):
-                epochs.append(int(name.split("=", 1)[1]))
-            elif name.startswith("_compact_"):
-                stages.append(name)
-        return epochs, stages
+        return live.filter(F.col("epoch") < before_epoch).select("__xkey")
 
     def add(self, keys: DataFrame, epoch_id: int) -> None:
-        keys.select("__xkey").distinct().write.mode("overwrite").parquet(
-            os.path.join(self.path, f"epoch={epoch_id}")
-        )
+        self._live()  # a legacy store with stage dirs raises, unmigrated
+        append(self.spark, self.path, keys.select("__xkey").distinct()
+               .withColumn("epoch", F.lit(epoch_id).cast("int")))
 
-    def compact(self, below_epoch: int) -> None:
-        """Fold every epoch dir with epoch < below_epoch into ONE dir at
-        `epoch = below_epoch - 1` — bounds the store's file count (one
-        tiny dir per epoch forever is the classic streaming small-files
-        leak). Safe only for COMMITTED epochs (pass the ledger's
-        committed()+1 at most): a committed epoch never replays, so
-        nothing will ever screen with before_epoch <= below_epoch - 1
-        again, and all folded keys stay visible to every later epoch.
-
-        Crash-safe by staging, never by overwrite: the merge is written
-        to an underscore-prefixed staging dir, the target epoch dir
-        swaps in via delete+rename (two metadata ops), and the source
-        dirs drop only AFTER the swap — so at every instant every key
-        lives in at least one on-disk dir, and `keys()` unions readable
-        stage dirs so even the delete→rename window never hides a key
-        from the screen. A crash costs at most duplicate keys (harmless
-        to the anti-join); the next cycle folds stale stages back in as
-        sources and cleans them. (The previous overwrite-in-place
-        scheme deleted the target's only copy before the new write
-        landed — a mid-write crash lost committed keys for good.)"""
-        from ocr_vector_db_spark.operators.index_maint import fs_exists
-
-        if below_epoch < 1 or not fs_exists(self.spark, self.path):
-            return
-        jvm = self.spark.sparkContext._jvm
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = root.getFileSystem(conf)
-        # one FileSystem listing; the dir list is the only driver-sized
-        # state here
-        epochs, stale = self._list_dirs()
-        doomed = [e for e in epochs if e < below_epoch - 1]
-        if not doomed and not stale:
-            return
-        if epochs:
-            merged = (
-                self.spark.read.parquet(self.path)
-                .filter(F.col("epoch") < below_epoch)
-                .select("__xkey")
-            )
-        else:
-            # only stage dirs survive a crash that folded every epoch:
-            # the bare root read cannot infer a schema, start empty
-            merged = self.spark.createDataFrame([], "__xkey string")
-        # a stale stage can hold the target's only copy (crash between
-        # its delete and rename); an unreadable one (crash MID-WRITE —
-        # empty/schema-less) is redundant with the still-present
-        # sources. Only those two mid-write shapes may be skipped: a
-        # GENUINE read error (transient IO, corrupt footer) must abort
-        # the compact BEFORE anything is deleted, because the deletion
-        # loop below drops every stale stage unconditionally — silently
-        # excluding a stage that held the only copy of folded keys
-        # would be permanent key loss, after which byte-identical
-        # assets re-admit forever. Aborting is always safe here: every
-        # key is still on disk and the next cycle retries the fold.
-        from ocr_vector_db_spark.operators.index_maint import read_or_none
-
-        for name in stale:
-            staged = read_or_none(self.spark, os.path.join(self.path, name))
-            if staged is not None:
-                merged = merged.unionByName(staged.select("__xkey"))
-        merged = merged.distinct()
-        stage_name = f"_compact_{below_epoch}"
-        while fs.exists(jvm.org.apache.hadoop.fs.Path(
-                os.path.join(self.path, stage_name))):
-            stage_name += "x"  # never overwrite a stale stage
-        merged.write.parquet(os.path.join(self.path, stage_name))
-        target = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(self.path, f"epoch={below_epoch - 1}")
-        )
-        # Hadoop FileSystems signal most failures by RETURNING FALSE,
-        # not raising — an unchecked failed swap would go on to delete
-        # the source dirs while the merged keys sit invisible in the
-        # underscore stage. Refuse loudly instead: every key is still
-        # on disk (stage + sources) and the next cycle folds the stage
-        # back in.
-        if fs.exists(target) and not fs.delete(target, True):
-            raise IOError(
-                f"ExactFrameStore.compact: could not clear {target}; "
-                f"merged keys staged at {stage_name}, sources kept"
-            )
-        if not fs.rename(
-            jvm.org.apache.hadoop.fs.Path(
-                os.path.join(self.path, stage_name)
-            ),
-            target,
-        ):
-            raise IOError(
-                f"ExactFrameStore.compact: rename {stage_name} -> "
-                f"{target} failed; sources kept"
-            )
-        for e in doomed:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    os.path.join(self.path, f"epoch={e}")
-                ),
-                True,
-            )
-        for name in stale:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    os.path.join(self.path, name)
-                ),
-                True,
-            )
-
-
-def image_dropped_ids(
-    frames: DataFrame, r: int, id_col: str = "asset_id"
-) -> DataFrame:
-    """ids to DROP from a batch under the keep-min convention: every asset
-    with a LOWER-id near-dup (Hamming ≤ r) in the same batch. One banded
-    pair search over the batch only."""
-    sigs = dhash_signatures(frames, id_col=id_col)
-    return (
-        phash_near_dup_pairs(sigs, r=r)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
+    def compact(self) -> None:
+        """Publish the live rows as ONE file in the next generation —
+        bounds the store's file count (one small append per epoch is the
+        classic streaming small-files leak)."""
+        live = self._live()
+        if live is not None:
+            publish(self.spark, self.path, live.coalesce(1))
 
 
 # ---------------------------------------------------------------------
@@ -294,24 +164,6 @@ def hashable_clips_pred(df: DataFrame) -> "F.Column":
         & (F.length("data") >= N_FRAMES * 2)
     )
     return F.coalesce(ok, F.lit(False))
-
-
-def audio_dropped_ids(
-    clips: DataFrame, r: int, id_col: str = "asset_id"
-) -> DataFrame:
-    """`image_dropped_ids`' audio twin: keep-min over the batch's energy-
-    fingerprint near-dup pairs (same 64-bit banded Hamming search)."""
-    from ocr_vector_db_spark.operators.audio_fingerprint import (
-        audio_fingerprints,
-        audio_near_dup_pairs,
-    )
-
-    sigs = audio_fingerprints(clips, id_col=id_col)
-    return (
-        audio_near_dup_pairs(sigs, r=r)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
 
 
 def exact_clip_key(df: DataFrame) -> "F.Column":
@@ -489,48 +341,7 @@ def stream_ingest_asset_dedup(
             batch_df.unpersist()
         if compact_every is not None and (epoch_id + 1) % compact_every == 0:
             index.compact()
-            # the exact store's compaction precondition is COMMITTED
-            # epochs (compact folds dirs a replay must never overwrite);
-            # without a ledger no epoch is provably committed — the
-            # streaming checkpoint alone can replay the current epoch
-            # after a crash — so ledgerless runs keep per-epoch dirs
-            if exact_store is not None and ledger is not None:
-                # every epoch <= epoch_id just committed (or no-op'd);
-                # folding them bounds the store's dir count
-                exact_store.compact(below_epoch=epoch_id + 1)
+            if exact_store is not None:
+                exact_store.compact()
 
     return _start_foreach_batch(frames_stream, per_batch, checkpoint)
-
-
-def asset_store_paths(store: str) -> dict[str, str]:
-    """Store layout for the CLI: index + sink + ledger + checkpoint."""
-    return {
-        "index": os.path.join(store, "phash_index"),
-        "exact": os.path.join(store, "exact_frames"),
-        "accepted": os.path.join(store, "accepted_assets"),
-        "ledger": os.path.join(store, "phash_index", "_epochs"),
-        "checkpoint": os.path.join(store, "asset_stream_checkpoint"),
-    }
-
-
-def video_store_paths(store: str) -> dict[str, str]:
-    """`asset_store_paths`' video twin."""
-    return {
-        "index": os.path.join(store, "vfp_index"),
-        "exact": os.path.join(store, "exact_videos"),
-        "accepted": os.path.join(store, "accepted_videos"),
-        "ledger": os.path.join(store, "vfp_index", "_epochs"),
-        "checkpoint": os.path.join(store, "video_stream_checkpoint"),
-    }
-
-
-def audio_store_paths(store: str) -> dict[str, str]:
-    """`asset_store_paths`' audio twin (separate dirs so one store root
-    can gate both modalities)."""
-    return {
-        "index": os.path.join(store, "afp_index"),
-        "exact": os.path.join(store, "exact_clips"),
-        "accepted": os.path.join(store, "accepted_audio"),
-        "ledger": os.path.join(store, "afp_index", "_epochs"),
-        "checkpoint": os.path.join(store, "audio_stream_checkpoint"),
-    }

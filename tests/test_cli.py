@@ -50,6 +50,39 @@ def test_cli_lifecycle(spark, tmp_path, capsys):
     assert m["total_rows"] == m["distinct_doc_ids"]  # no duplicate embeddings
 
 
+def test_cli_ingest_appends_new_paths_without_rewriting(spark, tmp_path,
+                                                       capsys):
+    """Ingesting a path the store does not hold appends into the live
+    generations (no cascade-delete rewrite); re-ingesting a stored path
+    replaces its tree without duplicating rows."""
+    from ocr_vector_db_spark.operators.index_maint import (
+        committed_generations,
+    )
+    from ocr_vector_db_spark.storage import EntityStore
+
+    docs = []
+    for name in ("a", "b"):
+        doc = tmp_path / f"{name}.md"
+        doc.write_text(f"Prose about topic {name} long enough to pass "
+                       f"validation.\n\n```python\ndef {name}():\n"
+                       "    return 1\n```\n")
+        docs.append(str(doc))
+    store = str(tmp_path / "store")
+    assert cli.main(["ingest", docs[0], "--store", store, "--dim", "16"]) == 0
+    gens = committed_generations(spark, store + "/documents")
+    assert cli.main(["ingest", docs[1], "--store", store, "--dim", "16"]) == 0
+    assert committed_generations(spark, store + "/documents") == gens
+
+    st = EntityStore(spark, store)
+    counts = {t: st.read(t).count() for t in st.TABLES}
+    assert cli.main(["ingest", docs[0], "--store", store, "--dim", "16"]) == 0
+    capsys.readouterr()
+    assert {t: st.read(t).count() for t in st.TABLES} == counts
+    for table in ("documents", "concepts", "fragments", "parents"):
+        ids = st.read(table).select("id")
+        assert ids.count() == ids.distinct().count(), table
+
+
 def test_cli_hybrid_search_and_pack(spark, tmp_path, capsys):
     doc = tmp_path / "guide.md"
     doc.write_text(
@@ -943,6 +976,16 @@ def test_cli_stream_ingest_images(spark, tmp_path, capsys):
                      "--source", str(src), "--radius", "2"]) == 1
     assert "r=4" in capsys.readouterr().out
 
+    # a sub-grid icon, then its byte-identical re-send in a later run:
+    # the persisted exact store screens it
+    icon = bytes(range(16))
+    for name, want in (("b3", "(0 dropped byte-identical)"),
+                       ("b4", "(1 dropped byte-identical)")):
+        feed(src, name, [(f"icon_{name}", icon, 4, 4)])
+        assert cli.main(["stream-ingest-images", "--store", store,
+                         "--source", str(src), "--buckets", "8"]) == 0
+        assert want in capsys.readouterr().out
+
 
 def test_cli_stream_ingest_audio(spark, tmp_path, capsys):
     """stream-ingest-audio drains parquet PCM clips, seeds the store's
@@ -1002,6 +1045,16 @@ def test_cli_stream_ingest_audio(spark, tmp_path, capsys):
     assert cli.main(["stream-ingest-audio", "--store", store,
                      "--source", str(src), "--radius", "2"]) == 1
     assert "r=6" in capsys.readouterr().out
+
+    # a clip below the frame grid, then its byte-identical re-send in a
+    # later run: the persisted exact store screens it
+    short = synth("cli-short", 20)
+    for name, want in (("b3", "(0 dropped byte-identical)"),
+                       ("b4", "(1 dropped byte-identical)")):
+        feed(src, name, [(f"short_{name}", short)])
+        assert cli.main(["stream-ingest-audio", "--store", store,
+                         "--source", str(src), "--buckets", "8"]) == 0
+        assert want in capsys.readouterr().out
 
 
 def test_cli_stream_ingest_video(spark, tmp_path, capsys):
@@ -1066,3 +1119,18 @@ def test_cli_stream_ingest_video(spark, tmp_path, capsys):
     assert cli.main(["stream-ingest-video", "--store", store,
                      "--source", str(src), "--radius", "2"]) == 1
     assert "r=4" in capsys.readouterr().out
+
+    # a sub-grid clip, then its byte-identical re-send in a later run:
+    # the persisted exact store screens it. Without --every the flag
+    # (default 1) differs from the persisted 2: a warning, and the
+    # persisted value is used
+    tiny = bytes(range(16))
+    for name, want in (("b3", "(0 dropped byte-identical)"),
+                       ("b4", "(1 dropped byte-identical)")):
+        feed(src, name, [(f"tiny_{name}", tiny, 4, 4, 1)])
+        assert cli.main(["stream-ingest-video", "--store", store,
+                         "--source", str(src), "--buckets", "8"]) == 0
+        out = capsys.readouterr().out
+        assert want in out
+        assert ("[warn] store index was built at every=2; --every 1 is "
+                "ignored (persisted value wins)") in out

@@ -328,7 +328,6 @@ def test_stream_ingest_asset_dedup(spark, tmp_path):
 
     from ocr_vector_db_spark.operators.image_hash import PhashIndex
     from ocr_vector_db_spark.streaming.assets import (
-        image_dropped_ids,
         stream_ingest_asset_dedup,
     )
     from ocr_vector_db_spark.streaming.pipeline import ParquetAcceptedSink
@@ -391,10 +390,10 @@ def test_stream_ingest_asset_dedup(spark, tmp_path):
     assert sigs == {"pg_base", "pg_other", "pg_new_a", "pg_novel"}
 
     # keep-min drops the higher id of the intra-batch pair
-    dropped = image_dropped_ids(_frames_df(spark, [
+    dropped = idx.batch_dropped_ids(idx.signatures_of(_frames_df(spark, [
         ("a1", _render(m_new, 72, 40), 72, 40),
         ("a2", _render(m_new, 144, 80), 144, 80),
-    ]), r=4)
+    ]), id_col="asset_id", text_col="data"), id_col="asset_id")
     assert [r.asset_id for r in dropped.collect()] == ["a2"]
 
     # scale guard: accepted assets are written distributed, never collected
@@ -595,7 +594,10 @@ def test_exact_frame_store_compaction(spark, tmp_path):
     import shutil
 
     from ocr_vector_db_spark.operators.image_hash import PhashIndex
-    from ocr_vector_db_spark.operators.index_maint import EpochLedger
+    from ocr_vector_db_spark.operators.index_maint import (
+        EpochLedger,
+        parquet_file_count,
+    )
     from ocr_vector_db_spark.streaming.assets import (
         ExactFrameStore,
         stream_ingest_asset_dedup,
@@ -613,7 +615,7 @@ def test_exact_frame_store_compaction(spark, tmp_path):
         src.mkdir(exist_ok=True)
         shutil.copy(part, src / f"{name}.parquet")
 
-    icons = [bytes((j + k) % 251 for k in range(16)) for j in range(4)]
+    icons = [bytes((j + k) % 251 for k in range(16)) for j in range(5)]
     empty = spark.createDataFrame([], schema)
     idx = PhashIndex.build(
         spark, empty, str(tmp_path / "phidx_c"), r=4, n_buckets=8
@@ -633,11 +635,8 @@ def test_exact_frame_store_compaction(spark, tmp_path):
         )
         q.awaitTermination(60)
 
-    import os as _os
-
-    dirs = [d for d in _os.listdir(str(tmp_path / "exact_c"))
-            if d.startswith("epoch=")]
-    assert len(dirs) == 1, dirs  # everything folded into one dir
+    # everything folded into one file
+    assert parquet_file_count(str(tmp_path / "exact_c"), spark) == 1
 
     # a byte-identical re-send of EVERY earlier icon still screens out,
     # a new icon is accepted — compaction preserved the key set
@@ -659,124 +658,138 @@ def test_exact_frame_store_compaction(spark, tmp_path):
     accepted = sorted(r.asset_id for r in sink.read(spark).collect())
     assert accepted == ["icon_0", "icon_1", "icon_2", "icon_new"]
 
+    # without a ledger the cycle compacts too (each key keeps its epoch,
+    # so a replay still never screens against its own keys)
+    feed(src, "b4", [
+        ("re_icon_new", icons[3], 4, 4),
+        ("icon_newer", icons[4], 4, 4),
+    ])
+    stats = []
+    q = stream_ingest_asset_dedup(
+        spark.readStream.schema(schema).parquet(str(src)), idx, sink,
+        stats=stats, checkpoint=ckpt, compact_every=1, exact_store=store,
+    )
+    q.awaitTermination(60)
+    assert (stats[-1]["accepted"], stats[-1]["dropped_exact_dup"]) == (1, 1)
+    assert parquet_file_count(str(tmp_path / "exact_c"), spark) == 1
+    assert store.keys(before_epoch=9).count() == 5
 
-def test_exact_frame_store_staged_keys_visible(spark, tmp_path):
-    """Crash-window regression (ADVICE r12): between compact()'s delete
-    of the target epoch dir and the stage rename, the folded keys live
-    ONLY in a `_compact_*` stage dir. `keys()` must union readable
-    stages — otherwise byte-identical assets are silently re-accepted
-    until a later compact folds the stage back in — and both `keys()`
-    and `compact()` must survive a store that holds ONLY stage dirs."""
+
+def _xkeys(store, before_epoch):
+    return sorted(r["__xkey"] for r in store.keys(before_epoch).collect())
+
+
+def _keys_df(spark, *keys):
+    return spark.createDataFrame([(k,) for k in keys], "__xkey string")
+
+
+def test_exact_frame_store_orphan_generation_never_read(spark, tmp_path):
+    """A compaction that dies before its commit marker leaves an orphan
+    generation dir: keys() keeps serving the committed generation (every
+    committed key still screens, the orphan's rows never do) and the next
+    compaction replaces it. A compaction keeps each key's epoch, so
+    add(k, e) then compact() still hides k from keys(before_epoch=e)."""
+    from ocr_vector_db_spark.operators.index_maint import (
+        committed_generations,
+    )
     from ocr_vector_db_spark.streaming.assets import ExactFrameStore
 
-    root = tmp_path / "exact_s"
+    root = tmp_path / "exact_o"
     store = ExactFrameStore(spark, str(root))
-    store.add(spark.createDataFrame([("k0",), ("k1",)], "__xkey string"), 0)
-    store.add(spark.createDataFrame([("k2",)], "__xkey string"), 1)
-    store.compact(below_epoch=2)  # folds epoch 0+1 into epoch=1
+    assert _xkeys(store, 5) == []  # no data files: a typed empty frame
+    store.add(_keys_df(spark, "k0", "k1"), 0)
+    store.add(_keys_df(spark, "k2"), 1)
+    assert committed_generations(spark, str(root)) == [1]
 
-    # simulate the crash window: the target's only copy is a stage dir
-    (root / "epoch=1").rename(root / "_compact_2")
-    seen = {r["__xkey"] for r in store.keys(before_epoch=5).collect()}
-    assert seen == {"k0", "k1", "k2"}
+    spark.createDataFrame([("ghost", 0)], ExactFrameStore.SCHEMA) \
+        .write.parquet(str(root / "gen-000002"))
+    assert _xkeys(store, 5) == ["k0", "k1", "k2"]
+    store.compact()
+    assert committed_generations(spark, str(root)) == [1, 2]
+    assert _xkeys(store, 5) == ["k0", "k1", "k2"]
 
-    # the next cycle folds the stale stage into a real epoch dir again
-    store.compact(below_epoch=3)
-    assert [d.name for d in root.iterdir()
-            if d.name.startswith("_compact_")] == []
-    assert (root / "epoch=2").is_dir()
-    seen = {r["__xkey"] for r in store.keys(before_epoch=5).collect()}
-    assert seen == {"k0", "k1", "k2"}
+    store.add(_keys_df(spark, "k3"), 2)
+    store.compact()
+    assert _xkeys(store, 2) == ["k0", "k1", "k2"]
+    assert _xkeys(store, 1) == ["k0", "k1"]
+    assert _xkeys(store, 3) == ["k0", "k1", "k2", "k3"]
 
 
-def test_exact_frame_store_unreadable_stage_raises(spark, tmp_path):
-    """ADVICE/verdict r13: only the mid-write-crash shapes (empty or
-    schema-less stage dirs, redundant with their still-present sources)
-    may be skipped by `keys()`. A stage dir that EXISTS but cannot be
-    read — corrupt footer, transient IO — might hold the only copy of
-    folded keys (post-delete, pre-rename crash), so it must surface an
-    error instead of silently weakening the exact screen."""
+def test_exact_frame_store_corrupt_generation_raises(spark, tmp_path):
+    """A live generation holding a corrupt parquet file makes keys()
+    raise instead of reading empty (an empty screen silently re-admits
+    every byte-identical asset), and compact() raises before its commit:
+    the committed generation stays the live one."""
     import pytest as _pytest
 
+    from ocr_vector_db_spark.operators.index_maint import (
+        committed_generations,
+    )
     from ocr_vector_db_spark.streaming.assets import ExactFrameStore
 
     root = tmp_path / "exact_err"
     store = ExactFrameStore(spark, str(root))
-    store.add(spark.createDataFrame([("k0",)], "__xkey string"), 0)
-
-    # an EMPTY stage dir (crash before any file landed) is skipped
-    (root / "_compact_9").mkdir()
-    seen = {r["__xkey"] for r in store.keys(before_epoch=5).collect()}
-    assert seen == {"k0"}
-
-    # a stage dir holding a corrupt parquet file raises — never skipped
-    (root / "_compact_9" / "part-00000.parquet").write_bytes(
+    store.add(_keys_df(spark, "k0"), 0)
+    (root / "gen-000001" / "part-99999-corrupt.parquet").write_bytes(
         b"PAR1 this is not a parquet footer"
     )
     with _pytest.raises(Exception):
         store.keys(before_epoch=5).collect()
+    with _pytest.raises(Exception):
+        store.compact()
+    assert committed_generations(spark, str(root)) == [1]
 
 
-def test_exact_frame_store_unreadable_stage_aborts_compact(spark, tmp_path):
-    """Verdict r14: `compact()` must get the same treatment `keys()` got
-    in r14 — a stale stage can hold the ONLY copy of folded keys (crash
-    between the target's delete and the stage rename), and compact's
-    deletion loop drops every stale stage unconditionally after the
-    swap. If that stage's read fails transiently and is silently
-    skipped, the merge excludes those keys and the deletion makes the
-    loss PERMANENT (byte-identical assets re-admit forever — strictly
-    worse than keys()' one-batch window). An unreadable-but-present
-    stage must abort the compact with nothing deleted; every key is
-    still on disk and the next cycle retries. Mid-write-crash shapes
-    (empty / schema-less stages, redundant with their still-present
-    sources) stay skippable."""
-    import pytest as _pytest
-
+def test_exact_frame_store_legacy_layout_migrates(spark, tmp_path):
+    """A store written before generations (one `epoch=N` dir per epoch,
+    key column only) reads with the epoch partition discovery gives it;
+    its first add migrates every key into generation 1 with its epoch,
+    and the next generation's GC removes the epoch dirs."""
+    from ocr_vector_db_spark.operators.index_maint import (
+        committed_generations,
+    )
     from ocr_vector_db_spark.streaming.assets import ExactFrameStore
 
-    root = tmp_path / "exact_cerr"
+    root = tmp_path / "exact_l"
+    _keys_df(spark, "k0", "k1").write.parquet(str(root / "epoch=0"))
+    _keys_df(spark, "k2").write.parquet(str(root / "epoch=1"))
     store = ExactFrameStore(spark, str(root))
-    store.add(spark.createDataFrame([("k0",), ("k1",)], "__xkey string"), 0)
-    store.add(spark.createDataFrame([("k2",)], "__xkey string"), 1)
+    assert _xkeys(store, 1) == ["k0", "k1"]
+    assert _xkeys(store, 5) == ["k0", "k1", "k2"]
 
-    # an EMPTY stage dir (crash before any file landed) is skipped and
-    # cleaned; the fold itself proceeds
-    (root / "_compact_7").mkdir()
-    store.compact(below_epoch=2)
-    assert not (root / "_compact_7").exists()
-    seen = {r["__xkey"] for r in store.keys(before_epoch=5).collect()}
-    assert seen == {"k0", "k1", "k2"}
+    store.add(_keys_df(spark, "k3"), 2)
+    assert committed_generations(spark, str(root)) == [1]
+    assert _xkeys(store, 2) == ["k0", "k1", "k2"]
+    assert _xkeys(store, 3) == ["k0", "k1", "k2", "k3"]
 
-    # a stage with a corrupt parquet file aborts the compact — and
-    # NOTHING is deleted: the corrupt stage (possible only-copy) and
-    # every source epoch dir survive for the retry
-    store.add(spark.createDataFrame([("k3",)], "__xkey string"), 2)
-    bad = root / "_compact_8"
-    bad.mkdir()
-    (bad / "part-00000.parquet").write_bytes(
-        b"PAR1 this is not a parquet footer"
+    store.compact()
+    assert not [d for d in root.iterdir() if d.name.startswith("epoch=")]
+    assert _xkeys(store, 1) == ["k0", "k1"]
+    assert _xkeys(store, 3) == ["k0", "k1", "k2", "k3"]
+
+
+def test_exact_frame_store_legacy_stage_dir_raises(spark, tmp_path):
+    """A `_compact_*` stage dir left by the pre-generation compaction can
+    hold the only copy of folded keys, and partition discovery skips it
+    (a later GC would delete it): keys(), add() and compact() raise
+    naming it, and nothing is migrated."""
+    import pytest as _pytest
+
+    from ocr_vector_db_spark.operators.index_maint import (
+        committed_generations,
     )
-    before = sorted(d.name for d in root.iterdir())
-    with _pytest.raises(Exception):
-        store.compact(below_epoch=3)
-    after = sorted(
-        d.name for d in root.iterdir()
-        if not d.name.startswith("_compact_3")  # a pre-abort stage
-    )                                           # write may remain
-    assert bad.is_dir() and (bad / "part-00000.parquet").exists()
-    assert [n for n in before if n not in after] == []
-    # once the corrupt stage is repaired (here: removed — its keys were
-    # redundant with the intact sources), the retry folds cleanly and
-    # every committed key survived the aborted attempt
-    import shutil as _shutil
+    from ocr_vector_db_spark.streaming.assets import ExactFrameStore
 
-    _shutil.rmtree(bad)
-    for d in root.iterdir():  # drop any pre-abort partial stage writes
-        if d.name.startswith("_compact_"):
-            _shutil.rmtree(d)
-    store.compact(below_epoch=3)
-    seen = {r["__xkey"] for r in store.keys(before_epoch=5).collect()}
-    assert seen == {"k0", "k1", "k2", "k3"}
+    root = tmp_path / "exact_st"
+    _keys_df(spark, "k0").write.parquet(str(root / "epoch=0"))
+    _keys_df(spark, "k1", "k2").write.parquet(str(root / "_compact_2"))
+    store = ExactFrameStore(spark, str(root))
+    for call in (lambda: store.keys(before_epoch=5),
+                 lambda: store.add(_keys_df(spark, "k3"), 3),
+                 store.compact):
+        with _pytest.raises(IOError, match="_compact_2"):
+            call()
+    assert committed_generations(spark, str(root)) == []
 
 
 def _py_resize(data, w, h, out_w, out_h):

@@ -1,6 +1,7 @@
 """The persisted-index lifecycle shared through `index_maint`: one place
-calls the generation primitives, a rebuild keeps nothing of the index it
-replaces, and a build that dies midway leaves an index `load()` refuses."""
+calls the generation primitives and the Hadoop FileSystem, a rebuild
+keeps nothing of the index it replaces, and a build that dies midway
+leaves an index `load()` refuses."""
 
 import pathlib
 import re
@@ -27,6 +28,21 @@ def test_generation_lifecycle_lives_in_index_maint():
         offenders += [f"{rel}: {m.group(1)}" for m in call.finditer(text)]
         if "PATH_NOT_FOUND" in text:
             offenders.append(f"{rel}: PATH_NOT_FOUND")
+    assert offenders == []
+
+
+def test_filesystem_writes_live_in_index_maint():
+    """No module but operators/index_maint.py opens a Hadoop FileSystem,
+    renames or deletes through one: a store that needs to commit, swap
+    or clean up goes through `publish`, `append` or `PersistedIndex`."""
+    call = re.compile(r"getFileSystem\(|\.rename\(|\bfs\.delete\(")
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path.name == "index_maint.py":
+            continue
+        rel = path.relative_to(PACKAGE)
+        offenders += [f"{rel}: {m.group(0)}"
+                      for m in call.finditer(path.read_text())]
     assert offenders == []
 
 

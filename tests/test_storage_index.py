@@ -77,6 +77,8 @@ def test_cascade_delete(store):
     assert counts["documents"] == 1
     assert store.read("concepts").filter(F.col("document_id") == doomed).count() == 0
     assert store.read("fragments").filter(F.col("document_id") == doomed).count() == 0
+    # the deleted concepts' parent contexts go with them
+    assert _ids(store, "parents") <= _ids(store, "concepts")
 
 
 def _ids(store, table: str, col: str = "id") -> set:
