@@ -86,6 +86,39 @@ def _spark():
     return get_spark("ocr_vector_db_spark_cli")
 
 
+_NO_ACCEPTED = ("[error] no accepted corpus under the store — "
+                "run `stream-ingest` first")
+
+
+def _accepted_corpus(spark, store: str, missing: str = _NO_ACCEPTED):
+    """The store's accepted stream corpus (`ParquetAcceptedSink.read`),
+    or None after printing `missing` when no stream has written one."""
+    import os
+
+    from ocr_vector_db_spark.operators.index_maint import fs_exists
+    from ocr_vector_db_spark.streaming.pipeline import ParquetAcceptedSink
+
+    path = os.path.join(store, "accepted")
+    if not fs_exists(spark, path):
+        print(missing)
+        return None
+    return ParquetAcceptedSink(path).read(spark)
+
+
+def _bench_grams(spark, store: str):
+    """The exact benchmark gram set `decontam --build/--add` persist next
+    to the Bloom filter, or None for a store built before two-phase
+    screening."""
+    import os
+
+    from ocr_vector_db_spark.operators.index_maint import (
+        fs_exists, read_generation,
+    )
+
+    path = os.path.join(store, "bench_grams")
+    return read_generation(spark, path) if fs_exists(spark, path) else None
+
+
 def cmd_ingest(args) -> int:
     from pyspark.sql import functions as F
 
@@ -340,7 +373,7 @@ def cmd_hybrid_search(args) -> int:
             print(f"  #{r.fused_rank}  rrf={r.rrf:.6f}  systems={r.n_systems}  "
                   f"{r.id[:24]}  {r.content[:60]!r}")
 
-    if getattr(args, "indexed", False):
+    if args.indexed:
         from ocr_vector_db_spark.operators.retrieval import hybrid_indexed
 
         lex_idx, ivf_idx = _load_serving_indexes(spark, args.store)
@@ -400,16 +433,10 @@ def cmd_semantic_index(args) -> int:
     from ocr_vector_db_spark.functions.vector import embed_udf
     from ocr_vector_db_spark.operators.ann_index import IVFIndex
 
-    from ocr_vector_db_spark.operators.index_maint import fs_exists
-
     spark = _spark()
-    acc_path = os.path.join(args.store, "accepted")
-    if not fs_exists(spark, acc_path):
-        print("[error] no accepted corpus under the store — "
-              "run `stream-ingest` first")
+    docs = _accepted_corpus(spark, args.store)
+    if docs is None:
         return 1
-    docs = (spark.read.option("basePath", acc_path)
-            .option("mergeSchema", "true").parquet(acc_path))
     vecs = docs.select(
         "doc_id", embed_udf(args.dim)(F.col("text")).alias("embedding")
     )
@@ -419,11 +446,11 @@ def cmd_semantic_index(args) -> int:
               f"(found {n}) — ingest more first")
         return 1
     k = max(2, min(args.clusters, n))
-    l1 = getattr(args, "l1_branches", None)
+    l1 = args.l1_branches
     idx = IVFIndex.build(
         spark, vecs, os.path.join(args.store, "semidx"), num_clusters=k,
         l1_branches=(min(l1, k) if l1 else None),
-        standardize=getattr(args, "standardize", False),
+        standardize=args.standardize,
     )
     hier = f" ({len(idx.l1)} L1 branches)" if idx.l1 else ""
     std = " standardized" if idx.std_stats else ""
@@ -449,13 +476,9 @@ def cmd_lm_index(args) -> int:
     spark = _spark()
     path = os.path.join(args.store, "lmidx")
     if args.build:
-        acc_path = os.path.join(args.store, "accepted")
-        if not fs_exists(spark, acc_path):
-            print("[error] no accepted corpus under the store — "
-                  "run `stream-ingest` first")
+        docs = _accepted_corpus(spark, args.store)
+        if docs is None:
             return 1
-        docs = (spark.read.option("basePath", acc_path)
-                .option("mergeSchema", "true").parquet(acc_path))
         idx = NgramLMIndex.build(spark, docs, path,
                                  n_buckets=args.buckets)
         st = idx.stats().head()
@@ -487,21 +510,14 @@ def cmd_drift(args) -> int:
     between the corpus's even/odd doc_id epochs (the self-audit). Prints
     PSI + JSD (binned, Laplace-smoothed) and the exact two-sample KS
     statistic over document lengths."""
-    import os
-
     from pyspark.sql import functions as F
 
     from ocr_vector_db_spark.operators.drift import ks_report, psi_report
-    from ocr_vector_db_spark.operators.index_maint import fs_exists
 
     spark = _spark()
-    acc_path = os.path.join(args.store, "accepted")
-    if not fs_exists(spark, acc_path):
-        print("[error] no accepted corpus under the store — "
-              "run `stream-ingest` first")
+    acc = _accepted_corpus(spark, args.store)
+    if acc is None:
         return 1
-    acc = (spark.read.option("basePath", acc_path)
-           .option("mergeSchema", "true").parquet(acc_path))
     if args.batch:
         batch = spark.read.json(args.batch)
         u = acc.select(
@@ -543,9 +559,7 @@ def cmd_decontam(args) -> int:
     from pyspark.sql import functions as F
 
     from ocr_vector_db_spark.operators.dedup import _doc_shingles
-    from ocr_vector_db_spark.operators.index_maint import (
-        current_gen_dir, fs_exists, publish,
-    )
+    from ocr_vector_db_spark.operators.index_maint import fs_exists, publish
     from ocr_vector_db_spark.operators.sketches import (
         _BLOOM_WORD_BITS, BloomSketch,
     )
@@ -579,11 +593,9 @@ def cmd_decontam(args) -> int:
     if args.add:
         grams = _shingles(args.add).select("shingle").distinct()
         sk.add(grams, F.col("shingle"))
-        if fs_exists(spark, grams_path):
-            merged = (
-                spark.read.parquet(current_gen_dir(spark, grams_path))
-                .unionByName(grams).distinct()
-            )
+        stored = _bench_grams(spark, args.store)
+        if stored is not None:
+            merged = stored.unionByName(grams).distinct()
             publish(spark, grams_path, merged.coalesce(1))
         else:
             # pre-two-phase store: the build corpus's exact grams were
@@ -599,49 +611,11 @@ def cmd_decontam(args) -> int:
         print(f"[decontam] folded {args.add} into m={sk.m} k={sk.k}")
         return 0
     if args.screen:
-        sh = _shingles(args.screen)
-        # verdict on the UNROUNDED ratio (q149/pipeline semantics);
-        # `contamination` is rounded for display only
-        per = (
-            sk.screen(sh, F.col("shingle"), "doc")
-            .groupBy("doc")
-            .agg(F.count("*").alias("n_shingles"),
-                 F.sum(F.col("maybe_member").cast("int")).alias("n_maybe"))
-            .withColumn("flagged",
-                        (F.col("n_maybe")
-                         / F.col("n_shingles").cast("double"))
-                        >= args.threshold)
-            .withColumn("contamination",
-                        F.round(F.col("n_maybe")
-                                / F.col("n_shingles").cast("double"), 6))
-        )
-        # phase 2 when the exact gram table exists (two-phase builds):
-        # re-check only the FLAGGED docs' shingles against it — O(flagged)
-        # — so the printed verdict means CONFIRMED leak, not bloom-maybe
-        two_phase = fs_exists(spark, grams_path)
-        if two_phase:
-            bench = F.broadcast(
-                spark.read.parquet(current_gen_dir(spark, grams_path))
-                .select("shingle").distinct().withColumn("__hit", F.lit(1))
-            )
-            exact = (
-                sh.join(per.filter("flagged").select("doc"), "doc",
-                        "left_semi")
-                .join(bench, "shingle", "left")
-                .groupBy("doc")
-                .agg((F.sum(F.coalesce("__hit", F.lit(0)))
-                      / F.count("*")).alias("__exact"))
-            )
-            per = (
-                per.join(exact, "doc", "left")
-                .withColumn("confirmed",
-                            F.col("flagged")
-                            & (F.coalesce("__exact", F.lit(0.0))
-                               >= args.threshold))
-                .withColumn("exact_contamination",
-                            F.round(F.coalesce("__exact", F.lit(0.0)), 6))
-                .drop("__exact")
-            )
+        # phase 2 when the exact gram table exists (two-phase builds), so
+        # the printed verdict means CONFIRMED leak, not bloom-maybe
+        exact = _bench_grams(spark, args.store)
+        two_phase = exact is not None
+        per = sk.contamination(_shingles(args.screen), args.threshold, exact)
         # full per-doc results land in the store (distributed write — a
         # large candidate batch never reaches the driver); only flagged
         # docs print, capped
@@ -705,13 +679,9 @@ def cmd_tokenizer(args) -> int:
     spark = _spark()
     path = os.path.join(args.store, "tokenizer")
     if args.train:
-        acc_path = os.path.join(args.store, "accepted")
-        if not fs_exists(spark, acc_path):
-            print("[error] no accepted corpus under the store — "
-                  "run `stream-ingest` first")
+        docs = _accepted_corpus(spark, args.store)
+        if docs is None:
             return 1
-        docs = (spark.read.option("basePath", acc_path)
-                .option("mergeSchema", "true").parquet(acc_path))
         tok = BPETokenizer.build(spark, docs, path, args.train)
         print(f"[tokenizer] trained {len(tok.merges())} merges at {path}")
         return 0
@@ -752,6 +722,8 @@ def cmd_stream_ingest(args) -> int:
     guards, and `--compact-every` bounds the index's file count."""
     import os
 
+    from pyspark.sql import functions as F
+
     from ocr_vector_db_spark.operators.index_maint import EpochLedger, fs_exists
     from ocr_vector_db_spark.operators.minhash_index import MinHashIndex
     from ocr_vector_db_spark.streaming.pipeline import (
@@ -760,19 +732,21 @@ def cmd_stream_ingest(args) -> int:
     )
 
     spark = _spark()
-    mh_path = os.path.join(args.store, "mhidx")
-    # Hadoop-FS probes, not os.path: the store may live on HDFS/object
-    # storage where a local stat always says "missing"
-    if fs_exists(spark, os.path.join(mh_path, "meta.json")):
-        idx = MinHashIndex.load(spark, mh_path)
-    else:
+
+    def load_or_build(cls, name: str, *build_args, **build_kw):
+        """The store's persisted `name` index, or a new empty one.
+        Hadoop-FS probe, not os.path: the store may live on HDFS/object
+        storage where a local stat always says "missing"."""
+        path = os.path.join(args.store, name)
+        if fs_exists(spark, os.path.join(path, "meta.json")):
+            return cls.load(spark, path)
         empty = spark.createDataFrame([], "doc_id bigint, text string")
-        idx = MinHashIndex.build(
-            spark, empty, mh_path, num_hashes=args.num_hashes,
-            bands=args.bands, n=2, n_buckets=args.buckets,
-        )
+        return cls.build(spark, empty, path, *build_args, **build_kw)
+
+    idx = load_or_build(MinHashIndex, "mhidx", num_hashes=args.num_hashes,
+                        bands=args.bands, n=2, n_buckets=args.buckets)
     sem_idx = None
-    if getattr(args, "semantic", False):
+    if args.semantic:
         from ocr_vector_db_spark.operators.ann_index import IVFIndex
 
         sem_path = os.path.join(args.store, "semidx")
@@ -782,7 +756,7 @@ def cmd_stream_ingest(args) -> int:
             return 1
         sem_idx = IVFIndex.load(spark, sem_path)
     lm_gate = None
-    if getattr(args, "lm_band", None):
+    if args.lm_band:
         from ocr_vector_db_spark.operators.ngram_lm_index import NgramLMIndex
 
         lm_path = os.path.join(args.store, "lmidx")
@@ -793,35 +767,19 @@ def cmd_stream_ingest(args) -> int:
         lo, hi = args.lm_band
         lm_gate = (NgramLMIndex.load(spark, lm_path), lo, hi)
     vocab_sketch = None
-    if getattr(args, "vocab_sketch", False):
-        from pyspark.sql import functions as F
-
+    if args.vocab_sketch:
         from ocr_vector_db_spark.operators.sketches import HLLSketch
 
-        hll_path = os.path.join(args.store, "vocab_hll")
-        if fs_exists(spark, os.path.join(hll_path, "meta.json")):
-            vocab_sketch = HLLSketch.load(spark, hll_path)
-        else:
-            empty = spark.createDataFrame([], "doc_id bigint, text string")
-            vocab_sketch = HLLSketch.build(
-                spark, empty, hll_path, F.col("text"), p=12
-            )
+        vocab_sketch = load_or_build(HLLSketch, "vocab_hll", F.col("text"),
+                                     p=12)
     tokenfreq_sketch = None
-    if getattr(args, "tokenfreq_sketch", False):
-        from pyspark.sql import functions as F
-
+    if args.tokenfreq_sketch:
         from ocr_vector_db_spark.operators.sketches import CMSketch
 
-        cm_path = os.path.join(args.store, "tokenfreq_cm")
-        if fs_exists(spark, os.path.join(cm_path, "meta.json")):
-            tokenfreq_sketch = CMSketch.load(spark, cm_path)
-        else:
-            empty = spark.createDataFrame([], "doc_id bigint, text string")
-            tokenfreq_sketch = CMSketch.build(
-                spark, empty, cm_path, F.col("text"), w=1 << 12, d=4
-            )
+        tokenfreq_sketch = load_or_build(CMSketch, "tokenfreq_cm",
+                                         F.col("text"), w=1 << 12, d=4)
     running_sample = None
-    if getattr(args, "sample", None):
+    if args.sample:
         from ocr_vector_db_spark.operators.sampling import RunningSample
 
         running_sample = RunningSample(
@@ -829,7 +787,7 @@ def cmd_stream_ingest(args) -> int:
             k=args.sample, weight_col="__len",
         )
     decontam_gate = None
-    if getattr(args, "decontam", None) is not None:
+    if args.decontam is not None:
         from ocr_vector_db_spark.operators.sketches import BloomSketch
 
         bloom_path = os.path.join(args.store, "bloom")
@@ -837,38 +795,27 @@ def cmd_stream_ingest(args) -> int:
             print("[error] --decontam needs the benchmark bloom filter — "
                   "run `decontam --build FILE` first")
             return 1
-        decontam_gate = (BloomSketch.load(spark, bloom_path), args.decontam)
-        grams_path = os.path.join(args.store, "bench_grams")
-        if fs_exists(spark, grams_path):
-            # two-phase mode: the exact gram set persisted by
-            # `decontam --build/--add` confirms Bloom flags, so a false
-            # positive can never drop a clean document
-            from ocr_vector_db_spark.operators.index_maint import (
-                current_gen_dir,
-            )
-
-            decontam_gate = decontam_gate + (
-                spark.read.parquet(current_gen_dir(spark, grams_path)),
-            )
+        # with the exact gram set the gate runs two-phase: it confirms
+        # Bloom flags, so a false positive never drops a clean document
+        decontam_gate = (BloomSketch.load(spark, bloom_path), args.decontam,
+                         _bench_grams(spark, args.store))
     drift_bl = None
-    if getattr(args, "drift_baseline", False):
-        from pyspark.sql import functions as F
-
+    if args.drift_baseline:
         from ocr_vector_db_spark.operators.drift import DriftBaseline
 
         bl_path = os.path.join(args.store, "drift_bl")
         if fs_exists(spark, os.path.join(bl_path, "state")):
             drift_bl = DriftBaseline.load(spark, bl_path)
         else:
-            acc_path = os.path.join(args.store, "accepted")
-            if not fs_exists(spark, acc_path):
-                print("[error] --drift-baseline needs either an existing "
-                      "baseline or an accepted corpus to seed one — run "
-                      "a plain `stream-ingest` pass first")
+            acc = _accepted_corpus(
+                spark, args.store,
+                "[error] --drift-baseline needs either an existing "
+                "baseline or an accepted corpus to seed one — run a plain "
+                "`stream-ingest` pass first",
+            )
+            if acc is None:
                 return 1
-            seed = (spark.read.option("basePath", acc_path)
-                    .option("mergeSchema", "true").parquet(acc_path)
-                    .select(F.length("text").alias("__dv")))
+            seed = acc.select(F.length("text").alias("__dv"))
             drift_bl = DriftBaseline.build(spark, seed, "__dv", bl_path)
             print(f"[stream-ingest] seeded drift baseline from the "
                   f"accepted corpus at {bl_path}")
@@ -882,14 +829,12 @@ def cmd_stream_ingest(args) -> int:
         threshold=args.threshold,
         stats=stats,
         checkpoint=os.path.join(args.store, "stream_checkpoint"),
-        ledger=EpochLedger(spark, os.path.join(mh_path, "_epochs")),
+        ledger=EpochLedger(spark, os.path.join(idx.path, "_epochs")),
         compact_every=args.compact_every,
         semantic_index=sem_idx,
         semantic_threshold=args.semantic_threshold,
-        semantic_intra_nprobe=(
-            getattr(args, "semantic_intra_nprobe", 2) or None
-        ),
-        semantic_branches=getattr(args, "semantic_branches", None),
+        semantic_intra_nprobe=args.semantic_intra_nprobe or None,
+        semantic_branches=args.semantic_branches,
         lm_gate=lm_gate,
         vocab_sketch=vocab_sketch,
         tokenfreq_sketch=tokenfreq_sketch,

@@ -20,6 +20,8 @@ two-subdir states (a writer callable fills the dir), the running sample.
 A path with data files but no committed generation is a legacy flat
 layout and resolves to itself, so pre-generation indexes stay readable;
 their first compaction (or `append`) migrates them into `gen-000001`.
+A flat read skips `gen-*` entries (a migration that died before its
+marker), and `append` deletes them before it migrates.
 
 Two stores use `publish`/`append` directly instead of `PersistedIndex`:
 the entity tables (`storage.py`) and the streaming gates' exact-key
@@ -92,16 +94,24 @@ def list_names(spark: SparkSession, path: str) -> set[str]:
     return {st.getPath().getName() for st in fs.listStatus(hpath(path))}
 
 
-def committed_generations(spark: SparkSession, path: str) -> list[int]:
-    """Sorted generation numbers that have BOTH a commit marker and their
-    data directory present under `path`."""
-    names = list_names(spark, path)
+def _committed(names: set[str]) -> list[int]:
     out = []
     for name in names:
         m = _GEN_MARK_RE.fullmatch(name)
         if m and _gen_name(int(m.group(1))) in names:
             out.append(int(m.group(1)))
     return sorted(out)
+
+
+def _gen_entries(names: set[str]) -> set[str]:
+    return {n for n in names
+            if _GEN_DIR_RE.fullmatch(n) or _GEN_MARK_RE.fullmatch(n)}
+
+
+def committed_generations(spark: SparkSession, path: str) -> list[int]:
+    """Sorted generation numbers that have BOTH a commit marker and their
+    data directory present under `path`."""
+    return _committed(list_names(spark, path))
 
 
 def current_gen_dir(spark: SparkSession, path: str) -> str:
@@ -115,13 +125,30 @@ def _reader(spark: SparkSession, schema: StructType | None):
     return spark.read if schema is None else spark.read.schema(schema)
 
 
+def _parquet(spark: SparkSession, path: str, schema: StructType | None):
+    """Read `path`, a dir `current_gen_dir` resolved. A generation dir
+    reads as is. A legacy flat layout reads without its `gen-*` entries:
+    they are uncommitted (a first migration that died before its marker),
+    and beside partition dirs they would make partition discovery fail."""
+    reader = _reader(spark, schema)
+    if _GEN_DIR_RE.fullmatch(posixpath.basename(path)):
+        return reader.parquet(path)
+    names = list_names(spark, path)
+    if not _gen_entries(names):
+        return reader.parquet(path)
+    return reader.option("basePath", path).parquet(*(
+        posixpath.join(path, n) for n in sorted(names - _gen_entries(names))
+        if not n.startswith(("_", "."))
+    ))
+
+
 def read_generation(
     spark: SparkSession, path: str, schema: StructType | None = None
 ) -> DataFrame:
     """The current generation of the parquet table at `path`. Passing the
     table's `schema` skips parquet schema inference, a Spark job of its
     own."""
-    return _reader(spark, schema).parquet(current_gen_dir(spark, path))
+    return _parquet(spark, current_gen_dir(spark, path), schema)
 
 
 def read_or_none(
@@ -133,7 +160,7 @@ def read_or_none(
     from pyspark.errors import AnalysisException
 
     try:
-        return _reader(spark, schema).parquet(path)
+        return _parquet(spark, path, schema)
     except AnalysisException as exc:
         # Spark 4 renamed getErrorClass → getCondition; support both
         condition = (getattr(exc, "getCondition", None) or exc.getErrorClass)()
@@ -161,7 +188,7 @@ def commit_generation(spark: SparkSession, path: str, n: int) -> None:
 def _clear(spark: SparkSession, path: str) -> None:
     hpath, fs = _fs(spark, path)
     if fs.exists(hpath(path)) and not fs.delete(hpath(path), True):
-        raise IOError(f"clearing {path} for rebuild failed")
+        raise IOError(f"clearing {path} failed")
 
 
 def gc_generations(spark: SparkSession, path: str, keep: int = 2) -> None:
@@ -229,11 +256,16 @@ def append(
 ) -> None:
     """Append `df` into the live generation of the table at `root`. A
     table without a committed generation publishes generation 1: its
-    legacy flat rows (none when the table is new) plus `df`."""
-    gens = committed_generations(spark, root)
+    legacy flat rows (none when the table is new) plus `df`. Uncommitted
+    gen dirs a dead migration left are deleted first."""
+    names = list_names(spark, root)
+    gens = _committed(names)
     if not gens:
+        orphans = _gen_entries(names)
+        for name in orphans:
+            _clear(spark, posixpath.join(root, name))
         # a new table skips the read: Spark logs a stack trace for it
-        flat = read_or_none(spark, root) if fs_exists(spark, root) else None
+        flat = read_or_none(spark, root) if names - orphans else None
         publish(spark, root, df if flat is None else flat.unionByName(df),
                 partition_col)
         return
@@ -340,13 +372,12 @@ class EpochLedger:
 
 def parquet_file_count(path: str, spark: SparkSession | None = None) -> int:
     """Number of data files in the LIVE layout of a (possibly generational,
-    possibly partitioned) parquet table — the stat behind maintenance
-    triggers like `stream_ingest_deduped(compact_max_files=...)`.
+    possibly partitioned) parquet table — the file count `cli maintain`
+    reports before and after a compaction.
 
     Goes through the Hadoop FileSystem API like every other index-layout
-    operation, so the trigger works on HDFS/object stores, not just local
-    disk (the round-6 straggler). `spark` defaults to the active session;
-    with none, it raises."""
+    operation, so it counts on HDFS/object stores, not just local disk.
+    `spark` defaults to the active session; with none, it raises."""
     spark = spark or SparkSession.getActiveSession()
     if spark is None:
         raise RuntimeError(
@@ -354,15 +385,16 @@ def parquet_file_count(path: str, spark: SparkSession | None = None) -> int:
             "call it while a session is active"
         )
     hpath, fs = _fs(spark, path)
-    if not fs.exists(hpath(path)):
-        return 0
     root = current_gen_dir(spark, path)
-    it = fs.listFiles(hpath(root), True)  # recursive
+    names = list_names(spark, root)
     total = 0
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if name.endswith(".parquet") and not name.startswith("."):
-            total += 1
+    # a flat layout's gen-* entries are uncommitted: reads skip them too
+    for entry in names - _gen_entries(names):
+        it = fs.listFiles(hpath(posixpath.join(root, entry)), True)
+        while it.hasNext():
+            name = it.next().getPath().getName()
+            if name.endswith(".parquet") and not name.startswith("."):
+                total += 1
     return total
 
 
@@ -423,7 +455,7 @@ class PersistedIndex:
         gen = self._table_dir(name)
         schema = self._schemas.get(gen)
         if empty is None:
-            df = _reader(self.spark, schema).parquet(gen)
+            df = _parquet(self.spark, gen, schema)
         else:
             df = read_or_none(self.spark, gen, schema)
             if df is None:

@@ -558,6 +558,52 @@ class BloomSketch(PersistedIndex):
     def screen(self, df: DataFrame, key: Column, *id_cols: str) -> DataFrame:
         return bloom_screen(df, self.words(), self.m, self.k, key, *id_cols)
 
+    def contamination(self, shingles: DataFrame, threshold: float,
+                      exact: DataFrame | None = None) -> DataFrame:
+        """Per-document benchmark-contamination screen of (doc, shingle)
+        rows: (doc, n_shingles, n_maybe, flagged, contamination), where
+        `flagged` means the Bloom-member fraction of the doc's shingles
+        reaches `threshold`. Bloom has zero false negatives, so an
+        unflagged doc is certain clean.
+
+        With `exact` (the benchmark's exact gram set, column `shingle`) a
+        second phase confirms: only the FLAGGED docs' shingles join the
+        broadcast gram set — O(flagged), not O(corpus) — adding
+        `confirmed` (flagged and the exact fraction reaches `threshold`)
+        and `exact_contamination`, so a Bloom false positive is never a
+        confirmed leak. Verdicts use the unrounded ratios; the two
+        contamination columns are rounded to 6 dp for display."""
+        ratio = F.col("n_maybe") / F.col("n_shingles").cast("double")
+        per = (
+            self.screen(shingles, F.col("shingle"), "doc")
+            .groupBy("doc")
+            .agg(F.count("*").alias("n_shingles"),
+                 F.sum(F.col("maybe_member").cast("int")).alias("n_maybe"))
+            .select("doc", "n_shingles", "n_maybe",
+                    (ratio >= threshold).alias("flagged"),
+                    F.round(ratio, 6).alias("contamination"))
+        )
+        if exact is None:
+            return per
+        bench = F.broadcast(
+            exact.select("shingle").distinct().withColumn("__hit", F.lit(1))
+        )
+        exact_ratio = (
+            shingles.join(per.filter("flagged").select("doc"), "doc",
+                          "left_semi")
+            .join(bench, "shingle", "left")
+            .groupBy("doc")
+            .agg((F.sum(F.coalesce("__hit", F.lit(0)))
+                  / F.count("*")).alias("__exact"))
+        )
+        x = F.coalesce("__exact", F.lit(0.0))
+        return (
+            per.join(exact_ratio, "doc", "left")
+            .select(*per.columns,
+                    (F.col("flagged") & (x >= threshold)).alias("confirmed"),
+                    F.round(x, 6).alias("exact_contamination"))
+        )
+
 
 # ---------------------------------------------------------------------------
 # Count-Min sketch — persisted FREQUENCY sketch (Cormode & Muthukrishnan,

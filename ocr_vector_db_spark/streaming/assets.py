@@ -28,11 +28,13 @@ shuffles — image_hash's scanline discipline) + the batch's own band join
 + a slim equi-join against the stored bucket-partitioned band layout.
 Batch cost is independent of how much the stream has already ingested.
 
-Replay safety mirrors the text pipeline: foreachBatch re-runs the last
-uncommitted epoch; `ParquetAcceptedSink` overwrites its own epoch dir,
-the index re-add guard (or the `EpochLedger` fast path) makes the fold a
-no-op, the exact store screens each epoch against older epochs' keys
-only, and a fully committed epoch short-circuits entirely.
+The epoch protocol (ledger skip and commit, empty batches, stats,
+compaction) is the text gate's: both run on `pipeline._start_foreach_batch`.
+foreachBatch re-runs the last uncommitted epoch, so each write here is
+replay-safe: `ParquetAcceptedSink` overwrites its own epoch dir, the
+index re-add guard (or the `EpochLedger` fast path) makes the fold a
+no-op, and the exact store screens each epoch against older epochs' keys
+only.
 """
 
 from __future__ import annotations
@@ -225,7 +227,8 @@ def stream_ingest_asset_dedup(
     extra columns ride through to the sink. `index` is a built
     `PhashIndex`; its Hamming radius r is the gate's near-dup definition.
     `accepted_sink`/`stats`/`checkpoint`/`ledger`/`compact_every` follow
-    `stream_ingest_deduped`'s contracts exactly (which see).
+    `stream_ingest_deduped`'s contracts exactly (which see); a compaction
+    compacts the index, then the exact store.
 
     Frames the dHash grid cannot hash (`hashable_frames_pred` false —
     tiny icons, truncated buffers, odd channel counts) do NOT fall
@@ -247,101 +250,85 @@ def stream_ingest_asset_dedup(
     localCheckpoint) — keep-min, the corpus screen and the index fold
     each consume that one materialization instead of re-hashing raw
     bytes (for video that was per-frame hashing ×3 per micro-batch).
-    Everything downstream (replay ledger, sink-then-fold ordering,
-    compaction, stats) is shared and keeps its certification."""
+    The epoch protocol (replay ledger, stats, compaction cadence) is
+    `_start_foreach_batch`'s, shared with the text gate."""
     hashable_pred = hashable_pred or hashable_frames_pred
     exact_key = exact_key or exact_frame_key
 
-    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if ledger is not None and epoch_id <= ledger.committed():
-            return  # replayed, fully committed epoch: no-op
-        guarded = ledger is not None and epoch_id <= ledger.started()
-        if ledger is not None:
-            ledger.mark_started(epoch_id)
-        if batch_df.isEmpty():
-            if ledger is not None:
-                ledger.mark_committed(epoch_id)
-            return
-        batch_df = batch_df.cache()
-        try:
-            pred = hashable_pred(batch_df)
-            hashable = batch_df.filter(pred)
-            n_in = hashable.count()
-            # the ONE signature computation of the whole micro-batch
-            # (localCheckpoint materializes it and severs the lineage,
-            # so downstream consumers replay the tiny sig rows, never
-            # the hashing)
-            sigs = index.signatures_of(
-                hashable, id_col=id_col, text_col="data"
-            ).localCheckpoint()
-            doomed = index.batch_dropped_ids(sigs, id_col=id_col)
-            batch_kept = hashable.join(doomed, id_col, "left_anti")
-            kept_sigs = index.restrict_sigs(sigs, doomed, id_col=id_col,
-                                            anti=True)
-            fresh = index.dedup_new(batch_kept, id_col=id_col,
-                                    sigs=kept_sigs)
-            # localCheckpoint, NOT cache: fresh's plan scans the band/
-            # signature layouts it was screened against, and the add below
-            # appends to those paths — a cached plan over changed source
-            # files re-executes against the grown index and silently
-            # evaluates empty (pipeline.py's finding; same fix).
-            fresh = fresh.localCheckpoint()
-            n_accepted = fresh.count()
+    def body(batch_df: DataFrame, epoch_id: int, guarded: bool) -> dict:
+        pred = hashable_pred(batch_df)
+        hashable = batch_df.filter(pred)
+        n_in = hashable.count()
+        # the ONE signature computation of the whole micro-batch
+        # (localCheckpoint materializes it and severs the lineage, so
+        # downstream consumers replay the tiny sig rows, never the hashing)
+        sigs = index.signatures_of(
+            hashable, id_col=id_col, text_col="data"
+        ).localCheckpoint()
+        doomed = index.batch_dropped_ids(sigs, id_col=id_col)
+        batch_kept = hashable.join(doomed, id_col, "left_anti")
+        kept_sigs = index.restrict_sigs(sigs, doomed, id_col=id_col,
+                                        anti=True)
+        fresh = index.dedup_new(batch_kept, id_col=id_col, sigs=kept_sigs)
+        # localCheckpoint, NOT cache: fresh's plan scans the band/
+        # signature layouts it was screened against, and the add below
+        # appends to those paths — a cached plan over changed source files
+        # re-executes against the grown index and silently evaluates empty
+        # (pipeline.py's finding; same fix).
+        fresh = fresh.localCheckpoint()
+        n_accepted = fresh.count()
 
-            # the unhashable remainder: exact byte-hash dedup, never the
-            # silent fall-through (see the function docstring)
-            unhashable = batch_df.filter(~pred)
-            # NULL-data rows are garbage, not content: they never reach
-            # the sink (counted inside dropped_exact_dup). Without this
-            # split the image key would silently degrade to dims-only
-            # (concat_ws skips NULLs) and the audio key to a NULL that
-            # never joins — the two modalities would disagree.
-            keyed = unhashable.filter(F.col("data").isNotNull())
-            keyed = keyed.withColumn("__xkey", exact_key(keyed))
-            first_ids = keyed.groupBy("__xkey").agg(F.min(id_col).alias(id_col))
-            u_kept = keyed.join(first_ids, ["__xkey", id_col], "left_semi")
-            if exact_store is not None:
-                u_kept = u_kept.join(
-                    exact_store.keys(before_epoch=epoch_id),
-                    "__xkey", "left_anti",
-                )
-            u_fresh = u_kept.localCheckpoint()
-            n_unhashable = unhashable.count()
-            n_u_accepted = u_fresh.count()
+        # the unhashable remainder: exact byte-hash dedup, never the
+        # silent fall-through (see the function docstring)
+        unhashable = batch_df.filter(~pred)
+        # NULL-data rows are garbage, not content: they never reach the
+        # sink (counted inside dropped_exact_dup). Without this split the
+        # image key would silently degrade to dims-only (concat_ws skips
+        # NULLs) and the audio key to a NULL that never joins — the two
+        # modalities would disagree.
+        keyed = unhashable.filter(F.col("data").isNotNull())
+        keyed = keyed.withColumn("__xkey", exact_key(keyed))
+        first_ids = keyed.groupBy("__xkey").agg(F.min(id_col).alias(id_col))
+        u_kept = keyed.join(first_ids, ["__xkey", id_col], "left_semi")
+        if exact_store is not None:
+            u_kept = u_kept.join(
+                exact_store.keys(before_epoch=epoch_id), "__xkey", "left_anti",
+            )
+        u_fresh = u_kept.localCheckpoint()
+        n_unhashable = unhashable.count()
+        n_u_accepted = u_fresh.count()
 
-            if n_accepted or n_u_accepted:
-                accepted_sink.write(
-                    fresh.unionByName(u_fresh.drop("__xkey")), epoch_id
-                )
-            if n_accepted:
-                index.add(
-                    # the accepted subset of the batch's one signature
-                    # set — no re-hash on the fold either
-                    sigs=index.restrict_sigs(
-                        kept_sigs, fresh.select(id_col), id_col=id_col
-                    ),
-                    id_col=id_col,
-                    # steady-state ledger mode: the gate proved newness;
-                    # only a crashed epoch's retry re-guards
-                    assume_new=ledger is not None and not guarded,
-                )
-            if exact_store is not None and n_u_accepted:
-                exact_store.add(u_fresh, epoch_id)
-            if ledger is not None:
-                ledger.mark_committed(epoch_id)
-            if stats is not None:
-                stats.append({
-                    "epoch": epoch_id,
-                    "accepted": n_accepted + n_u_accepted,
-                    "dropped_as_dup": n_in - n_accepted,
-                    "unhashable": n_unhashable,
-                    "dropped_exact_dup": n_unhashable - n_u_accepted,
-                })
-        finally:
-            batch_df.unpersist()
-        if compact_every is not None and (epoch_id + 1) % compact_every == 0:
-            index.compact()
-            if exact_store is not None:
-                exact_store.compact()
+        if n_accepted or n_u_accepted:
+            accepted_sink.write(
+                fresh.unionByName(u_fresh.drop("__xkey")), epoch_id
+            )
+        if n_accepted:
+            index.add(
+                # the accepted subset of the batch's one signature set —
+                # no re-hash on the fold either
+                sigs=index.restrict_sigs(
+                    kept_sigs, fresh.select(id_col), id_col=id_col
+                ),
+                id_col=id_col,
+                # steady-state ledger mode: the gate proved newness; only
+                # a crashed epoch's retry re-guards
+                assume_new=ledger is not None and not guarded,
+            )
+        if exact_store is not None and n_u_accepted:
+            exact_store.add(u_fresh, epoch_id)
+        return {
+            "accepted": n_accepted + n_u_accepted,
+            "dropped_as_dup": n_in - n_accepted,
+            "unhashable": n_unhashable,
+            "dropped_exact_dup": n_unhashable - n_u_accepted,
+        }
 
-    return _start_foreach_batch(frames_stream, per_batch, checkpoint)
+    def compact() -> None:
+        index.compact()
+        if exact_store is not None:
+            exact_store.compact()
+
+    return _start_foreach_batch(
+        frames_stream, body, checkpoint, ledger=ledger, stats=stats,
+        compact=compact, compact_every=compact_every,
+    )

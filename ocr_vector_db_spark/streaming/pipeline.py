@@ -164,11 +164,55 @@ class ParquetTableSink:
         return spark.read.option("basePath", p).parquet(p)
 
 
-def _start_foreach_batch(stream_df: DataFrame, per_batch, checkpoint: str | None):
-    """availableNow foreachBatch runner. With `checkpoint`, a restarted
-    query resumes after the last committed epoch (epoch ids stay
-    monotone across runs — what the per-epoch sink layouts key on)
-    instead of replaying every input file as a fresh epoch 0."""
+def _start_foreach_batch(
+    stream_df: DataFrame,
+    body,
+    checkpoint: str | None,
+    *,
+    ledger=None,
+    stats: list | None = None,
+    compact=None,
+    compact_every: int | None = None,
+):
+    """availableNow foreachBatch runner that owns the epoch protocol of
+    every streaming gate. With `checkpoint`, a restarted query resumes
+    after the last committed epoch (epoch ids stay monotone across runs —
+    what the per-epoch sink layouts key on) instead of replaying every
+    input file as a fresh epoch 0.
+
+    Per epoch: an epoch the `ledger` has committed is skipped; otherwise
+    it is marked started (`guarded` says a prior attempt of it died after
+    its own start mark). A non-empty batch is cached for
+    `body(batch_df, epoch_id, guarded)`, which returns the epoch's stats
+    entry. Then the ledger commits. An empty batch stops there; otherwise
+    `stats` gets `{"epoch": epoch_id, **entry}` and every `compact_every`
+    epochs `compact()` runs — after the commit, so a compaction never
+    races an uncommitted epoch's writes. foreachBatch re-runs the last
+    uncommitted epoch after a crash, so every write a body makes must be
+    replay-safe (Armbrust et al., SIGMOD 2018)."""
+
+    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        if ledger is not None and epoch_id <= ledger.committed():
+            return  # replayed, fully committed epoch: no-op
+        guarded = ledger is not None and epoch_id <= ledger.started()
+        if ledger is not None:
+            ledger.mark_started(epoch_id)
+        entry = None
+        if not batch_df.isEmpty():
+            batch_df = batch_df.cache()
+            try:
+                entry = body(batch_df, epoch_id, guarded)
+            finally:
+                batch_df.unpersist()
+        if ledger is not None:
+            ledger.mark_committed(epoch_id)
+        if entry is None:
+            return  # an empty epoch: committed, no stats, no compaction
+        if stats is not None:
+            stats.append({"epoch": epoch_id, **entry})
+        if compact_every is not None and (epoch_id + 1) % compact_every == 0:
+            compact()
+
     writer = stream_df.writeStream.foreachBatch(per_batch)
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
@@ -189,14 +233,13 @@ def stream_ingest(
     executor-side; tests may inject a collecting double."""
     from ocr_vector_db_spark.sources.ingest import ingest
 
-    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def body(batch_df: DataFrame, epoch_id: int, guarded: bool) -> dict:
         out = ingest(spark, batch_df, dim=dim)
         sink.write("fragments", out["fragments"], epoch_id)
         sink.write("embeddings", out["embeddings"], epoch_id)
+        return {}
 
-    return _start_foreach_batch(files_stream, per_batch, checkpoint)
+    return _start_foreach_batch(files_stream, body, checkpoint)
 
 
 class ParquetAcceptedSink:
@@ -229,7 +272,7 @@ class ParquetAcceptedSink:
 
     def read_epoch(self, spark: SparkSession, epoch_id: int) -> DataFrame | None:
         """One epoch's accepted rows, or None if that epoch never reached
-        the sink — the crash-repair read (Hadoop-FS probe, so repair works
+        the sink — what a guarded retry folds (Hadoop-FS probe, so it works
         on HDFS/object stores like every other index operation)."""
         from ocr_vector_db_spark.operators.index_maint import fs_exists
 
@@ -256,12 +299,10 @@ def stream_ingest_deduped(
     checkpoint: str | None = None,
     ledger=None,
     compact_every: int | None = None,
-    compact_max_files: int | None = None,
     semantic_index=None,
     semantic_threshold: float = 0.85,
     semantic_intra_nprobe: int | None = 2,
     semantic_branches: int | None = None,
-    embedder=None,
     sample=None,
     lm_gate=None,
     vocab_sketch=None,
@@ -281,20 +322,20 @@ def stream_ingest_deduped(
          indexed near-dup at est_jaccard >= threshold are accepted;
       3. optionally (when `semantic_index`, a built `IVFIndex` over
          (id_col, "embedding") rows, is given) embeds the text-level
-         survivors (`embedder`: text Column → array Column; defaults to
-         the deterministic harness embedder at the index's dim; a stream
-         already carrying an `embedding` column uses its own vectors,
-         dimension-checked row-by-row against the index), runs the
-         INTRA-BATCH dense pass (`IVFIndex.dense_dropped_ids`, blocked by
-         the gate's centroids at `semantic_intra_nprobe` probes — the
-         dense twin of step 1, closing the same-batch blind spot), then
-         drops any survivor whose nearest STORED vector reaches
-         `semantic_threshold` — `IVFIndex.screen_near_dups`, SemDeDup at
-         ingest. `semantic_branches` routes every dense-gate assignment
-         (intra pass, store screen, fold-in add) through a hierarchical
-         gate index's L1→L2 join so nothing num_clusters-sized is ever
-         broadcast inside the stream. Accepted rows then carry their
-         `embedding` column into the sink and fold into BOTH indexes;
+         survivors with the deterministic harness embedder at the index's
+         dim (a stream already carrying an `embedding` column uses its
+         own vectors, dimension-checked row-by-row against the index),
+         runs the INTRA-BATCH dense pass (`IVFIndex.dense_dropped_ids`,
+         blocked by the gate's centroids at `semantic_intra_nprobe`
+         probes — the dense twin of step 1, closing the same-batch blind
+         spot), then drops any survivor whose nearest STORED vector
+         reaches `semantic_threshold` — `IVFIndex.screen_near_dups`,
+         SemDeDup at ingest. `semantic_branches` routes every dense-gate
+         assignment (intra pass, store screen, fold-in add) through a
+         hierarchical gate index's L1→L2 join so nothing
+         num_clusters-sized is ever broadcast inside the stream. Accepted
+         rows then carry their `embedding` column into the sink and fold
+         into BOTH indexes;
       4. folds the accepted docs' signatures into the index so later
          batches screen against them too.
 
@@ -312,20 +353,27 @@ def stream_ingest_deduped(
     driver); tests may inject a collecting double. Only the per-epoch
     counters land driver-side, in the optional `stats` list.
 
-    `ledger` (an `index_maint.EpochLedger`, requires `checkpoint` so epoch
-    ids are monotone across restarts) moves replay safety from the index's
-    per-batch full-corpus re-add anti-join to two tiny epoch markers: a
-    fully committed epoch replays as a no-op, the steady-state add runs
-    `assume_new=True` (no corpus-sized read — the dedup gate itself
-    guarantees content newness), and only an epoch whose prior attempt
-    died mid-add pays the guarded anti-join, once.
+    The epoch protocol (`ledger`, empty batches, `stats`, the
+    `compact_every` cadence of `index.compact()`) is
+    `_start_foreach_batch`'s. With a `ledger` (an `index_maint.EpochLedger`;
+    requires `checkpoint` so epoch ids are monotone across restarts) the
+    steady-state adds run `assume_new=True` (no corpus-sized re-add
+    anti-join: the gate itself proves newness), and only a guarded retry
+    pays the anti-join, once.
 
-    `compact_every` (epochs) / `compact_max_files` (live data files,
-    counted through the Hadoop FS API so the trigger works on HDFS/object
-    stores too) bound the
-    small-files accumulation of long streams by running `index.compact()`
-    inline; the generation-pointer publish keeps concurrent readers
-    correct throughout.
+    Every consumer of the ACCEPTED rows — `semantic_index`, `sample`,
+    `vocab_sketch`, `tokenfreq_sketch`, `drift_baseline` — folds through
+    one function, once per attempt. A first attempt folds the accepted
+    rows. A guarded retry (a prior attempt died between its start mark
+    and its commit) folds the epoch's sink slice instead, read after its
+    own sink write (`accepted_sink.read_epoch`; a sink without it folds
+    the accepted rows): if the retry accepts rows, its overwrite makes
+    the slice equal them; if it accepts none, because the dead attempt
+    already indexed them, the slice is what that attempt wrote, so a fold
+    it never reached still lands. Every fold is replay-safe, so one it
+    did reach is not doubled: epoch guards for the drift and tokenfreq
+    counts, register MAX for vocab, id-idempotence for the sample, the
+    guarded anti-join for the semantic add.
 
     `sample` (an `operators/sampling.RunningSample`) maintains a running
     A-ES weighted sample of the ACCEPTED stream: each epoch's survivors
@@ -333,10 +381,7 @@ def stream_ingest_deduped(
     sample `weighted_sample` would draw over every accepted doc so far;
     when the stream doesn't carry the sample's weight column it is
     derived as length(text_col), the CLI `--sample` contract,
-    at O(batch + k) per epoch). Folds are id-idempotent, so replays are
-    harmless; a crashed epoch's guarded retry re-folds from the epoch's
-    own sink rows, closing the same crash window the semantic repair
-    does.
+    at O(batch + k) per epoch).
 
     `lm_gate` = (NgramLMIndex, lo, hi): CCNet-style LM quality filter at
     ingest — each batch's docs score against the PERSISTED bigram LM
@@ -351,36 +396,31 @@ def stream_ingest_deduped(
 
     `decontam_gate` = (BloomSketch, threshold) or (BloomSketch, threshold,
     bench_grams): benchmark decontamination at ingest — each batch's
-    2-gram shingles probe the PERSISTED Bloom filter of the eval corpus
-    (q149's operator: k md5 probes + one broadcast join against the
-    ≤ m/60-row words table; the batch never shuffles against the
-    benchmark set) and docs whose flagged-gram fraction reaches
-    `threshold` are FLAGGED before the dedup gates. With `bench_grams`
-    (a DataFrame with the exact benchmark shingle set in column
-    `shingle` — persisted by `decontam --build/--add`), flagged docs get
-    a second, EXACT phase: only THEIR shingles join (broadcast) against
-    the exact gram set, and only docs whose confirmed-gram fraction
-    reaches the threshold drop — so a Bloom false positive can never
-    drop a clean document, at O(flagged) extra cost (the two-phase
-    discipline `operators/sketches.py` documents). Without `bench_grams`
-    the flag alone drops (legacy over-dropping at the designed FP rate).
+    2-gram shingles go through `BloomSketch.contamination` (q149's
+    operator: k md5 probes + one broadcast join against the ≤ m/60-row
+    words table; the batch never shuffles against the benchmark set) and
+    docs whose flagged-gram fraction reaches `threshold` are FLAGGED
+    before the dedup gates. With `bench_grams` (a DataFrame with the
+    exact benchmark shingle set in column `shingle` — persisted by
+    `decontam --build/--add`), flagged docs get a second, EXACT phase and
+    only CONFIRMED docs drop — so a Bloom false positive can never drop a
+    clean document, at O(flagged) extra cost. Without `bench_grams` (or
+    with None) the flag alone drops (over-dropping at the designed FP
+    rate).
     Either way a dropped doc never folds into any index or reaches the
-    sink, and Bloom's zero false negatives mean phase 1 can never hide a
-    true leak from phase 2. Docs with < 2 tokens carry no shingle
-    evidence and pass through (the lm_gate convention). Like the LM, the
-    filter is a stable reference model — accepted docs do NOT fold into
-    it. Per-epoch stats record `flagged_contaminated` (phase 1) next to
+    sink. Docs with < 2 tokens carry no shingle evidence and pass through
+    (the lm_gate convention). Like the LM, the filter is a stable
+    reference model — accepted docs do NOT fold into it. Per-epoch stats
+    record `flagged_contaminated` (phase 1) next to
     `dropped_contaminated` (confirmed) in two-phase mode.
 
     `vocab_sketch` (an `operators/sketches.HLLSketch`) maintains a running
     vocabulary-cardinality sketch of the ACCEPTED stream: each epoch's
     survivors' tokens fold into the persisted registers (per-bucket MAX,
     O(batch + m) per epoch) — after any number of epochs the registers
-    equal a scratch build over every accepted doc, exactly. Folds are
-    CONTENT-idempotent (MAX of a deterministic hash), so replays and the
-    crash-window re-fold (from the epoch's own sink slice, like `sample`)
-    can never move a register. Tokenization is the corpus-stats splitter
-    (lower, [^a-z0-9가-힣]+), matching q128's oracle.
+    equal a scratch build over every accepted doc, exactly. Tokenization
+    is the corpus-stats splitter (lower, [^a-z0-9가-힣]+), matching q128's
+    oracle.
 
     `tokenfreq_sketch` (an `operators/sketches.CMSketch`) maintains a
     running token-FREQUENCY sketch of the ACCEPTED stream (the count-min
@@ -389,336 +429,202 @@ def stream_ingest_deduped(
     after any number of epochs the cells equal a scratch build over every
     accepted doc, bit-for-bit. SUM is NOT idempotent, so every fold
     passes the epoch id and the sketch's own `_last_epoch` generation
-    marker makes replays (and the crash-window re-fold from the epoch's
-    sink slice) no-ops — exactly-once without a second ledger.
+    marker makes a replayed fold a no-op — exactly-once without a second
+    ledger.
 
     `drift_baseline` (an `operators/drift.DriftBaseline` over document
     LENGTH, i.e. length(text_col)) turns the PSI gate into a streaming
     monitor: each epoch's INCOMING batch screens against the stored
     frozen-bin histogram (O(batch + B), the per-epoch `psi` lands in
     `stats`) and the ACCEPTED docs fold in afterwards with the epoch id
-    as the replay guard — count folds are not idempotent, so
-    `fold(epoch=...)` no-ops on a crashed epoch's retry instead of
-    double-counting. Monitoring reads arrivals (pre-gate: you want to
-    see the shift even in what you then drop); the baseline tracks
-    accepted docs only."""
-    import os as _os
-
+    as the replay guard (count folds are not idempotent; `fold(epoch=...)`
+    no-ops an epoch it has seen). Monitoring reads arrivals (pre-gate:
+    you want to see the shift even in what you then drop); the baseline
+    tracks accepted docs only."""
     from ocr_vector_db_spark.operators.dedup import minhash_dropped_ids
-    from ocr_vector_db_spark.operators.index_maint import parquet_file_count
 
-    if semantic_index is not None and embedder is None:
+    if semantic_index is not None:
         from ocr_vector_db_spark.functions.vector import embed_udf
 
-        embedder = embed_udf(len(semantic_index.centroids[0][1]))
+        dim = len(semantic_index.centroids[0][1])
+        embed = embed_udf(dim)
 
-    def maybe_compact(epoch_id: int) -> None:
-        due = (
-            compact_every is not None
-            and (epoch_id + 1) % compact_every == 0
-        ) or (
-            compact_max_files is not None
-            and parquet_file_count(
-                _os.path.join(index.path, "bands"), index.spark
-            ) > compact_max_files
-        )
-        if due:
-            index.compact()
+    def fold(rows: DataFrame, epoch_id: int, assume_new: bool) -> None:
+        """Fold one epoch's accepted rows into every accepted-row
+        consumer (replay-safe each; see the docstring)."""
+        if semantic_index is not None and "embedding" in rows.columns:
+            semantic_index.add(
+                rows.select(id_col, "embedding"),
+                id_col=id_col, assume_new=assume_new,
+                branches=semantic_branches,
+            )
+        if sample is not None:
+            # a weight column the stream doesn't carry defaults to doc
+            # length (the CLI's --sample contract)
+            sample.fold(rows if sample.weight_col in rows.columns
+                        else rows.withColumn(sample.weight_col,
+                                             F.length(F.col(text_col))))
+        if vocab_sketch is not None:
+            vocab_sketch.add(_stream_tokens(rows, text_col), F.col("__tok"))
+        if tokenfreq_sketch is not None:
+            tokenfreq_sketch.add(_stream_tokens(rows, text_col),
+                                 F.col("__tok"), epoch=epoch_id)
+        if drift_baseline is not None:
+            drift_baseline.fold(rows.select(F.length(text_col).alias("__dv")),
+                                "__dv", epoch=epoch_id)
 
-    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if ledger is not None and epoch_id <= ledger.committed():
-            return  # replayed, fully committed epoch: no-op
-        guarded = ledger is not None and epoch_id <= ledger.started()
-        if ledger is not None:
-            ledger.mark_started(epoch_id)
-        if batch_df.isEmpty():
-            if ledger is not None:
-                ledger.mark_committed(epoch_id)
-            return
-        batch_df = batch_df.cache()  # three consumers: count, intra, screen
-        caches = [batch_df]
-        try:
-            n_in = batch_df.count()
-            epoch_psi = None
-            if drift_baseline is not None:
-                # monitor ARRIVALS (pre-gate): a shifted batch should
-                # show up even if the gates then drop it
-                epoch_psi = float(drift_baseline.psi_of(
-                    batch_df.select(F.length(text_col).alias("__dv")),
-                    "__dv",
-                ).head().psi)
-            if lm_gate is not None:
-                # LM quality band BEFORE the dedup gates: cheaper work
-                # first, and a dropped doc must not fold into any index
-                if "__nlp" in batch_df.columns:
-                    raise ValueError(
-                        "lm_gate: input column '__nlp' collides with the "
-                        "gate's internal score column; rename it first."
-                    )
-                lm_idx, lo, hi = lm_gate
-                scores = lm_idx.score_batch(
-                    batch_df, id_col=id_col, text_col=text_col
-                ).select(
-                    id_col, F.col("avg_neg_logprob").alias("__nlp")
+    def body(batch_df: DataFrame, epoch_id: int, guarded: bool) -> dict:
+        entry = {}
+        n_in = batch_df.count()
+        if drift_baseline is not None:
+            # monitor ARRIVALS (pre-gate): a shifted batch should show up
+            # even if the gates then drop it
+            entry["psi"] = float(drift_baseline.psi_of(
+                batch_df.select(F.length(text_col).alias("__dv")), "__dv",
+            ).head().psi)
+        if lm_gate is not None:
+            # LM quality band BEFORE the dedup gates: cheaper work first,
+            # and a dropped doc must not fold into any index
+            if "__nlp" in batch_df.columns:
+                raise ValueError(
+                    "lm_gate: input column '__nlp' collides with the "
+                    "gate's internal score column; rename it first."
                 )
-                batch_df = (
-                    batch_df.join(scores, id_col, "left")
-                    # no-bigram docs (__nlp null) carry no evidence: pass
-                    .filter(F.col("__nlp").isNull()
-                            | F.col("__nlp").between(lo, hi))
-                    .drop("__nlp")
-                ).cache()
-                caches.append(batch_df)
-                n_quality = batch_df.count()
-            else:
-                n_quality = n_in
-            n_flagged_dc = None
-            if decontam_gate is not None:
-                # benchmark-leak screen BEFORE the dedup gates: a
-                # contaminated doc must not fold into any index. The
-                # probe side is map-side md5 work + one broadcast join —
-                # the batch never shuffles against the benchmark set.
-                from ocr_vector_db_spark.operators.dedup import (
-                    _doc_shingles,
-                )
-
-                bloom, dc_thresh, *dc_rest = decontam_gate
-                bench_grams = dc_rest[0] if dc_rest else None
-                sh = _doc_shingles(batch_df, text_col, id_col, 2)
-                flagged_dc = (
-                    bloom.screen(sh, F.col("shingle"), "doc")
-                    .groupBy("doc")
-                    .agg((F.sum(F.col("maybe_member").cast("int"))
-                          / F.count("*")).alias("__contam"))
-                    .filter(F.col("__contam") >= dc_thresh)
-                    .select(F.col("doc").alias(id_col))
-                )
-                if bench_grams is None:
-                    doomed_dc = flagged_dc
-                else:
-                    # phase 2 — exact confirm on the FLAGGED remainder
-                    # only (sketches.py's two-phase discipline): Bloom
-                    # positives are "maybe", so a false-positive doc
-                    # must not be dropped. Re-check only flagged docs'
-                    # shingles against the exact benchmark gram set
-                    # (q62's broadcast-join shape) — O(flagged), not
-                    # O(corpus) — and drop only docs whose CONFIRMED
-                    # gram fraction reaches the threshold. Bloom has
-                    # zero false negatives, so phase 1 can never hide
-                    # a doc that phase 2 would have dropped.
-                    flagged_dc = flagged_dc.localCheckpoint()
-                    n_flagged_dc = flagged_dc.count()
-                    bench = F.broadcast(
-                        bench_grams.select("shingle").distinct()
-                        .withColumn("__hit", F.lit(1))
-                    )
-                    doomed_dc = (
-                        sh.join(flagged_dc,
-                                sh["doc"] == flagged_dc[id_col],
-                                "left_semi")
-                        .join(bench, "shingle", "left")
-                        .groupBy("doc")
-                        .agg((F.sum(F.coalesce("__hit", F.lit(0)))
-                              / F.count("*")).alias("__contam"))
-                        .filter(F.col("__contam") >= dc_thresh)
-                        .select(F.col("doc").alias(id_col))
-                    )
-                batch_df = batch_df.join(doomed_dc, id_col, "left_anti").cache()
-                caches.append(batch_df)
-                n_clean = batch_df.count()
-            else:
-                n_clean = n_quality
-            # the ONE shingle+hash pass of the whole micro-batch
-            # (signatures-once, the assets-gate discipline): keep-min,
-            # the corpus screen and the index fold below all consume
-            # this materialized signature set instead of re-hashing
-            # raw text three times per batch
-            sigs = index.signatures_of(
+            lm_idx, lo, hi = lm_gate
+            scores = lm_idx.score_batch(
                 batch_df, id_col=id_col, text_col=text_col
+            ).select(id_col, F.col("avg_neg_logprob").alias("__nlp"))
+            batch_df = (
+                batch_df.join(scores, id_col, "left")
+                # no-bigram docs (__nlp null) carry no evidence: pass
+                .filter(F.col("__nlp").isNull()
+                        | F.col("__nlp").between(lo, hi))
+                .drop("__nlp")
             ).localCheckpoint()
-            # 1. intra-batch: drop any doc with a lower-id near-dup in the
-            # same batch (same keep-min convention as dedup_exact). The
-            # hot-group-safe form: a backfill batch of 10⁶ copies of one
-            # page collapses to one band row instead of 10¹² pairs
-            doomed = minhash_dropped_ids(
-                num_hashes=index.num_hashes, bands=index.bands,
-                id_col=id_col, threshold=threshold, sigs=sigs,
-            )
-            batch_kept = batch_df.join(doomed, id_col, "left_anti")
-            kept_sigs = sigs.join(
-                doomed.select(F.col(id_col).alias("doc")),
-                "doc", "left_anti",
-            )
-            # 2+3. screen vs the index, accept + fold in the survivors
-            fresh = index.dedup_new(
-                batch_kept, threshold=threshold,
-                id_col=id_col, text_col=text_col, sigs=kept_sigs,
-            )
-            if semantic_index is not None:
-                dim = len(semantic_index.centroids[0][1])
-                if "embedding" in fresh.columns:
-                    # a stream that already carries an `embedding` column
-                    # (multimodal sources embed upstream) screens with its
-                    # own vectors — never silently overwrite them. Guard
-                    # the dimension row-by-row at zero job cost: a
-                    # mismatched vector would otherwise zip_with-pad with
-                    # nulls, evaluate null similarity, and silently pass
-                    # the gate instead of erroring.
-                    emb = fresh.withColumn(
-                        "embedding",
-                        F.when(
-                            F.size("embedding") == dim, F.col("embedding")
-                        ).otherwise(F.raise_error(F.concat(
-                            F.lit("semantic gate: source embedding has "),
-                            F.size("embedding").cast("string"),
-                            F.lit(f" dims, index expects {dim}"),
-                        ))),
-                    )
-                else:
-                    emb = fresh.withColumn(
-                        "embedding", embedder(F.col(text_col))
-                    )
-                # intra-batch pass (the dense twin of minhash_dropped_ids
-                # above): the store screen below sees only PREVIOUS
-                # batches, so same-batch semantic dups must be dropped
-                # here, blocked by the gate index's own centroids
-                intra = semantic_index.dense_dropped_ids(
-                    emb, semantic_threshold, nprobe=semantic_intra_nprobe,
-                    id_col=id_col, branches=semantic_branches,
-                )
-                emb = emb.join(intra, id_col, "left_anti")
-                flagged = semantic_index.screen_near_dups(
-                    emb, semantic_threshold, id_col=id_col,
-                    branches=semantic_branches,
-                ).select(id_col)
-                fresh = emb.join(flagged, id_col, "left_anti")
-            # localCheckpoint, NOT cache: fresh's plan scans the index
-            # layouts it was screened against, and the index adds below
-            # append to those paths — Spark invalidates (and lazily
-            # re-executes) cached plans whose source files changed, so a
-            # cached `fresh` re-screens against the just-grown index and
-            # silently evaluates empty for every consumer after the first
-            # add. The checkpoint pins the accepted rows themselves.
-            fresh = fresh.localCheckpoint()
-            # (checkpoint blocks are freed when `fresh` is GC'd)
-            n_accepted = fresh.count()
-            if n_accepted:
-                # sink first, index second: both sides are replay-safe
-                # (per-epoch overwrite / re-add guard or ledger), and
-                # this order means an indexed doc is always in the sink.
-                accepted_sink.write(fresh, epoch_id)
-                assume_new = ledger is not None and not guarded
-                index.add(
-                    # the accepted subset of the batch's one signature
-                    # set — no re-hash on the fold either
-                    sigs=kept_sigs.join(
-                        fresh.select(F.col(id_col).alias("doc")),
-                        "doc", "left_semi",
-                    ),
-                    id_col=id_col, text_col=text_col,
-                    # steady-state ledger mode: the gate already proved
-                    # newness; only a crashed epoch's retry re-guards
-                    assume_new=assume_new,
-                )
-                if semantic_index is not None:
-                    semantic_index.add(
-                        fresh.select(id_col, "embedding"),
-                        id_col=id_col, assume_new=assume_new,
-                        branches=semantic_branches,
-                    )
-                if sample is not None:
-                    # a weight column the stream doesn't carry defaults
-                    # to doc length (the CLI's --sample contract)
-                    fi = fresh if sample.weight_col in fresh.columns \
-                        else fresh.withColumn(
-                            sample.weight_col, F.length(F.col(text_col))
-                        )
-                    sample.fold(fi)
-                if vocab_sketch is not None:
-                    vocab_sketch.add(_stream_tokens(fresh, text_col),
-                                     F.col("__tok"))
-                if tokenfreq_sketch is not None:
-                    # count folds are not idempotent; the sketch's own
-                    # epoch marker no-ops a replayed epoch
-                    tokenfreq_sketch.add(
-                        _stream_tokens(fresh, text_col), F.col("__tok"),
-                        epoch=epoch_id,
-                    )
-                if drift_baseline is not None:
-                    # epoch id = the replay guard (count folds are not
-                    # idempotent; epoch <= last_epoch no-ops)
-                    drift_baseline.fold(
-                        fresh.select(F.length(text_col).alias("__dv")),
-                        "__dv", epoch=epoch_id,
-                    )
-            # Crash-window repairs: a prior attempt may have died between
-            # the sink write and any of the folds below; on retry `fresh`
-            # is empty (dedup_new drops the indexed docs), so each
-            # consumer re-folds from the epoch's own sink slice. Every
-            # fold is made no-op-safe its own way (drift/tokenfreq epoch
-            # guards, vocab register MAX, sample id-idempotence, the
-            # semantic guarded anti-join). The slice is read ONCE for all
-            # of them; only crashed-epoch retries pay it.
-            epoch_rows = None
-            if guarded and any(
-                x is not None for x in (drift_baseline, tokenfreq_sketch,
-                                        vocab_sketch, sample,
-                                        semantic_index)
-            ):
-                rd = getattr(accepted_sink, "read_epoch", None)
-                epoch_rows = rd and rd(batch_df.sparkSession, epoch_id)
-            has_text = (epoch_rows is not None
-                        and text_col in epoch_rows.columns)
-            if guarded and drift_baseline is not None and has_text:
-                drift_baseline.fold(
-                    epoch_rows.select(F.length(text_col).alias("__dv")),
-                    "__dv", epoch=epoch_id,
-                )
-            if guarded and tokenfreq_sketch is not None and has_text:
-                tokenfreq_sketch.add(
-                    _stream_tokens(epoch_rows, text_col),
-                    F.col("__tok"), epoch=epoch_id,
-                )
-            if guarded and vocab_sketch is not None and has_text:
-                vocab_sketch.add(_stream_tokens(epoch_rows, text_col),
-                                 F.col("__tok"))
-            if guarded and sample is not None and epoch_rows is not None:
-                if sample.weight_col in epoch_rows.columns:
-                    sample.fold(epoch_rows)
-                elif text_col in epoch_rows.columns:
-                    sample.fold(epoch_rows.withColumn(
-                        sample.weight_col,
-                        F.length(F.col(text_col)),
-                    ))
-            if guarded and semantic_index is not None:
-                # died BETWEEN the text index.add and semantic_index.add:
-                # the normal path above never re-adds the vectors (fresh
-                # is empty on replay) — re-derive the dense add from the
-                # sink slice with the guarded anti-join
-                if epoch_rows is not None and "embedding" in epoch_rows.columns:
-                    semantic_index.add(
-                        epoch_rows.select(id_col, "embedding"),
-                        id_col=id_col, assume_new=False,
-                        branches=semantic_branches,
-                    )
-            if ledger is not None:
-                ledger.mark_committed(epoch_id)
-            if stats is not None:
-                entry = {"epoch": epoch_id, "accepted": n_accepted,
-                         "dropped_as_dup": n_clean - n_accepted}
-                if lm_gate is not None:
-                    entry["dropped_low_quality"] = n_in - n_quality
-                if decontam_gate is not None:
-                    entry["dropped_contaminated"] = n_quality - n_clean
-                    if n_flagged_dc is not None:
-                        # two-phase mode: Bloom-flagged vs exact-confirmed
-                        entry["flagged_contaminated"] = n_flagged_dc
-                if epoch_psi is not None:
-                    entry["psi"] = epoch_psi
-                stats.append(entry)
-        finally:
-            for c in caches:
-                c.unpersist()
-        maybe_compact(epoch_id)
+            n_quality = batch_df.count()
+            entry["dropped_low_quality"] = n_in - n_quality
+        else:
+            n_quality = n_in
+        if decontam_gate is not None:
+            # benchmark-leak screen BEFORE the dedup gates: a contaminated
+            # doc must not fold into any index
+            from ocr_vector_db_spark.operators.dedup import _doc_shingles
 
-    return _start_foreach_batch(docs_stream, per_batch, checkpoint)
+            bloom, dc_thresh, *dc_rest = decontam_gate
+            bench_grams = dc_rest[0] if dc_rest else None
+            per = bloom.contamination(
+                _doc_shingles(batch_df, text_col, id_col, 2), dc_thresh,
+                exact=bench_grams,
+            ).localCheckpoint()
+            verdict = "flagged" if bench_grams is None else "confirmed"
+            batch_df = batch_df.join(
+                per.filter(verdict).select(F.col("doc").alias(id_col)),
+                id_col, "left_anti",
+            ).localCheckpoint()
+            n_clean = batch_df.count()
+            entry["dropped_contaminated"] = n_quality - n_clean
+            if bench_grams is not None:
+                # two-phase mode: Bloom-flagged vs exact-confirmed
+                entry["flagged_contaminated"] = per.filter("flagged").count()
+        else:
+            n_clean = n_quality
+        # the ONE shingle+hash pass of the whole micro-batch
+        # (signatures-once, the assets-gate discipline): keep-min, the
+        # corpus screen and the index fold below all consume this
+        # materialized signature set instead of re-hashing raw text three
+        # times per batch
+        sigs = index.signatures_of(
+            batch_df, id_col=id_col, text_col=text_col
+        ).localCheckpoint()
+        # 1. intra-batch: drop any doc with a lower-id near-dup in the
+        # same batch (same keep-min convention as dedup_exact). The
+        # hot-group-safe form: a backfill batch of 10⁶ copies of one page
+        # collapses to one band row instead of 10¹² pairs
+        doomed = minhash_dropped_ids(
+            num_hashes=index.num_hashes, bands=index.bands,
+            id_col=id_col, threshold=threshold, sigs=sigs,
+        )
+        batch_kept = batch_df.join(doomed, id_col, "left_anti")
+        kept_sigs = sigs.join(
+            doomed.select(F.col(id_col).alias("doc")), "doc", "left_anti",
+        )
+        # 2+3. screen vs the index, accept + fold in the survivors
+        fresh = index.dedup_new(
+            batch_kept, threshold=threshold,
+            id_col=id_col, text_col=text_col, sigs=kept_sigs,
+        )
+        if semantic_index is not None:
+            if "embedding" in fresh.columns:
+                # a stream that already carries an `embedding` column
+                # (multimodal sources embed upstream) screens with its own
+                # vectors — never silently overwrite them. Guard the
+                # dimension row-by-row at zero job cost: a mismatched
+                # vector would otherwise zip_with-pad with nulls, evaluate
+                # null similarity, and silently pass the gate instead of
+                # erroring.
+                emb = fresh.withColumn(
+                    "embedding",
+                    F.when(
+                        F.size("embedding") == dim, F.col("embedding")
+                    ).otherwise(F.raise_error(F.concat(
+                        F.lit("semantic gate: source embedding has "),
+                        F.size("embedding").cast("string"),
+                        F.lit(f" dims, index expects {dim}"),
+                    ))),
+                )
+            else:
+                emb = fresh.withColumn("embedding", embed(F.col(text_col)))
+            # intra-batch pass (the dense twin of minhash_dropped_ids
+            # above): the store screen below sees only PREVIOUS batches,
+            # so same-batch semantic dups must be dropped here, blocked by
+            # the gate index's own centroids
+            intra = semantic_index.dense_dropped_ids(
+                emb, semantic_threshold, nprobe=semantic_intra_nprobe,
+                id_col=id_col, branches=semantic_branches,
+            )
+            emb = emb.join(intra, id_col, "left_anti")
+            flagged = semantic_index.screen_near_dups(
+                emb, semantic_threshold, id_col=id_col,
+                branches=semantic_branches,
+            ).select(id_col)
+            fresh = emb.join(flagged, id_col, "left_anti")
+        # localCheckpoint, NOT cache: fresh's plan scans the index layouts
+        # it was screened against, and the index adds below append to
+        # those paths — Spark invalidates (and lazily re-executes) cached
+        # plans whose source files changed, so a cached `fresh` re-screens
+        # against the just-grown index and silently evaluates empty for
+        # every consumer after the first add. The checkpoint pins the
+        # accepted rows themselves (its blocks are freed when `fresh` is
+        # GC'd).
+        fresh = fresh.localCheckpoint()
+        n_accepted = fresh.count()
+        assume_new = ledger is not None and not guarded
+        rows = fresh if n_accepted else None
+        if n_accepted:
+            # sink first, index second: both sides are replay-safe
+            # (per-epoch overwrite / re-add guard or ledger), and this
+            # order means an indexed doc is always in the sink.
+            accepted_sink.write(fresh, epoch_id)
+            index.add(
+                # the accepted subset of the batch's one signature set —
+                # no re-hash on the fold either
+                sigs=kept_sigs.join(
+                    fresh.select(F.col(id_col).alias("doc")),
+                    "doc", "left_semi",
+                ),
+                id_col=id_col, text_col=text_col,
+                # steady-state ledger mode: the gate already proved
+                # newness; only a crashed epoch's retry re-guards
+                assume_new=assume_new,
+            )
+        if guarded and hasattr(accepted_sink, "read_epoch"):
+            rows = accepted_sink.read_epoch(batch_df.sparkSession, epoch_id)
+        if rows is not None:
+            fold(rows, epoch_id, assume_new)
+        return {"accepted": n_accepted,
+                "dropped_as_dup": n_clean - n_accepted, **entry}
+
+    return _start_foreach_batch(
+        docs_stream, body, checkpoint, ledger=ledger, stats=stats,
+        compact=index.compact, compact_every=compact_every,
+    )

@@ -768,6 +768,36 @@ def test_exact_frame_store_legacy_layout_migrates(spark, tmp_path):
     assert _xkeys(store, 3) == ["k0", "k1", "k2", "k3"]
 
 
+def test_exact_frame_store_legacy_layout_beside_orphan_generation(
+    spark, tmp_path
+):
+    """A first migration that died before its commit marker leaves an
+    uncommitted `gen-000001/` beside the legacy `epoch=N` dirs: reads
+    skip it and see the legacy keys (the file count skips it too), and
+    the next add migrates them into a committed generation 1 without the
+    orphan's rows."""
+    from ocr_vector_db_spark.operators.index_maint import (
+        committed_generations, parquet_file_count,
+    )
+    from ocr_vector_db_spark.streaming.assets import ExactFrameStore
+
+    root = tmp_path / "exact_o"
+    _keys_df(spark, "k0", "k1").write.parquet(str(root / "epoch=0"))
+    spark.createDataFrame([("orphan", 0)], "__xkey string, epoch int") \
+        .write.parquet(str(root / "gen-000001"))
+    store = ExactFrameStore(spark, str(root))
+    assert _xkeys(store, 5) == ["k0", "k1"]
+    assert parquet_file_count(str(root), spark) == \
+        parquet_file_count(str(root / "epoch=0"), spark)
+
+    store.add(_keys_df(spark, "k2"), 1)
+    assert committed_generations(spark, str(root)) == [1]
+    assert _xkeys(store, 5) == ["k0", "k1", "k2"]
+    gen_dirs = sorted(d.name for d in root.iterdir()
+                      if d.name.startswith("gen-") and d.is_dir())
+    assert gen_dirs == ["gen-000001"]
+
+
 def test_exact_frame_store_legacy_stage_dir_raises(spark, tmp_path):
     """A `_compact_*` stage dir left by the pre-generation compaction can
     hold the only copy of folded keys, and partition discovery skips it

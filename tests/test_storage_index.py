@@ -119,6 +119,37 @@ def test_ingests_add_to_the_store(spark, tmp_path):
         assert df.count() == 0 and sorted(df.dtypes) == sorted(both[table].dtypes)
 
 
+def test_legacy_table_beside_orphan_generation(spark, tmp_path):
+    """A pre-generation, view-partitioned embeddings table next to the
+    uncommitted `gen-000001/` a dead first migration left: reads skip the
+    orphan, and the next ingest migrates the legacy rows into a committed
+    generation 1 without the orphan's rows."""
+    from ocr_vector_db_spark.operators.index_maint import (
+        committed_generations,
+    )
+
+    doc_c = ("/corpus/c.md", "Gamma prose paragraph long enough to pass "
+             "validation easily as well.\n", "md")
+    legacy, orphan, fresh = (ingest(spark, files_df(spark, [d]), dim=16)
+                             for d in (DOCS[0], DOCS[1], doc_c))
+    root = tmp_path / "store" / "embeddings"
+    legacy["embeddings"].write.partitionBy("view").parquet(str(root))
+    orphan["embeddings"].write.partitionBy("view").parquet(
+        str(root / "gen-000001"))
+
+    def doc_ids(*outs):
+        return {r.doc_id for o in outs
+                for r in o["embeddings"].select("doc_id").collect()}
+
+    st = EntityStore(spark, str(tmp_path / "store"))
+    assert _ids(st, "embeddings", "doc_id") == doc_ids(legacy)
+    st.save_ingest(fresh)
+    assert committed_generations(spark, str(root)) == [1]
+    assert _ids(st, "embeddings", "doc_id") == doc_ids(legacy, fresh)
+    assert sorted(d.name for d in root.iterdir()
+                  if d.name.startswith("gen-") and d.is_dir()) == ["gen-000001"]
+
+
 @pytest.mark.parametrize("crash_point", ["write", "commit"])
 def test_failed_cascade_delete_loses_no_table(spark, tmp_path, monkeypatch,
                                               crash_point):

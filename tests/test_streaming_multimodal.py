@@ -1278,6 +1278,81 @@ def test_stream_ingest_tokenfreq_sketch(spark, tmp_path):
     assert cm_snapshot(sk3) == scratch(batch)  # folded exactly once
 
 
+def test_stream_ingest_retry_after_crash_before_sink_write(spark, tmp_path):
+    """Crash window: a prior attempt marked the epoch started and died
+    before its sink write, so nothing of it landed. The guarded retry
+    accepts the whole batch, writes the epoch's slice, and folds every
+    accepted-row consumer exactly once: token-frequency cells and HLL
+    registers equal a scratch build, the drift baseline counts n more
+    docs, and the sample is the one weighted_sample draws."""
+    import json as _json
+
+    from ocr_vector_db_spark.operators import sampling
+    from ocr_vector_db_spark.operators.drift import DriftBaseline
+    from ocr_vector_db_spark.operators.index_maint import EpochLedger
+    from ocr_vector_db_spark.operators.minhash_index import MinHashIndex
+    from ocr_vector_db_spark.operators.sketches import (
+        CMSketch, HLLSketch, cm_cells, hll_registers,
+    )
+    from ocr_vector_db_spark.streaming.pipeline import (
+        ParquetAcceptedSink,
+        _stream_tokens,
+        stream_ingest_deduped,
+    )
+
+    texts = {
+        i: f"document {i} with distinct prose about topic {i * 37} and "
+           f"sufficient words {'x' * (i % 5)} to hash on"
+        for i in range(1, 5)
+    }
+    empty = spark.createDataFrame([], "doc_id bigint, text string")
+    idx = MinHashIndex.build(spark, empty, str(tmp_path / "mh"), 16, 4, 2, 8)
+    sink = ParquetAcceptedSink(str(tmp_path / "accepted"))
+    rs = sampling.RunningSample(spark, str(tmp_path / "sample"), 2, "__len")
+    hll = HLLSketch.build(spark, empty, str(tmp_path / "hll"),
+                          F.col("text"), p=8)
+    cm = CMSketch.build(spark, empty, str(tmp_path / "cm"), F.col("text"),
+                        w=256, d=3)
+    seed = spark.createDataFrame([(40,), (90,)], "n_chars bigint")
+    bl = DriftBaseline.build(spark, seed, "n_chars", str(tmp_path / "bl"),
+                             bins=4)
+    base_n = bl._sub("meta").head().n
+    ledger = EpochLedger(spark, str(tmp_path / "ledger"))
+    ledger.mark_started(0)  # the dead attempt: started, nothing written
+
+    src = tmp_path / "docs"
+    src.mkdir()
+    with open(src / "b0.json", "w") as fh:
+        for i, t in texts.items():
+            fh.write(_json.dumps({"doc_id": i, "text": t}) + "\n")
+    stats: list = []
+    q = stream_ingest_deduped(
+        spark.readStream.schema("doc_id long, text string").json(str(src)),
+        idx, sink, threshold=0.6, stats=stats, ledger=ledger, sample=rs,
+        vocab_sketch=hll, tokenfreq_sketch=cm, drift_baseline=bl,
+    )
+    q.awaitTermination(60)
+
+    assert stats[-1]["accepted"] == len(texts) and ledger.committed() == 0
+    slice0 = sink.read_epoch(spark, 0)
+    assert sorted(r.doc_id for r in slice0.collect()) == sorted(texts)
+    toks = _stream_tokens(slice0, "text")
+    assert sorted((r.row, r.col, r.cnt) for r in cm.cells().collect()) == \
+        sorted((r.row, r.col, r.cnt)
+               for r in cm_cells(toks, F.col("__tok"), 256, 3).collect())
+    assert cm.last_epoch() == 0
+    assert sorted((r.bucket, r.r) for r in hll.registers().collect()) == \
+        sorted((r.bucket, r.r)
+               for r in hll_registers(toks, F.col("__tok"), 8).collect())
+    meta = bl._sub("meta").head()
+    assert meta.n == base_n + len(texts) and meta.last_epoch == 0
+    want = sampling.weighted_sample(
+        slice0.withColumn("__len", F.length("text")), 2, "__len"
+    )
+    assert [tuple(r) for r in rs.current().collect()] == \
+        [tuple(r) for r in want.collect()]
+
+
 def test_text_gate_computes_signatures_once_per_batch(spark, tmp_path,
                                                       monkeypatch):
     """The text gate's signatures-once seam (the assets-gate discipline
